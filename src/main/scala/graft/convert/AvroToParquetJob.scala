@@ -24,11 +24,16 @@ import graft.avro._
   *  - partitioned sink `<prefix>/<folder>/ingestion_date=YYYY-MM-DD/`
   *    with Snappy compression — the folder as a PLAIN path segment,
   *    byte-identical to the reference's layout (main.py:570-577) — via one
-  *    `partitionBy("ingestion_date")` write per folder; Spark's commit
-  *    protocol adds task-level atomicity the reference lacks.
+  *    `partitionBy("ingestion_date")` write per (writer schema, folder);
+  *    Spark's commit protocol adds task-level atomicity the reference lacks.
   *
   * Scale posture: the whole plan is narrow (no shuffle); per-file tasks
   * fan out across executors; parquet writing is Spark's vectorized path.
+  * The per-(schema, folder) write jobs of one poll run concurrently — one
+  * sequential chain per output folder, at most `defaultParallelism` chains
+  * at once — so a poll of many small groups keeps every core busy instead
+  * of waiting on each job's slowest task (the reference likewise converts
+  * each file as independent parallel DoFn work, main.py:601-613).
   */
 object AvroToParquetJob {
 
@@ -65,7 +70,11 @@ object AvroToParquetJob {
     * line per decimal / unexpected-float field; fallback files log one
     * line per offending column. A function rather than a logger so tests
     * (and callers with their own log pipelines) capture lines directly;
-    * pass `Some(log.info(_))` for plain logging.
+    * pass `Some(log.info(_))` for plain logging. It is called only from the
+    * calling thread, after every write of the poll has finished, group by
+    * group (schema lines, then that group's fallback lines); a poll that
+    * throws emits no lines (its files are not ledgered, so the next poll
+    * logs them).
     */
   def runOnce(
       spark: SparkSession,
@@ -89,116 +98,36 @@ object AvroToParquetJob {
 
     val date = ingestionDate.getOrElse(LocalDate.now(ZoneOffset.UTC).toString)
     val (schemas, unreadable) = AvroCdcReader.schemaFingerprints(spark, paths)
-    val groups = schemas.groupBy(_.fingerprint).values.toSeq
 
-    var converted = Vector.empty[String]
-    var fellBack = Vector.empty[String]
-    var failed = Vector.empty[String] ++ unreadable.map(_._1)
-    var colFailures = Map.empty[String, Seq[AvroCdcReader.ColumnFailure]]
-
-    // One write per (writer schema, folder): the reference's layout is
-    // <prefix>/<folder>/ingestion_date=YYYY-MM-DD/ with the folder as a
-    // PLAIN path segment (main.py:574), not a Hive `folder=` key. Folder
-    // is derived from the file path driver-side, so splitting a schema
-    // group by folder costs no extra scan — each file is still read once,
-    // in its own task, and the plan stays shuffle-free.
-    groups.foreach { group =>
+    // Phase 1, on the driver: one write unit per (writer schema, folder).
+    // The reference's layout is <prefix>/<folder>/ingestion_date=YYYY-MM-DD/
+    // with the folder as a PLAIN path segment (main.py:574), not a Hive
+    // `folder=` key. Folder is derived from the file path driver-side, so
+    // splitting a schema group by folder costs no extra scan — each file is
+    // still read once, in its own task, and the plan stays shuffle-free.
+    // The schema audit lines are rendered here and emitted after the join.
+    val groups = schemas.groupBy(_.fingerprint).values.toSeq.map { group =>
       val flat = AvroSchemaConverter.deriveFlatSchema(group.head.schemaJson)
-
-      // runtime schema/type audit (reference main.py:496-511): canonical
-      // writer schema + derived flat schema once per schema GROUP (the
-      // reference logs per file, but files in a group are byte-identical
-      // in schema — example_file preserves the provenance pointer)
-      audit.foreach { log =>
-        val parsed = new org.apache.avro.Schema.Parser().parse(group.head.schemaJson)
-        log(s"[AVRO-SCHEMA] example_file=${group.head.path} " +
-          s"fingerprint=${group.head.fingerprint} " +
-          s"schema=${org.apache.avro.SchemaNormalization.toParsingForm(parsed)}")
-        log(s"[FLAT-SCHEMA] example_file=${group.head.path} " +
-          s"fields=${flat.payloadFields.map(f => s"${f.name}:${f.tpe}").mkString(",")}")
-        flat.payloadFields.foreach { f =>
-          f.tpe match {
-            case graft.avro.AvroSparkType.TDecimal =>
-              log(s"[DECIMAL-FIELD] field=${f.name} type=decimal(38,9)")
-            case graft.avro.AvroSparkType.TDouble | graft.avro.AvroSparkType.TFloat =>
-              log(s"[FLOAT-FIELD] field=${f.name} (unexpected float)")
-            case _ => ()
-          }
-        }
+      val lines = if (audit.isEmpty) Nil else schemaAuditLines(group.head, flat)
+      val units = group.groupBy(s => folderOf(s.path)).toSeq.map {
+        case (folder, sub) => WriteUnit(folder, flat, sub.map(_.path))
       }
+      (lines, units)
+    }
+    val units = groups.flatMap(_._2)
 
-      group.groupBy(s => folderOf(s.path)).foreach { case (folder, sub) =>
-        val groupPaths = sub.map(_.path)
-        mode match {
-          case ConvertMode.Standard =>
-            import scala.jdk.CollectionConverters._
-            val acc = spark.sparkContext.collectionAccumulator[String]("graft.failedFiles")
-            try {
-              // optimistic single-pass: one decode, rows stream straight
-              // to the parquet writer (the 2M-rows/s path)
-              val df = AvroCdcReader.readGroup(spark, groupPaths, flat, mode, acc)
-              write(df, outputPrefix, folder, date)
-              val bad = acc.value.asScala.map(_.split('\t').head).toSet
-              failed ++= bad
-              converted ++= groupPaths.filterNot(bad.contains)
-            } catch {
-              case e: Throwable if hasConversionCause(e) =>
-                // a HARD conversion error (reference main.py's strict
-                // casts) failed the write job — the v1 committer discards
-                // the aborted job's files, so the output holds NO rows
-                // from this group yet. Fall back to probe-and-rewrite:
-                // decode+convert each file (the reference's own
-                // double-read), isolate the failing files, and re-write
-                // only the clean ones — whole-file atomic failure
-                // restored at a cost bounded by the failure rate.
-                val statuses =
-                  AvroCdcReader.probe(spark, groupPaths, flat, mode)
-                val ok = statuses.collect { case AvroCdcReader.FileOk(p) => p }
-                val bad = statuses.collect {
-                  case AvroCdcReader.FileFailed(p, _) => p
-                  // Standard-mode flatten can throw the fallback-class
-                  // errors too (string in a timestamp union, complex-type
-                  // mismatch); Standard has no all-string fallback path,
-                  // so those files FAIL — the pre-lazy per-split catch
-                  // classified them identically
-                  case f: AvroCdcReader.FileNeedsFallback => f.path
-                }
-                val acc2 = spark.sparkContext
-                  .collectionAccumulator[String]("graft.failedFiles")
-                if (ok.nonEmpty)
-                  write(AvroCdcReader.readGroup(spark, ok, flat, mode, acc2),
-                    outputPrefix, folder, date)
-                val bad2 = acc2.value.asScala.map(_.split('\t').head).toSet
-                failed ++= bad ++ bad2
-                converted ++= ok.filterNot(bad2.contains)
-            }
+    // Phase 2: the units' write jobs, concurrently across folders
+    val results = perFolderConcurrently(spark, units)(_.folder)(
+      convertUnit(spark, _, mode, outputPrefix, date))
 
-          case ConvertMode.ReferenceExact =>
-            val statuses = AvroCdcReader.probe(spark, groupPaths, flat)
-            val ok = statuses.collect { case AvroCdcReader.FileOk(p) => p }
-            val fbs = statuses.collect { case f: AvroCdcReader.FileNeedsFallback => f }
-            val fb = fbs.map(_.path)
-            val bad = statuses.collect { case AvroCdcReader.FileFailed(p, _) => p }
-            fbs.foreach { f =>
-              colFailures += f.path -> f.columns
-              audit.foreach { log =>
-                f.columns.foreach { c =>
-                  log(s"[COLUMN-FAILURE] file=${f.path} column=${c.column} " +
-                    s"type=${c.declaredType} sample=${c.sampleValue} error=${c.error}")
-                }
-              }
-            }
-            val acc = spark.sparkContext.collectionAccumulator[String]("graft.failedFiles")
-            if (ok.nonEmpty)
-              write(AvroCdcReader.readGroup(spark, ok, flat, mode, acc),
-                outputPrefix, folder, date)
-            if (fb.nonEmpty)
-              write(AvroCdcReader.readGroupFallback(spark, fb, flat, acc),
-                outputPrefix, folder, date)
-            converted ++= ok
-            fellBack ++= fb
-            failed ++= bad
-        }
+    // audit sink calls stay on the calling thread (a caller's sink need not
+    // be thread-safe): per schema group, its schema lines, then each of its
+    // units' fallback-column lines
+    audit.foreach { log =>
+      val byUnit = results.iterator
+      groups.foreach { case (lines, groupUnits) =>
+        lines.foreach(log)
+        groupUnits.foreach(_ => byUnit.next().fallback.flatMap(columnFailureLines).foreach(log))
       }
     }
 
@@ -206,7 +135,184 @@ object AvroToParquetJob {
     // matching MatchContinuously's has_deduplication (a failed file is not
     // retried by the reference either; its DoFn failure is terminal)
     ledger.foreach(_.add(paths))
-    ConvertReport(paths.size, converted, fellBack, failed, colFailures)
+    val fallbacks = results.flatMap(_.fallback)
+    ConvertReport(paths.size,
+      converted = results.flatMap(_.converted),
+      fallback = fallbacks.map(_.path),
+      failed = unreadable.map(_._1) ++ results.flatMap(_.failed),
+      columnFailures = fallbacks.map(f => f.path -> f.columns).toMap)
+  }
+
+  /** One Spark write of [[runOnce]]: the files of one (writer schema,
+    * folder) group, all landing under `<prefix>/<folder>`.
+    */
+  private final case class WriteUnit(
+      folder: String, flat: AvroSchemaConverter.FlatSchema, paths: Seq[String])
+
+  private final case class UnitResult(
+      converted: Seq[String],
+      fallback: Seq[AvroCdcReader.FileNeedsFallback],
+      failed: Seq[String])
+
+  /** Runtime schema/type audit (reference main.py:496-511): canonical
+    * writer schema + derived flat schema once per schema GROUP (the
+    * reference logs per file, but files in a group are byte-identical in
+    * schema — example_file preserves the provenance pointer).
+    */
+  private def schemaAuditLines(
+      head: AvroCdcReader.FileSchema,
+      flat: AvroSchemaConverter.FlatSchema): Seq[String] = {
+    val parsed = new org.apache.avro.Schema.Parser().parse(head.schemaJson)
+    Seq(
+      s"[AVRO-SCHEMA] example_file=${head.path} " +
+        s"fingerprint=${head.fingerprint} " +
+        s"schema=${org.apache.avro.SchemaNormalization.toParsingForm(parsed)}",
+      s"[FLAT-SCHEMA] example_file=${head.path} " +
+        s"fields=${flat.payloadFields.map(f => s"${f.name}:${f.tpe}").mkString(",")}"
+    ) ++ flat.payloadFields.flatMap { f =>
+      f.tpe match {
+        case AvroSparkType.TDecimal =>
+          Some(s"[DECIMAL-FIELD] field=${f.name} type=decimal(38,9)")
+        case AvroSparkType.TDouble | AvroSparkType.TFloat =>
+          Some(s"[FLOAT-FIELD] field=${f.name} (unexpected float)")
+        case _ => None
+      }
+    }
+  }
+
+  private def columnFailureLines(f: AvroCdcReader.FileNeedsFallback): Seq[String] =
+    f.columns.map { c =>
+      s"[COLUMN-FAILURE] file=${f.path} column=${c.column} " +
+        s"type=${c.declaredType} sample=${c.sampleValue} error=${c.error}"
+    }
+
+  /** Convert one write unit. Runs on a pool thread of
+    * [[perFolderConcurrently]], so it touches no shared state: everything
+    * it found comes back in the result.
+    */
+  private def convertUnit(
+      spark: SparkSession, unit: WriteUnit, mode: ConvertMode,
+      outputPrefix: String, date: String): UnitResult = {
+    import scala.jdk.CollectionConverters._
+    val WriteUnit(folder, flat, groupPaths) = unit
+    def newAcc() = spark.sparkContext.collectionAccumulator[String]("graft.failedFiles")
+    def failedIn(acc: org.apache.spark.util.CollectionAccumulator[String]) =
+      acc.value.asScala.map(_.split('\t').head).toSet
+    mode match {
+      case ConvertMode.Standard =>
+        val acc = newAcc()
+        try {
+          // optimistic single-pass: one decode, rows stream straight
+          // to the parquet writer (the 2M-rows/s path)
+          write(AvroCdcReader.readGroup(spark, groupPaths, flat, mode, acc),
+            outputPrefix, folder, date)
+          val bad = failedIn(acc)
+          UnitResult(groupPaths.filterNot(bad.contains), Nil, bad.toSeq)
+        } catch {
+          case e: Throwable if hasConversionCause(e) =>
+            // a HARD conversion error (reference main.py's strict
+            // casts) failed the write job — the v1 committer discards
+            // the aborted job's files, so the output holds NO rows
+            // from this group yet. Fall back to probe-and-rewrite:
+            // decode+convert each file (the reference's own
+            // double-read), isolate the failing files, and re-write
+            // only the clean ones — whole-file atomic failure
+            // restored at a cost bounded by the failure rate.
+            val statuses = AvroCdcReader.probe(spark, groupPaths, flat, mode)
+            val ok = statuses.collect { case AvroCdcReader.FileOk(p) => p }
+            val bad = statuses.collect {
+              case AvroCdcReader.FileFailed(p, _) => p
+              // Standard-mode flatten can throw the fallback-class
+              // errors too (string in a timestamp union, complex-type
+              // mismatch); Standard has no all-string fallback path,
+              // so those files FAIL — the pre-lazy per-split catch
+              // classified them identically
+              case f: AvroCdcReader.FileNeedsFallback => f.path
+            }
+            val acc2 = newAcc()
+            if (ok.nonEmpty)
+              write(AvroCdcReader.readGroup(spark, ok, flat, mode, acc2),
+                outputPrefix, folder, date)
+            val bad2 = failedIn(acc2)
+            UnitResult(ok.filterNot(bad2.contains), Nil, bad ++ bad2)
+        }
+
+      case ConvertMode.ReferenceExact =>
+        val statuses = AvroCdcReader.probe(spark, groupPaths, flat)
+        val ok = statuses.collect { case AvroCdcReader.FileOk(p) => p }
+        val fbs = statuses.collect { case f: AvroCdcReader.FileNeedsFallback => f }
+        val bad = statuses.collect { case AvroCdcReader.FileFailed(p, _) => p }
+        val acc = newAcc()
+        if (ok.nonEmpty)
+          write(AvroCdcReader.readGroup(spark, ok, flat, mode, acc),
+            outputPrefix, folder, date)
+        if (fbs.nonEmpty)
+          write(AvroCdcReader.readGroupFallback(spark, fbs.map(_.path), flat, acc),
+            outputPrefix, folder, date)
+        UnitResult(ok, fbs, bad)
+    }
+  }
+
+  /** Run `work` over `units` as concurrent Spark jobs and return the
+    * results in `units` order.
+    *
+    * Units that share an output folder run one after another, in their
+    * order, on one chain: jobs in one application share
+    * FileOutputCommitter's `_temporary/0` under the output path, so one
+    * job's commit or cleanup would take or delete the other's task files.
+    * At most `defaultParallelism` chains run at once, on a pool made per
+    * call, so its threads inherit the caller's Spark local properties
+    * (job group, scheduler pool, tags) as they are now.
+    *
+    * Every chain is joined before this returns or throws. After a unit
+    * fails, chains start no further units; once all have stopped, the
+    * failure of the earliest unit is rethrown (later ones attached as
+    * suppressed). An interrupt of the caller stops further units the same
+    * way and is rethrown after the join.
+    */
+  private def perFolderConcurrently[U, R](spark: SparkSession, units: Seq[U])(
+      folder: U => String)(work: U => R): IndexedSeq[R] = {
+    val chains = units.indices.groupBy(i => folder(units(i))).values.toSeq.sortBy(_.head)
+    val results = new Array[Any](units.size)
+    val failures = new java.util.concurrent.ConcurrentSkipListMap[Int, Throwable]
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(chains.size, spark.sparkContext.defaultParallelism)))
+    var interrupted = false
+    try {
+      chains.foreach { chain =>
+        pool.execute { () =>
+          chain.iterator.takeWhile(_ => !stop.get).foreach { i =>
+            try results(i) = work(units(i))
+            catch {
+              case e: Throwable =>
+                failures.put(i, e)
+                stop.set(true)
+            }
+          }
+        }
+      }
+      pool.shutdown()
+      while (!pool.isTerminated) {
+        try pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+        catch {
+          case _: InterruptedException =>
+            interrupted = true
+            stop.set(true)
+        }
+      }
+    } finally pool.shutdownNow()
+    if (!failures.isEmpty) {
+      val first = failures.pollFirstEntry().getValue
+      failures.values.forEach(first.addSuppressed(_))
+      if (interrupted) Thread.currentThread.interrupt()
+      throw first
+    }
+    if (interrupted) {
+      Thread.currentThread.interrupt()
+      throw new InterruptedException("interrupted while converting; writes were joined")
+    }
+    results.toIndexedSeq.map(_.asInstanceOf[R])
   }
 
   /** The message prefix [[AvroCdcReader.ConversionTaskError]]'s constructor
@@ -383,11 +489,13 @@ object AvroToParquetJob {
             val date = ingestionDate.getOrElse(
               LocalDate.now(ZoneOffset.UTC).toString)
             val folders = tagged.select(col("__folder")).distinct()
-              .collect().map(_.getString(0))
-            folders.foreach { folder =>
+              .collect().map(_.getString(0)).toSeq
+            // distinct folders are distinct output dirs: their writes overlap
+            perFolderConcurrently(spark, folders)(identity) { folder =>
               write(tagged.filter(col("__folder") === folder)
                 .drop("__folder", pathCol), outputPrefix, folder, date)
             }
+            ()
           } finally { tagged.unpersist(); () }
         }
       }

@@ -24,8 +24,8 @@ import org.apache.spark.sql.SparkSession
   * deployment expressed no preference does the entry point apply the
   * engine default (off). Session-runtime `spark.conf.set(...)` calls made
   * before the entry point are overridden (RuntimeConfig cannot
-  * distinguish explicitly-set-to-default from default); use the SparkConf
-  * for a durable opt-in.
+  * distinguish explicitly-set-to-default from default) and the override is
+  * logged as a WARN; use the SparkConf for a durable opt-in.
   */
 object CheckpointTuning {
 
@@ -38,11 +38,22 @@ object CheckpointTuning {
       conf: org.apache.spark.SparkConf): Boolean =
     conf.contains(FileChecksumKey)
 
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Apply the engine's streaming checkpoint-I/O defaults to `spark`
-    * unless the deployment pinned them in the SparkConf.
+    * unless the deployment pinned them in the SparkConf. A session-runtime
+    * value it replaces is reported through `warn` (the log's WARN level
+    * unless a caller passes its own sink).
     */
-  def applyStreamingDefaults(spark: SparkSession): Unit =
+  def applyStreamingDefaults(
+      spark: SparkSession,
+      warn: String => Unit = log.warn(_)): Unit =
     if (!pinnedInSubmitConf(spark.sparkContext.getConf)) {
+      // getAll holds only explicitly set entries, never bare defaults
+      spark.conf.getAll.get(FileChecksumKey).filter(_ != "false").foreach { v =>
+        warn(s"overriding runtime $FileChecksumKey=$v with false for this " +
+          "streaming query; set it in the SparkConf to keep checksum files")
+      }
       spark.conf.set(FileChecksumKey, "false")
     }
 }

@@ -192,6 +192,200 @@ class AvroToParquetJobSpec extends AnyFunSuite {
       l.startsWith("[AVRO-SCHEMA]") && l.contains("fingerprint=")))
   }
 
+  test("schema audit log: 2 folders x 2 schemas with one fallback file give " +
+    "the one-group-at-a-time line sequence, all on the calling thread") {
+    val in = tmpDir("graft-in-audit2")
+    val out = tmpDir("graft-out-audit2")
+    // schema B: a timestamp-derived union with a string branch — a string
+    // datum sends the file to the all-string fallback in ReferenceExact
+    val flexEnvelope =
+      """{"type":"record","name":"cdc_event","fields":[
+        {"name":"source_metadata","type":{"type":"record","name":"sm","fields":[
+          {"name":"schema","type":"string"},{"name":"table","type":"string"},
+          {"name":"is_deleted","type":"boolean"},{"name":"change_type","type":"string"},
+          {"name":"tx_id","type":["null","long"]},{"name":"lsn","type":["null","string"]},
+          {"name":"primary_keys","type":{"type":"array","items":"string"}}]}},
+        {"name":"payload","type":["null",{"type":"record","name":"p","fields":[
+          {"name":"id","type":"long"},
+          {"name":"flex","type":["null",{"type":"long","logicalType":"timestamp-micros"},"string"]}]}]}
+      ]}"""
+    Seq("a", "b").foreach { folder =>
+      AvroFixtures.writeAvro(s"$in/avro/$folder/basic.avro", AvroFixtures.BasicEnvelope, Seq(
+        Map("uuid" -> "u", "read_timestamp" -> 0L,
+          "source_metadata" -> AvroFixtures.sm(folder),
+          "payload" -> Map("id" -> 1L, "name" -> folder))))
+      AvroFixtures.writeAvro(s"$in/avro/$folder/flex.avro", flexEnvelope, Seq(
+        Map("source_metadata" -> AvroFixtures.sm(folder),
+          "payload" -> Map("id" -> 2L,
+            "flex" -> (if (folder == "b") "not-a-timestamp" else 1704067200000000L)))))
+    }
+    val caller = Thread.currentThread
+    val lines = scala.collection.mutable.ArrayBuffer[String]()
+    val threads = scala.collection.mutable.Set[Thread]()
+    val rep = AvroToParquetJob.runOnce(spark, s"$in/avro/*/*.avro", out,
+      ConvertMode.ReferenceExact, ingestionDate = Some("2024-06-01"),
+      audit = Some { l => threads += Thread.currentThread; lines += l })
+    assert(rep.fallback.map(relPath) == Seq("b/flex.avro"), s"$rep")
+    assert(threads == Set(caller), "the audit sink must see only the caller")
+    // each line's tag and subject; the full text is rendered per schema
+    // group by code that runs once per group, as before
+    val shape = lines.map { l =>
+      val tag = l.takeWhile(_ != ' ')
+      val keys = "(example_file|file|field|column)=(\\S+)".r.findAllMatchIn(l)
+        .map(m => s"${m.group(1)}=${relPath(m.group(2))}").mkString(" ")
+      s"$tag $keys"
+    }
+    // recorded from the one-unit-at-a-time loop this replaced
+    assert(shape == Seq(
+      "[AVRO-SCHEMA] example_file=a/flex.avro",
+      "[FLAT-SCHEMA] example_file=a/flex.avro",
+      "[COLUMN-FAILURE] file=b/flex.avro column=flex",
+      "[AVRO-SCHEMA] example_file=a/basic.avro",
+      "[FLAT-SCHEMA] example_file=a/basic.avro",
+      "[DECIMAL-FIELD] field=price"), shape.mkString("\n"))
+  }
+
+  /** `path` from its folder segment on: `…/avro/<folder>/<file>` →
+    * `<folder>/<file>` (other values pass through).
+    */
+  private def relPath(path: String): String = {
+    val i = path.indexOf("/avro/")
+    if (i < 0) path else path.substring(i + "/avro/".length)
+  }
+
+  /** tx_id declared ["null","string"] but flattened strict-long: a
+    * non-numeric value is a HARD conversion error (probe-and-rewrite).
+    * Generation 2 adds a payload column, so it is a second writer schema.
+    */
+  private def txStringEnvelope(gen: Int): String = {
+    val name = if (gen == 2) """,{"name":"name","type":["null","string"]}""" else ""
+    s"""{"type":"record","name":"cdc_event","fields":[
+      {"name":"source_metadata","type":{"type":"record","name":"sm","fields":[
+        {"name":"schema","type":"string"},{"name":"table","type":"string"},
+        {"name":"is_deleted","type":"boolean"},{"name":"change_type","type":"string"},
+        {"name":"tx_id","type":["null","string"]},{"name":"lsn","type":["null","string"]},
+        {"name":"primary_keys","type":{"type":"array","items":"string"}}]}},
+      {"name":"payload","type":["null",{"type":"record","name":"p","fields":[
+        {"name":"id","type":"long"}$name]}]}
+    ]}"""
+  }
+
+  /** A batch over `folders` x 2 writer schemas, two 5-row files per
+    * (folder, schema); the first folder also holds a hard-error file and the
+    * second a truncated one. Returns the ids each folder's output must hold.
+    */
+  private def writeFolderBatch(in: String, folders: Seq[String]): Map[String, Seq[Long]] = {
+    def row(folder: String, id: Long, tx: String) = Map[String, Any](
+      "source_metadata" -> (AvroFixtures.sm(folder) + ("tx_id" -> tx)),
+      "payload" -> Map("id" -> id, "name" -> ("n" * 512)))
+    val expected = for ((folder, fi) <- folders.zipWithIndex) yield {
+      val ids = for (gen <- 1 to 2; k <- 0 until 2) yield {
+        val ids = (1 to 5).map(i => fi * 1000L + gen * 100 + k * 10 + i)
+        AvroFixtures.writeAvro(s"$in/avro/$folder/g$gen-$k.avro",
+          txStringEnvelope(gen), ids.map(id => row(folder, id, id.toString)))
+        ids
+      }
+      folder -> ids.flatten.sorted
+    }
+    AvroFixtures.writeAvro(s"$in/avro/${folders(0)}/g1-bad.avro", txStringEnvelope(1),
+      Seq(row(folders(0), 9001L, "9001"), row(folders(0), 9002L, "not-a-number")))
+    val trunc = s"$in/avro/${folders(1)}/g2-trunc.avro"
+    AvroFixtures.writeAvro(trunc, txStringEnvelope(2),
+      (1 to 300).map(i => row(folders(1), 8000L + i, i.toString)))
+    val ch = java.nio.channels.FileChannel.open(
+      java.nio.file.Paths.get(trunc), java.nio.file.StandardOpenOption.WRITE)
+    try ch.truncate(ch.size() - 37) finally ch.close() // mid final block
+    expected.toMap
+  }
+
+  private def allNames(dir: File): Seq[String] =
+    Option(dir.listFiles).toSeq.flatten.flatMap(f =>
+      f.getName +: (if (f.isDirectory) allNames(f) else Nil))
+
+  test("concurrent folder writes: 3 folders x 2 writer schemas with a " +
+    "hard-error and a truncated file give the sequential report and rows") {
+    val in = tmpDir("graft-in-conc")
+    val expected = writeFolderBatch(in, Seq("f1", "f2", "f3"))
+    // recorded from the one-unit-at-a-time loop this replaced (the same in
+    // both modes): schema groups, then folders, in hash-map order
+    val converted = Seq(
+      "f1/g2-0.avro", "f1/g2-1.avro", "f3/g2-0.avro", "f3/g2-1.avro",
+      "f2/g2-0.avro", "f2/g2-1.avro", "f1/g1-0.avro", "f1/g1-1.avro",
+      "f3/g1-0.avro", "f3/g1-1.avro", "f2/g1-0.avro", "f2/g1-1.avro")
+    val failed = Seq("f2/g2-trunc.avro", "f1/g1-bad.avro")
+    Seq(ConvertMode.Standard, ConvertMode.ReferenceExact).foreach { mode =>
+      val out = tmpDir("graft-out-conc")
+      val rep = AvroToParquetJob.runOnce(spark, s"$in/avro/*/*.avro", out,
+        mode, ingestionDate = Some("2024-06-01"))
+      assert(rep.discovered == 14)
+      assert(rep.converted.map(relPath) == converted, s"$mode")
+      assert(rep.failed.map(relPath) == failed, s"$mode")
+      assert(rep.fallback.isEmpty && rep.columnFailures.isEmpty)
+      expected.foreach { case (folder, ids) =>
+        val got = spark.read.parquet(s"$out/$folder").select("id")
+          .collect().map(_.getLong(0)).toSeq.sorted
+        // both writer schemas' units landed in the shared folder, once
+        assert(got == ids, s"$mode $folder")
+        assert(!allNames(new File(s"$out/$folder")).contains("_temporary"),
+          s"$mode $folder")
+      }
+    }
+  }
+
+  test("concurrent folder writes: at most defaultParallelism write jobs at " +
+    "once, and more than one") {
+    val in = tmpDir("graft-in-conc6")
+    val out = tmpDir("graft-out-conc6")
+    val folders = (1 to 6).map(i => s"p$i")
+    val expected = writeFolderBatch(in, folders)
+    var running = 0
+    var peak = 0
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        running += 1; peak = math.max(peak, running)
+      }
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        running -= 1
+    }
+    org.apache.spark.sql.GraftTestShims.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val rep = try AvroToParquetJob.runOnce(spark, s"$in/avro/*/*.avro", out,
+      ConvertMode.Standard, ingestionDate = Some("2024-06-01"))
+    finally {
+      org.apache.spark.sql.GraftTestShims.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(rep.converted.size == 24 && rep.failed.size == 2, s"$rep")
+    // the listener bus delivers on one thread in posting order, and a job's
+    // end is posted before its caller resumes, so `peak` is exact
+    assert(peak <= spark.sparkContext.defaultParallelism, s"peak $peak")
+    assert(peak > 1, "folders must overlap")
+    expected.foreach { case (folder, ids) =>
+      assert(spark.read.parquet(s"$out/$folder").select("id")
+        .collect().map(_.getLong(0)).toSeq.sorted == ids, folder)
+    }
+  }
+
+  test("concurrent folder writes: one unwritable folder fails the poll only " +
+    "after every write job has finished, and the ledger does not advance") {
+    val in = tmpDir("graft-in-concfail")
+    val out = tmpDir("graft-out-concfail")
+    val ledger = tmpDir("graft-ledger-concfail")
+    writeFolderBatch(in, Seq("f1", "f2", "f3"))
+    // a regular file where the f2 output folder should be
+    assert(new File(s"$out/f2").createNewFile())
+    intercept[Exception] {
+      AvroToParquetJob.runOnce(spark, s"$in/avro/*/*.avro", out,
+        ConvertMode.Standard, Some(ledger), ingestionDate = Some("2024-06-01"))
+    }
+    org.apache.spark.sql.GraftTestShims.drainListenerBus(spark)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      "no write job may outlive the failed poll")
+    assert(new FileLedger(ledger, spark.sparkContext.hadoopConfiguration).seen().isEmpty)
+    Seq("f1", "f3").foreach(f =>
+      assert(!allNames(new File(s"$out/$f")).contains("_temporary"), f))
+  }
+
   test("hard failure: garbage tx_id fails the file in both modes, others convert") {
     val in = tmpDir("graft-in5")
     val out = tmpDir("graft-out5")

@@ -360,4 +360,25 @@ class StreamingSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("CheckpointTuning: a replaced runtime checksum setting is reported") {
+    val key = CheckpointTuning.FileChecksumKey
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "true") // runtime set (not a SparkConf pin)
+      val warned = scala.collection.mutable.ArrayBuffer[String]()
+      CheckpointTuning.applyStreamingDefaults(spark, warned += _)
+      assert(spark.conf.get(key) == "false")
+      // the operator's runtime value was replaced: that is reported
+      assert(warned.size == 1 && warned.head.contains(s"$key=true"), s"$warned")
+      // already off: nothing is overridden, nothing reported
+      CheckpointTuning.applyStreamingDefaults(spark, warned += _)
+      assert(warned.size == 1, s"$warned")
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
 }
