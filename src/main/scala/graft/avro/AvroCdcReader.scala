@@ -1,33 +1,20 @@
 package graft.avro
 
-import java.io.{ObjectInputStream, ObjectOutputStream}
-
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.avro.file.DataFileStream
+import org.apache.avro.Schema
+import org.apache.avro.file.{DataFileReader, DataFileStream}
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.apache.spark.util.CollectionAccumulator
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
+import org.apache.spark.util.{CollectionAccumulator, SerializableConfiguration}
 
-/** Hadoop `Configuration` is not `Serializable`; standard wrapper so tasks
-  * can open `FileSystem`s against any scheme (file://, hdfs://, s3a://...).
-  */
-final class SerializableHadoopConf(@transient var value: Configuration) extends Serializable {
-  private def writeObject(out: ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
-
-/** Distributed single-pass Avro CDC reader.
+/** Distributed single-pass Avro CDC reader, and the only module that opens
+  * an Avro container: header reads go through [[writerSchema]], record
+  * reads through [[RangeRecordIterator]] — for the converter here and for
+  * the `cdc-avro` scan, stream and catalog in `graft.sources`.
   *
   * Design (Spark-first, NOT a port of the reference's per-file DoFn):
   *  - File discovery is driver-side glob; schema fingerprinting is a
@@ -112,6 +99,29 @@ object AvroCdcReader {
   private def slices(n: Int, spark: SparkSession): Int =
     math.max(1, math.min(n, spark.sparkContext.defaultParallelism * 4))
 
+  /** The files matching any of `globs`, each once, sorted: the one listing
+    * behind the converter's discovery and the `cdc-avro` scan, stream and
+    * catalog. Directories are skipped; a glob matching nothing adds nothing.
+    */
+  def listFiles(globs: Seq[String], conf: Configuration): Seq[String] =
+    globs.flatMap { g =>
+      val p = new Path(g)
+      Option(p.getFileSystem(conf).globStatus(p)).toSeq.flatten
+        .filter(_.isFile).map(_.getPath.toString)
+    }.distinct.sorted
+
+  /** The writer schema from a container's header. The stream is closed on
+    * every outcome: avro-java's constructors leave their input open when
+    * the header does not parse, which would leak one handle per
+    * unreadable file.
+    */
+  def writerSchema(path: String, conf: Configuration): Schema = {
+    val p = new Path(path)
+    val in = p.getFileSystem(conf).open(p)
+    try new DataFileStream[GenericRecord](in, newDatumReader()).getSchema
+    finally in.close()
+  }
+
   /** Distributed header-only read: writer schema JSON + Avro canonical-form
     * fingerprint per file. A file whose header cannot be read (corrupt,
     * truncated, not Avro) is isolated as a failure instead of killing the
@@ -130,7 +140,7 @@ object AvroCdcReader {
       spark: SparkSession,
       paths: Seq[String]): (Seq[FileSchema], Seq[(String, String)]) = {
     if (paths.isEmpty) return (Seq.empty, Seq.empty)
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val parts = spark.sparkContext
       .parallelize(paths, slices(paths.size, spark))
       .mapPartitions { it =>
@@ -139,13 +149,10 @@ object AvroCdcReader {
         val errs = ArrayBuffer.empty[(String, String)]
         it.foreach { p =>
           try {
-            val stream = openStream(p, conf.value)
-            try {
-              val schema = stream.getSchema
-              val fp = org.apache.avro.SchemaNormalization.parsingFingerprint64(schema)
-              files += (p -> fp)
-              if (!jsons.contains(fp)) jsons(fp) = schema.toString
-            } finally stream.close()
+            val schema = writerSchema(p, conf.value)
+            val fp = org.apache.avro.SchemaNormalization.parsingFingerprint64(schema)
+            files += (p -> fp)
+            if (!jsons.contains(fp)) jsons(fp) = schema.toString
           } catch {
             case e: Exception => errs += (p -> e.toString)
           }
@@ -160,48 +167,19 @@ object AvroCdcReader {
     (files, parts.iterator.flatMap(_._3).toSeq)
   }
 
-  private def openStream(path: String, conf: Configuration): DataFileStream[GenericRecord] = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    new DataFileStream[GenericRecord](fs.open(p), newDatumReader())
-  }
-
-  /** Whole-file read with a TRUNCATION GUARD. avro-java's
-    * `DataFileStream.hasNext` swallows the EOFException of a cut-short
-    * final block and reports a clean end-of-stream — so a half-written
-    * container (upload died, writer crashed) would silently convert its
-    * readable prefix, get ledgered as seen, and lose its tail forever
-    * with no operator signal. The reference's fastavro reader raises on
-    * the same input (main.py's per-file try/except turns that into a
-    * terminal file failure), so failing loudly here is both the safe and
-    * the faithful semantics. Detection: after a clean full read,
-    * `previousSync() == file length` (every well-formed container ends
-    * exactly at a sync boundary); a truncated file ends its read at the
-    * last complete block, strictly below the byte length. Probability of
-    * a false pass is that of 16 arbitrary bytes matching the sync marker.
-    */
-  private def readAll(path: String, conf: Configuration): (ArrayBuffer[GenericRecord], Unit) = {
-    val in = new org.apache.avro.mapred.FsInput(new Path(path), conf)
-    val len = in.length()
-    val reader = new org.apache.avro.file.DataFileReader[GenericRecord](
-      in, newDatumReader())
-    try {
-      val buf = new ArrayBuffer[GenericRecord]()
-      while (reader.hasNext) buf += reader.next()
-      if (reader.previousSync() != len)
-        throw new java.io.EOFException(
-          s"truncated Avro container: $path ends mid-block at byte $len " +
-            s"(last complete block boundary ${reader.previousSync()})")
-      (buf, ())
-    } finally reader.close()
-  }
-
   /** One byte range of one container file; `[start, end)` owns every data
     * block whose preceding sync marker lies in the range (the Avro header
     * ends with a sync marker, so a split starting at 0 owns the first
     * block — the standard Hadoop Avro split contract).
     */
   final case class FileSplit(path: String, start: Long, end: Long, length: Long)
+
+  /** The whole of one file as a split, its length from the file system. */
+  private[graft] def wholeFile(path: String, conf: Configuration): FileSplit = {
+    val p = new Path(path)
+    val len = p.getFileSystem(conf).getFileStatus(p).getLen
+    FileSplit(path, 0L, len, len)
+  }
 
   /** Plan byte-range splits for a group of container files, Spark's own
     * file-source sizing formula: split = min(maxPartitionBytes,
@@ -221,21 +199,18 @@ object AvroCdcReader {
       spark.conf.getOption(key)
         .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
         .getOrElse(default)
-    val lengths = paths.map { p =>
-      val hp = new Path(p)
-      p -> hp.getFileSystem(conf).getFileStatus(hp).getLen
-    }
+    val files = paths.map(wholeFile(_, conf))
     val maxSplit = maxSplitBytesOverride.getOrElse {
       val maxPartition = bytesConf("spark.sql.files.maxPartitionBytes", 128L << 20)
       val openCost = bytesConf("spark.sql.files.openCostInBytes", 4L << 20)
-      val perCore = lengths.map(_._2).sum /
+      val perCore = files.map(_.length).sum /
         math.max(1, spark.sparkContext.defaultParallelism)
       math.min(maxPartition, math.max(openCost, perCore))
     }
-    lengths.flatMap { case (p, len) =>
-      if (len <= maxSplit) Seq(FileSplit(p, 0L, len, len))
-      else (0L until len by maxSplit).map(s =>
-        FileSplit(p, s, math.min(s + maxSplit, len), len))
+    files.flatMap { f =>
+      if (f.length <= maxSplit) Seq(f)
+      else (0L until f.length by maxSplit).map(s =>
+        FileSplit(f.path, s, math.min(s + maxSplit, f.length), f.length))
     }
   }
 
@@ -426,20 +401,28 @@ object AvroCdcReader {
     } finally raw.close()
   }
 
-  /** Record-at-a-time reader over one split — the DSv2 partition reader's
-    * emission shape for the convert path. Holds ONE Avro block buffer +
-    * one record regardless of split size, so converter memory no longer
-    * couples to `maxPartitionBytes × task slots`. The captured-hasNext
-    * truncation guard stays as a second line of defense behind
-    * [[validateRange]] (a file replaced between validation and read).
+  /** Record-at-a-time reader over one split: the converter's, the probe's
+    * and the `cdc-avro` scan's and stream's only record reader. Holds ONE
+    * Avro block buffer + one record regardless of split size, so memory
+    * does not couple to `maxPartitionBytes × task slots`.
+    *
+    * TRUNCATION GUARD: avro-java's `hasNext` swallows the EOFException of
+    * a cut-short final block and reports a clean end-of-stream, so a
+    * half-written container (upload died, writer crashed) would silently
+    * yield its readable prefix. The reference's fastavro reader raises on
+    * the same input, so this iterator throws instead: a clean end of a
+    * well-formed container leaves `previousSync() == file length` (every
+    * container ends exactly at a sync boundary); a truncated one ends at
+    * the last complete block, strictly below. The converter also runs
+    * [[validateRange]] first, so for it this is a second line of defense
+    * (a file replaced between validation and read).
     */
   private[graft] final class RangeRecordIterator(
       split: FileSplit, conf: Configuration)
       extends Iterator[GenericRecord] with java.io.Closeable {
     private val reader = {
       val in = new org.apache.avro.mapred.FsInput(new Path(split.path), conf)
-      try new org.apache.avro.file.DataFileReader[GenericRecord](
-        in, newDatumReader())
+      try new DataFileReader[GenericRecord](in, newDatumReader())
       catch {
         case e: Throwable =>
           try in.close() catch { case _: Exception => () }
@@ -462,6 +445,9 @@ object AvroCdcReader {
           throw e
       }
     private var closed = false
+
+    /** The container's writer schema. */
+    def schema: Schema = reader.getSchema
 
     override def hasNext: Boolean = {
       if (closed) return false
@@ -486,7 +472,7 @@ object AvroCdcReader {
     override def close(): Unit = if (!closed) { closed = true; reader.close() }
   }
 
-  /** Strict form of the split read (tests and small bounded callers):
+  /** Strict form of the split read (the probe's fallback branch, tests):
     * validates the range, then drains the lazy iterator. Production
     * emission goes through [[lazyRows]] instead.
     */
@@ -574,15 +560,6 @@ object AvroCdcReader {
     }
   }
 
-  private def payloadOf(r: GenericRecord): GenericRecord =
-    r.getSchema.getField("payload") match {
-      case null => null
-      case _ => r.get("payload") match {
-        case p: GenericRecord => p
-        case _ => null
-      }
-    }
-
   /** Column-level probe over an already-read file (the reference's
     * per-column `pa.array` retry, main.py:529-540): convert each payload
     * field independently across all records and report every field that
@@ -597,10 +574,8 @@ object AvroCdcReader {
       var failure: Option[ColumnFailure] = None
       val it = records.iterator
       while (failure.isEmpty && it.hasNext) {
-        val p = payloadOf(it.next())
-        val v =
-          if (p == null || p.getSchema.getField(f.name) == null) null
-          else p.get(f.name)
+        val v = AvroValueConverter.fieldOf(
+          AvroValueConverter.recordField(it.next(), "payload"), f.name)
         try { AvroValueConverter.convert(v, f.tpe, ConvertMode.ReferenceExact); () }
         catch {
           case e: Exception =>
@@ -631,38 +606,40 @@ object AvroCdcReader {
       flat: AvroSchemaConverter.FlatSchema,
       mode: ConvertMode = ConvertMode.ReferenceExact): Seq[FileStatus] = {
     if (paths.isEmpty) return Seq.empty
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val flatB = spark.sparkContext.broadcast(flat)
     spark.sparkContext
       .parallelize(paths, slices(paths.size, spark))
       .map { p =>
-        try {
-          // happy path streams record-at-a-time (a probe file is WHOLE —
-          // no split bound — so strict buffering here was the worst
-          // memory offender of all the read paths); the fallback branch
-          // below still buffers, bounded by the failure rate
-          val hp = new Path(p)
-          val len = hp.getFileSystem(conf.value).getFileStatus(hp).getLen
-          val whole = FileSplit(p, 0L, len, len)
-          validateRange(whole, conf.value)
-          val it = new RangeRecordIterator(whole, conf.value)
+        // the fallback projection itself can still hard-fail (the
+        // reference re-raises, main.py:565-567) — probe it too; this branch
+        // buffers the file, bounded by the failure rate
+        def fallback(whole: FileSplit, reason: String): FileStatus =
           try {
-            while (it.hasNext)
-              AvroValueConverter.flatten(it.next(), flatB.value, mode)
-          } finally it.close()
-          FileOk(p): FileStatus
-        } catch {
-          case e: FallbackConversionError =>
-            // the fallback projection itself can still hard-fail (the
-            // reference re-raises, main.py:565-567) — probe it too
+            val records = readRange(whole, conf.value)
+            val cols = probeColumns(records, flatB.value)
+            records.foreach(r => AvroValueConverter.flattenFallback(r, flatB.value))
+            FileNeedsFallback(p, reason, cols)
+          } catch {
+            case e: Exception => FileFailed(p, e.toString)
+          }
+        try {
+          // the happy path streams record-at-a-time: a probe file is WHOLE
+          // (no split bound), so strict buffering here would be the worst
+          // memory offender of all the read paths
+          val whole = wholeFile(p, conf.value)
+          try {
+            validateRange(whole, conf.value)
+            val it = new RangeRecordIterator(whole, conf.value)
             try {
-              val (records, _) = readAll(p, conf.value)
-              val cols = probeColumns(records, flatB.value)
-              records.foreach(r => AvroValueConverter.flattenFallback(r, flatB.value))
-              FileNeedsFallback(p, e.msg, cols): FileStatus
-            } catch {
-              case e2: Exception => FileFailed(p, e2.toString): FileStatus
-            }
+              while (it.hasNext)
+                AvroValueConverter.flatten(it.next(), flatB.value, mode)
+            } finally it.close()
+            FileOk(p): FileStatus
+          } catch {
+            case e: FallbackConversionError => fallback(whole, e.msg)
+          }
+        } catch {
           case e: Exception => FileFailed(p, e.toString): FileStatus
         }
       }
@@ -677,20 +654,45 @@ object AvroCdcReader {
     * DataFrame boundary; [[AvroSchemaConverter]] still models the declared
     * nullability for schema-derivation parity.
     */
-  private def asNullable(dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.types.DataType =
+  private def asNullable(dt: DataType): DataType =
     dt match {
       case s: StructType =>
         StructType(s.fields.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
-      case a: org.apache.spark.sql.types.ArrayType =>
+      case a: ArrayType =>
         a.copy(elementType = asNullable(a.elementType), containsNull = true)
-      case m: org.apache.spark.sql.types.MapType =>
+      case m: MapType =>
         m.copy(valueType = asNullable(m.valueType), valueContainsNull = true)
       case other => other
     }
 
-  private def sparkSchemaWithPath(flat: AvroSchemaConverter.FlatSchema): StructType = {
+  /** `flat` as a Spark schema, relaxed to nullable, plus the provenance
+    * column `pathCol` (the converter's [[InputPathCol]], the scan's
+    * `_input_path`).
+    */
+  private[graft] def sparkSchema(
+      flat: AvroSchemaConverter.FlatSchema, pathCol: String): StructType = {
     val relaxed = asNullable(flat.toSpark).asInstanceOf[StructType]
-    StructType(relaxed.fields :+ StructField(InputPathCol, StringType, nullable = false))
+    StructType(relaxed.fields :+ StructField(pathCol, StringType, nullable = false))
+  }
+
+  /** The byte-range split fan-out of one group of files: each split's
+    * records go through [[lazyRows]] with `toRow`, and each row gets its
+    * file's path as [[InputPathCol]].
+    */
+  private def readSplits(
+      spark: SparkSession,
+      paths: Seq[String],
+      flat: AvroSchemaConverter.FlatSchema,
+      failedAcc: CollectionAccumulator[String])(
+      toRow: GenericRecord => Row): DataFrame = {
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    val splits = planSplits(spark, paths, spark.sparkContext.hadoopConfiguration)
+    val rows = spark.sparkContext
+      .parallelize(splits, slices(splits.size, spark))
+      .flatMap { s =>
+        lazyRows(s, conf.value, failedAcc)(r => Row.fromSeq(toRow(r).toSeq :+ s.path))
+      }
+    spark.createDataFrame(rows, sparkSchema(flat, InputPathCol))
   }
 
   /** Typed conversion of one schema group, parallelized over BYTE-RANGE
@@ -722,18 +724,9 @@ object AvroCdcReader {
       flat: AvroSchemaConverter.FlatSchema,
       mode: ConvertMode,
       failedAcc: CollectionAccumulator[String]): DataFrame = {
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
     val flatB = spark.sparkContext.broadcast(flat)
-    val splits = planSplits(spark, paths, spark.sparkContext.hadoopConfiguration)
-    val rows = spark.sparkContext
-      .parallelize(splits, slices(splits.size, spark))
-      .flatMap { s =>
-        lazyRows(s, conf.value, failedAcc) { r =>
-          val base = AvroValueConverter.flatten(r, flatB.value, mode)
-          Row.fromSeq(base.toSeq :+ s.path)
-        }
-      }
-    spark.createDataFrame(rows, sparkSchemaWithPath(flat))
+    readSplits(spark, paths, flat, failedAcc)(
+      AvroValueConverter.flatten(_, flatB.value, mode))
   }
 
   /** All-string fallback read of files that defeated the typed schema
@@ -744,18 +737,8 @@ object AvroCdcReader {
       paths: Seq[String],
       flat: AvroSchemaConverter.FlatSchema,
       failedAcc: CollectionAccumulator[String]): DataFrame = {
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
     val flatB = spark.sparkContext.broadcast(flat)
-    val fallbackFlat = AvroSchemaConverter.fallbackSchema(flat)
-    val splits = planSplits(spark, paths, spark.sparkContext.hadoopConfiguration)
-    val rows = spark.sparkContext
-      .parallelize(splits, slices(splits.size, spark))
-      .flatMap { s =>
-        lazyRows(s, conf.value, failedAcc) { r =>
-          val base = AvroValueConverter.flattenFallback(r, flatB.value)
-          Row.fromSeq(base.toSeq :+ s.path)
-        }
-      }
-    spark.createDataFrame(rows, sparkSchemaWithPath(fallbackFlat))
+    readSplits(spark, paths, AvroSchemaConverter.fallbackSchema(flat), failedAcc)(
+      AvroValueConverter.flattenFallback(_, flatB.value))
   }
 }

@@ -233,8 +233,7 @@ object AvroValueConverter {
             value match {
               case r: GenericRecord =>
                 Row.fromSeq(fields.map { f =>
-                  val v = if (r.getSchema.getField(f.name) != null) r.get(f.name) else null
-                  convert(v, f.tpe, mode)
+                  convert(fieldOf(r, f.name), f.tpe, mode)
                 })
               case other => throw FallbackConversionError(s"struct target got ${other.getClass}")
             }
@@ -302,22 +301,36 @@ object AvroValueConverter {
     arr
   }
 
+  /** Field `name` of `r`; null when `r` is null or its schema has no such
+    * field (a file generation that predates the field).
+    */
+  private[graft] def fieldOf(r: GenericRecord, name: String): Any =
+    if (r == null || r.getSchema.getField(name) == null) null else r.get(name)
+
+  /** Field `name` of `r` when it holds a record (the envelope's
+    * `source_metadata` and `payload`); null when absent, null, or a
+    * non-record union branch.
+    */
+  private[graft] def recordField(r: GenericRecord, name: String): GenericRecord =
+    fieldOf(r, name) match {
+      case g: GenericRecord => g
+      case _ => null
+    }
+
   /** The fixed source_metadata conversion (reference main.py:117-128). */
   def convertSourceMetadata(sm: GenericRecord): Row = {
-    def get(name: String): Any =
-      if (sm != null && sm.getSchema.getField(name) != null) sm.get(name) else null
     def str(name: String): String = {
-      val v = get(name)
+      val v = fieldOf(sm, name)
       if (v == null) null else CanonicalJson.stringify(v)
     }
     Row(
       str("schema"),
       str("table"),
-      Coercions.toBoolLenient(get("is_deleted")),
+      Coercions.toBoolLenient(fieldOf(sm, "is_deleted")),
       str("change_type"),
-      Coercions.toLongStrict(get("tx_id")), // throws on garbage — hard failure
+      Coercions.toLongStrict(fieldOf(sm, "tx_id")), // throws on garbage — hard failure
       str("lsn"),
-      Coercions.toListOfStr(get("primary_keys")),
+      Coercions.toListOfStr(fieldOf(sm, "primary_keys")),
     )
   }
 
@@ -330,26 +343,10 @@ object AvroValueConverter {
       record: GenericRecord,
       flat: AvroSchemaConverter.FlatSchema,
       mode: ConvertMode): Row = {
-    val smDatum = record.getSchema.getField("source_metadata") match {
-      case null => null
-      case _ => record.get("source_metadata") match {
-        case r: GenericRecord => r
-        case _ => null
-      }
-    }
-    val sm = convertSourceMetadata(smDatum)
-    val payload = record.getSchema.getField("payload") match {
-      case null => null
-      case _ => record.get("payload") match {
-        case r: GenericRecord => r
-        case _ => null
-      }
-    }
+    val sm = convertSourceMetadata(recordField(record, "source_metadata"))
+    val payload = recordField(record, "payload")
     val values = flat.payloadFields.map { f =>
-      val v =
-        if (payload == null || payload.getSchema.getField(f.name) == null) null
-        else payload.get(f.name)
-      convert(v, f.tpe, mode)
+      convert(fieldOf(payload, f.name), f.tpe, mode)
     }
     Row.fromSeq(sm +: values)
   }
@@ -383,26 +380,10 @@ object AvroValueConverter {
     * kept typed, every payload value stringified post-conversion.
     */
   def flattenFallback(record: GenericRecord, flat: AvroSchemaConverter.FlatSchema): Row = {
-    val smDatum = record.getSchema.getField("source_metadata") match {
-      case null => null
-      case _ => record.get("source_metadata") match {
-        case r: GenericRecord => r
-        case _ => null
-      }
-    }
-    val sm = convertSourceMetadata(smDatum)
-    val payload = record.getSchema.getField("payload") match {
-      case null => null
-      case _ => record.get("payload") match {
-        case r: GenericRecord => r
-        case _ => null
-      }
-    }
+    val sm = convertSourceMetadata(recordField(record, "source_metadata"))
+    val payload = recordField(record, "payload")
     val values = flat.payloadFields.map { f =>
-      val v =
-        if (payload == null || payload.getSchema.getField(f.name) == null) null
-        else payload.get(f.name)
-      fallbackValue(v, f.tpe)
+      fallbackValue(fieldOf(payload, f.name), f.tpe)
     }
     Row.fromSeq(sm +: values)
   }

@@ -2,7 +2,6 @@ package graft.convert
 
 import java.time.{LocalDate, ZoneOffset}
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -56,13 +55,8 @@ object AvroToParquetJob {
     m.map(_.group(1)).filter(_.nonEmpty).getOrElse("unknown")
   }
 
-  def discover(spark: SparkSession, inputPattern: String): Seq[String] = {
-    val pat = new Path(inputPattern)
-    val fs = pat.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val matches = fs.globStatus(pat)
-    if (matches == null) Seq.empty
-    else matches.filter(_.isFile).map(_.getPath.toString).sorted.toSeq
-  }
+  def discover(spark: SparkSession, inputPattern: String): Seq[String] =
+    AvroCdcReader.listFiles(Seq(inputPattern), spark.sparkContext.hadoopConfiguration)
 
   /** `audit`: optional structured-log sink (the reference's runtime
     * schema/type audit surface, main.py:496-511): when set, each schema
@@ -72,9 +66,12 @@ object AvroToParquetJob {
     * (and callers with their own log pipelines) capture lines directly;
     * pass `Some(log.info(_))` for plain logging. It is called only from the
     * calling thread, after every write of the poll has finished, group by
-    * group (schema lines, then that group's fallback lines); a poll that
-    * throws emits no lines (its files are not ledgered, so the next poll
-    * logs them).
+    * group (schema lines, then that group's fallback lines).
+    *
+    * A poll whose write fails still ledgers the files of every write unit
+    * (one writer schema in one folder) that committed, and emits those
+    * units' lines (their group's schema lines, then their fallback lines),
+    * before it rethrows; the next poll converts and logs only the rest.
     */
   def runOnce(
       spark: SparkSession,
@@ -116,25 +113,35 @@ object AvroToParquetJob {
     }
     val units = groups.flatMap(_._2)
 
-    // Phase 2: the units' write jobs, concurrently across folders
-    val results = perFolderConcurrently(spark, units)(_.folder)(
+    // Phase 2: the units' write jobs, concurrently across folders; a unit
+    // whose write did not commit has no result
+    val (done, failure) = perFolderConcurrently(spark, units)(_.folder)(
       convertUnit(spark, _, mode, outputPrefix, date))
 
     // audit sink calls stay on the calling thread (a caller's sink need not
-    // be thread-safe): per schema group, its schema lines, then each of its
-    // units' fallback-column lines
+    // be thread-safe): per schema group with a committed unit, its schema
+    // lines, then each committed unit's fallback-column lines
     audit.foreach { log =>
-      val byUnit = results.iterator
+      val byUnit = done.iterator
       groups.foreach { case (lines, groupUnits) =>
-        lines.foreach(log)
-        groupUnits.foreach(_ => byUnit.next().fallback.flatMap(columnFailureLines).foreach(log))
+        val committed = groupUnits.flatMap(_ => byUnit.next())
+        if (committed.nonEmpty) lines.foreach(log)
+        committed.foreach(_.fallback.flatMap(columnFailureLines).foreach(log))
       }
     }
 
     // the ledger records every discovered path — including failed ones —
     // matching MatchContinuously's has_deduplication (a failed file is not
-    // retried by the reference either; its DoFn failure is terminal)
-    ledger.foreach(_.add(paths))
+    // retried by the reference either; its DoFn failure is terminal). After
+    // a failed write it records only the committed units' files: their
+    // Parquet stands, so converting them again would duplicate their rows.
+    failure match {
+      case None => ledger.foreach(_.add(paths))
+      case Some(e) =>
+        ledger.foreach(_.add(units.zip(done).collect { case (u, Some(_)) => u.paths }.flatten))
+        throw e
+    }
+    val results = done.flatten
     val fallbacks = results.flatMap(_.fallback)
     ConvertReport(paths.size,
       converted = results.flatMap(_.converted),
@@ -254,7 +261,8 @@ object AvroToParquetJob {
   }
 
   /** Run `work` over `units` as concurrent Spark jobs and return the
-    * results in `units` order.
+    * results in `units` order (`None` for a unit that failed or did not
+    * start), with the failure, if any.
     *
     * Units that share an output folder run one after another, in their
     * order, on one chain: jobs in one application share
@@ -264,16 +272,17 @@ object AvroToParquetJob {
     * call, so its threads inherit the caller's Spark local properties
     * (job group, scheduler pool, tags) as they are now.
     *
-    * Every chain is joined before this returns or throws. After a unit
-    * fails, chains start no further units; once all have stopped, the
-    * failure of the earliest unit is rethrown (later ones attached as
-    * suppressed). An interrupt of the caller stops further units the same
-    * way and is rethrown after the join.
+    * Every chain is joined before this returns. After a unit fails, chains
+    * start no further units; once all have stopped, the failure of the
+    * earliest unit is returned (later ones attached as suppressed). An
+    * interrupt of the caller stops further units the same way; it is
+    * returned as an `InterruptedException` after the join, with the
+    * thread's interrupt flag set again.
     */
   private def perFolderConcurrently[U, R](spark: SparkSession, units: Seq[U])(
-      folder: U => String)(work: U => R): IndexedSeq[R] = {
+      folder: U => String)(work: U => R): (IndexedSeq[Option[R]], Option[Throwable]) = {
     val chains = units.indices.groupBy(i => folder(units(i))).values.toSeq.sortBy(_.head)
-    val results = new Array[Any](units.size)
+    val results = Array.fill[Option[R]](units.size)(None)
     val failures = new java.util.concurrent.ConcurrentSkipListMap[Int, Throwable]
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -283,7 +292,7 @@ object AvroToParquetJob {
       chains.foreach { chain =>
         pool.execute { () =>
           chain.iterator.takeWhile(_ => !stop.get).foreach { i =>
-            try results(i) = work(units(i))
+            try results(i) = Some(work(units(i)))
             catch {
               case e: Throwable =>
                 failures.put(i, e)
@@ -302,17 +311,16 @@ object AvroToParquetJob {
         }
       }
     } finally pool.shutdownNow()
-    if (!failures.isEmpty) {
-      val first = failures.pollFirstEntry().getValue
-      failures.values.forEach(first.addSuppressed(_))
-      if (interrupted) Thread.currentThread.interrupt()
-      throw first
-    }
-    if (interrupted) {
-      Thread.currentThread.interrupt()
-      throw new InterruptedException("interrupted while converting; writes were joined")
-    }
-    results.toIndexedSeq.map(_.asInstanceOf[R])
+    if (interrupted) Thread.currentThread.interrupt()
+    val failure =
+      if (!failures.isEmpty) {
+        val first = failures.pollFirstEntry().getValue
+        failures.values.forEach(first.addSuppressed(_))
+        Some(first)
+      } else if (interrupted)
+        Some(new InterruptedException("interrupted while converting; writes were joined"))
+      else None
+    (results.toIndexedSeq, failure)
   }
 
   /** The message prefix [[AvroCdcReader.ConversionTaskError]]'s constructor
@@ -494,8 +502,7 @@ object AvroToParquetJob {
             perFolderConcurrently(spark, folders)(identity) { folder =>
               write(tagged.filter(col("__folder") === folder)
                 .drop("__folder", pathCol), outputPrefix, folder, date)
-            }
-            ()
+            }._2.foreach(e => throw e)
           } finally { tagged.unpersist(); () }
         }
       }

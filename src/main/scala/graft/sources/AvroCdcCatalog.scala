@@ -4,15 +4,13 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.avro.file.DataFileStream
-import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.avro.AvroSchemaConverter
+import graft.avro.AvroCdcReader
 
 /** A Spark [[TableCatalog]] over a CDC landing zone: every
   * `<root>/avro/<folder>/` directory is a table named `<folder>`, readable
@@ -28,8 +26,8 @@ import graft.avro.AvroSchemaConverter
   * file generations (conflicting payload types collapse to string — the
   * reference's universal fallback), so a consumer sees one stable view as
   * writer schemas evolve. Reads go through the same [[AvroCdcTable]] scan
-  * as `format("cdc-avro")`: one partition per file, column pruning, per-file
-  * type coercion to the merged view.
+  * as `format("cdc-avro")`: one partition per sync-marker byte range,
+  * column pruning, per-file type coercion to the merged view.
   *
   * Read-only by design — the landing zone is produced by the upstream CDC
   * writer (reference main.py:601-613); create/alter/drop are rejected.
@@ -50,23 +48,12 @@ class AvroCdcCatalog extends TableCatalog with SupportsNamespaces {
 
   override def name(): String = catalogName
 
-  private def hadoopConf =
-    org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-
   private def folders(): Seq[String] = {
     val base = new Path(s"$root/avro")
-    val fs = base.getFileSystem(hadoopConf)
+    val fs = base.getFileSystem(AvroCdcDataSource.hadoopConf)
     if (!fs.exists(base)) Seq.empty
     else fs.listStatus(base).filter(_.isDirectory).map(_.getPath.getName)
       .toSeq.sorted
-  }
-
-  private def filesOf(folder: String): Seq[String] = {
-    val dir = new Path(s"$root/avro/$folder")
-    val fs = dir.getFileSystem(hadoopConf)
-    val st = fs.globStatus(new Path(dir, "*.avro"))
-    if (st == null) Seq.empty
-    else st.filter(_.isFile).map(_.getPath.toString).sorted.toSeq
   }
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
@@ -81,22 +68,13 @@ class AvroCdcCatalog extends TableCatalog with SupportsNamespaces {
     if (!tableExists(ident))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         Seq(catalogName, ident.name))
-    val files = filesOf(ident.name)
-    def headerSchema(f: String): Option[String] = {
-      val p = new Path(f)
-      try {
-        val in = new DataFileStream[GenericRecord](
-          p.getFileSystem(hadoopConf).open(p),
-          graft.avro.AvroCdcReader.newDatumReader())
-        try Some(in.getSchema.toString) finally in.close()
-      } catch { case _: Exception => None }
-    }
-    val flats = files.flatMap(headerSchema(_))
-      .map(AvroSchemaConverter.deriveFlatSchema(_))
+    val glob = s"$root/avro/${ident.name}/*.avro"
+    val files = AvroCdcReader.listFiles(Seq(glob), AvroCdcDataSource.hadoopConf)
+    val flats = AvroCdcDataSource.headerFlats(files).toSeq
     require(flats.nonEmpty,
       s"$catalogName.${ident.name}: no readable Avro file in $root/avro/${ident.name}")
     val merged = AvroCdcDataSource.mergeFlatSchemas(flats)
-    new AvroCdcTable(Seq(s"$root/avro/${ident.name}/*.avro"), files,
+    new AvroCdcTable(Seq(glob), files,
       AvroCdcDataSource.sparkSchema(merged), merged, ignoreCorrupt)
   }
 

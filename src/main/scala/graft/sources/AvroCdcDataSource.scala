@@ -4,8 +4,9 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.avro.file.DataFileStream
-import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+import com.fasterxml.jackson.databind.ObjectMapper
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
@@ -14,7 +15,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
@@ -29,7 +30,9 @@ import graft.avro._
   * writer schema), plus an `_input_path` provenance column.
   *
   * Spark-native properties the reference lacks:
-  *  - one input partition per file → embarrassingly parallel scan;
+  *  - one input partition per sync-marker byte range → a few giant
+  *    containers fan out across the cluster, small files stay one
+  *    partition each;
   *  - REAL column pruning ([[SupportsPushDownRequiredColumns]]): unneeded
   *    payload fields are never converted (the reference materializes every
   *    file fully, twice);
@@ -46,35 +49,20 @@ class AvroCdcDataSource extends TableProvider with DataSourceRegister {
 
   override def supportsExternalMetadata(): Boolean = false
 
+  /** `load(p)` passes `path`; `load(p1, p2, …)` passes `paths` as a JSON
+    * array of strings.
+    */
   private def paths(options: CaseInsensitiveStringMap): Seq[String] = {
-    val raw = Option(options.get("path")).toSeq ++
-      Option(options.get("paths")).toSeq.flatMap(_.split(","))
-    raw.map(_.trim).filter(_.nonEmpty)
+    val many = Option(options.get("paths")).toSeq
+      .flatMap(new ObjectMapper().readValue(_, classOf[Array[String]]))
+    (Option(options.get("path")).toSeq ++ many).map(_.trim).filter(_.nonEmpty)
   }
 
-  private def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] = {
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration
-    paths(options).flatMap { p =>
-      val hp = new Path(p)
-      val fs = hp.getFileSystem(conf)
-      val matches = fs.globStatus(hp)
-      if (matches == null) Seq.empty
-      else matches.filter(_.isFile).map(_.getPath.toString)
-    }.sorted
-  }
+  private def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] =
+    AvroCdcReader.listFiles(paths(options), AvroCdcDataSource.hadoopConf)
 
-  private def readWriterSchema(file: String): String = {
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration
-    val p = new Path(file)
-    val in = new DataFileStream[GenericRecord](
-      p.getFileSystem(conf).open(p), graft.avro.AvroCdcReader.newDatumReader())
-    try in.getSchema.toString finally in.close()
-  }
-
-  /** The flat schema the scan exposes. Default: the first file's (cheap —
-    * one header read). With `mergeSchema=true`: header-read every file,
+  /** The flat schema the scan exposes. Default: the first readable file's
+    * (cheap — one header read). With `mergeSchema=true`: header-read every file,
     * derive each flat schema, and union the payload columns by name —
     * conflicting types collapse to string (the reference's universal
     * fallback type), giving one well-typed view over heterogeneous CDC
@@ -92,22 +80,12 @@ class AvroCdcDataSource extends TableProvider with DataSourceRegister {
     require(files.nonEmpty,
       s"cdc-avro: no files match ${paths(options)} " +
         "(pass the 'avroSchema' option to start on an empty directory)")
-    // a corrupt file must not block schema inference: skip unreadable
-    // headers (the scan isolates them again at read time)
-    def tryRead(f: String): Option[String] =
-      try Some(readWriterSchema(f)) catch { case _: Exception => None }
-    if (!options.getBoolean("mergeSchema", false)) {
-      val schemaJson = files.view.flatMap(tryRead(_)).headOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"cdc-avro: no readable Avro file among ${files.size} matches"))
-      AvroSchemaConverter.deriveFlatSchema(schemaJson)
-    } else {
-      val flats = files.flatMap(tryRead(_))
-        .map(AvroSchemaConverter.deriveFlatSchema(_))
-      require(flats.nonEmpty,
-        s"cdc-avro: no readable Avro file among ${files.size} matches")
-      AvroCdcDataSource.mergeFlatSchemas(flats)
-    }
+    val flats = AvroCdcDataSource.headerFlats(files)
+    val found =
+      if (options.getBoolean("mergeSchema", false)) flats.toSeq else flats.nextOption().toSeq
+    require(found.nonEmpty,
+      s"cdc-avro: no readable Avro file among ${files.size} matches")
+    AvroCdcDataSource.mergeFlatSchemas(found)
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -129,22 +107,22 @@ object AvroCdcDataSource {
   private[sources] val log =
     org.slf4j.LoggerFactory.getLogger(classOf[AvroCdcDataSource])
 
-  private[sources] def asNullable(dt: org.apache.spark.sql.types.DataType):
-      org.apache.spark.sql.types.DataType = dt match {
-    case s: StructType =>
-      StructType(s.fields.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
-    case a: org.apache.spark.sql.types.ArrayType =>
-      a.copy(elementType = asNullable(a.elementType), containsNull = true)
-    case m: org.apache.spark.sql.types.MapType =>
-      m.copy(valueType = asNullable(m.valueType), valueContainsNull = true)
-    case other => other
-  }
+  private[sources] def hadoopConf: Configuration =
+    org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
 
-  def sparkSchema(flat: AvroSchemaConverter.FlatSchema): StructType = {
-    val relaxed = asNullable(flat.toSpark).asInstanceOf[StructType]
-    StructType(relaxed.fields :+
-      StructField(InputPathCol, org.apache.spark.sql.types.StringType, nullable = false))
-  }
+  def sparkSchema(flat: AvroSchemaConverter.FlatSchema): StructType =
+    AvroCdcReader.sparkSchema(flat, InputPathCol)
+
+  /** The flat schema of each file whose header reads, in file order,
+    * lazily. A corrupt file must not block schema inference, so an
+    * unreadable header is skipped (the scan isolates it again at read
+    * time).
+    */
+  private[sources] def headerFlats(files: Seq[String]): Iterator[AvroSchemaConverter.FlatSchema] =
+    files.iterator.flatMap { f =>
+      try Some(AvroCdcReader.writerSchema(f, hadoopConf).toString)
+      catch { case _: Exception => None }
+    }.map(AvroSchemaConverter.deriveFlatSchema(_))
 
   /** Union of payload columns by name, first-seen order; a name whose type
     * differs across file generations becomes string.
@@ -261,7 +239,7 @@ class AvroCdcScan(
     val spark = org.apache.spark.sql.SparkSession.active
     graft.avro.AvroCdcReader
       .planSplits(spark, files, spark.sparkContext.hadoopConfiguration)
-      .map(s => AvroCdcInputPartition(s.path, s.start, s.end): InputPartition)
+      .map(s => AvroCdcInputPartition(s.path, s.start, s.end, s.length): InputPartition)
       .toArray
   }
 
@@ -271,8 +249,7 @@ class AvroCdcScan(
     */
   override def estimateStatistics(): Statistics = new Statistics {
     private lazy val totalBytes: Long = {
-      val conf = org.apache.spark.sql.SparkSession.active
-        .sparkContext.hadoopConfiguration
+      val conf = AvroCdcDataSource.hadoopConf
       files.map { f =>
         val p = new Path(f)
         try p.getFileSystem(conf).getFileStatus(p).getLen
@@ -284,8 +261,7 @@ class AvroCdcScan(
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
   }
 
-  private def serializableConf = new SerializableConfiguration(
-    org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
+  private def serializableConf = new SerializableConfiguration(AvroCdcDataSource.hadoopConf)
 
   override def createReaderFactory(): PartitionReaderFactory =
     AvroCdcReaderFactory(required, tableFlat, serializableConf, ignoreCorrupt, limit)
@@ -296,11 +272,17 @@ class AvroCdcScan(
       ignoreCorrupt)
 }
 
-/** `end < 0` means "the whole file" (the micro-batch stream plans per-file
-  * partitions; the batch scan plans sync-marker byte ranges).
+/** One scan partition: the byte range `[start, end)` of a file `length`
+  * bytes long, or, when `end < 0` (the micro-batch stream's partitions),
+  * the whole file.
   */
-case class AvroCdcInputPartition(path: String, start: Long = 0L, end: Long = -1L)
-    extends InputPartition
+case class AvroCdcInputPartition(
+    path: String, start: Long = 0L, end: Long = -1L, length: Long = -1L)
+    extends InputPartition {
+  private[sources] def split(conf: Configuration): AvroCdcReader.FileSplit =
+    if (end < 0) AvroCdcReader.wholeFile(path, conf)
+    else AvroCdcReader.FileSplit(path, start, end, length)
+}
 
 case class AvroCdcReaderFactory(
     required: StructType,
@@ -310,12 +292,11 @@ case class AvroCdcReaderFactory(
     limit: Int = -1) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[AvroCdcInputPartition]
-    if (!ignoreCorrupt)
-      new AvroCdcPartitionReader(p.path, required, tableFlat, conf,
-        limit = limit, start = p.start, end = p.end)
+    def open() = new AvroCdcPartitionReader(
+      p.split(conf.value), required, tableFlat, conf.value, ignoreCorrupt, limit)
+    if (!ignoreCorrupt) open()
     else
-      try new AvroCdcPartitionReader(p.path, required, tableFlat, conf,
-        ignoreCorrupt = true, limit = limit, start = p.start, end = p.end)
+      try open()
       catch {
         case _: Exception => new EmptyPartitionReader
       }
@@ -330,54 +311,41 @@ class EmptyPartitionReader extends PartitionReader[InternalRow] {
   override def close(): Unit = ()
 }
 
-/** Streams one Avro container file as flattened InternalRows, converting
-  * ONLY the columns the scan requires. Values are coerced to the TABLE's
-  * merged column types: a column whose per-file type matches converts
-  * natively; a column merged to string (type conflict across file
-  * generations) is stringified; anything else incompatible yields null.
+/** Streams one split of an Avro container as flattened InternalRows through
+  * [[AvroCdcReader.RangeRecordIterator]] (its sync-marker ownership and
+  * truncation guard), converting ONLY the columns the scan requires.
+  * Values are coerced to the TABLE's merged column types: a column whose
+  * per-file type matches converts natively; a column merged to string
+  * (type conflict across file generations) is stringified; anything else
+  * incompatible yields null.
   */
 class AvroCdcPartitionReader(
-    path: String,
+    split: AvroCdcReader.FileSplit,
     required: StructType,
     tableFlat: AvroSchemaConverter.FlatSchema,
-    conf: SerializableConfiguration,
-    ignoreCorrupt: Boolean = false,
-    limit: Int = -1,
-    start: Long = 0L,
-    end: Long = -1L) extends PartitionReader[InternalRow] {
+    conf: Configuration,
+    ignoreCorrupt: Boolean,
+    limit: Int) extends PartitionReader[InternalRow] {
 
   private var emitted = 0L
 
-  private val hPath = new Path(path)
-  // seekable reader so a byte-range partition can sync to its first owned
-  // block; `sync(0)` lands on the header's trailing sync marker, i.e. the
-  // first block, so a whole-file read goes through the same path
-  private val fsIn = new org.apache.avro.mapred.FsInput(hPath, conf.value)
-  private val fileLen = fsIn.length()
-  private val stream = new org.apache.avro.file.DataFileReader[GenericRecord](
-    fsIn, graft.avro.AvroCdcReader.newDatumReader())
-  stream.sync(start)
-  // whole-file sentinel stays clear of Long.MaxValue: DataFileReader
-  // .pastSync computes `position + SYNC_SIZE`, which overflows negative at
-  // MaxValue and would mark every block past-sync immediately
-  private val endPos: Long = if (end < 0) Long.MaxValue - 1024L else end
+  private val records = new AvroCdcReader.RangeRecordIterator(split, conf)
 
-  // per-file flat schema from ITS writer schema (name-matched to `required`)
-  private val fileFlat = AvroSchemaConverter.deriveFlatSchema(stream.getSchema.toString)
-  private val tableByName = tableFlat.payloadFields.map(f => f.name -> f).toMap
-  private val fieldByName = fileFlat.payloadFields.map { f =>
-    // type to convert WITH: the file's own (unit-aware) type when it
-    // matches the table column; TString when the table merged to string;
-    // None (→ null) on any other mismatch
-    val target = tableByName.get(f.name) match {
-      case Some(t) if t.tpe == f.tpe => Some(f.tpe)
-      case Some(t) if t.tpe == graft.avro.AvroSparkType.TString =>
-        Some(graft.avro.AvroSparkType.TString)
-      case Some(_) => None
-      case None => Some(f.tpe) // single-schema mode: table == file
-    }
-    f.name -> (f, target)
-  }.toMap
+  // type to convert each payload field WITH, from the file's own writer
+  // schema (name-matched to `required`): the file's (unit-aware) type when
+  // it matches the table column; TString when the table merged to string;
+  // None (→ null) on any other mismatch
+  private val targetByName: Map[String, Option[AvroSparkType]] = {
+    val tableByName = tableFlat.payloadFields.map(f => f.name -> f).toMap
+    AvroSchemaConverter.deriveFlatSchema(records.schema.toString).payloadFields.map { f =>
+      f.name -> (tableByName.get(f.name) match {
+        case Some(t) if t.tpe == f.tpe => Some(f.tpe)
+        case Some(t) if t.tpe == AvroSparkType.TString => Some(AvroSparkType.TString)
+        case Some(_) => None
+        case None => Some(f.tpe) // single-schema mode: table == file
+      })
+    }.toMap
+  }
 
   private val serializer: ExpressionEncoder.Serializer[Row] = {
     val enc = ExpressionEncoder(RowEncoder.encoderFor(required))
@@ -387,9 +355,10 @@ class AvroCdcPartitionReader(
   private var current: InternalRow = _
 
   /** A header that parses does not guarantee clean data blocks: with
-    * ignoreCorruptFiles set, a decode failure mid-file treats the REST of
-    * the file as exhausted (rows already emitted stand), mirroring Spark's
-    * own ignoreCorruptFiles semantics for its built-in file sources.
+    * ignoreCorruptFiles set, a decode failure or a truncated final block
+    * treats the REST of the split as exhausted (rows already emitted
+    * stand), mirroring Spark's own ignoreCorruptFiles semantics for its
+    * built-in file sources.
     */
   override def next(): Boolean =
     if (!ignoreCorrupt) nextUnsafe()
@@ -398,63 +367,28 @@ class AvroCdcPartitionReader(
       catch {
         case e: Exception =>
           AvroCdcDataSource.log.warn(
-            s"cdc-avro: corrupt data block in $path, skipping rest of file: $e")
+            s"cdc-avro: corrupt data block in ${split.path}, skipping rest of file: $e")
           false
       }
 
   private def nextUnsafe(): Boolean = {
     if (limit >= 0 && emitted >= limit) return false // pushed-down LIMIT
-    if (!stream.hasNext) {
-      // TRUNCATION GUARD (same contract as AvroCdcReader.readRange):
-      // avro-java's hasNext SWALLOWS the EOF of a cut-short final block
-      // and reports a clean end-of-stream — without this check a
-      // truncated container would silently drop its tail in the DSv2
-      // scan and the streaming source. A clean end of a well-formed
-      // container leaves the read position exactly at the end-of-file
-      // sync boundary; the partition owning the cut block sees
-      // previousSync at the last complete block instead and fails
-      // loudly (ignoreCorruptFiles routes the throw into the documented
-      // skip-rest-of-file path). The condition is checked HERE, on the
-      // single hasNext result that ended the stream — hasNext is not
-      // idempotent after the swallow and may flip back to true.
-      if (stream.previousSync() != fileLen)
-        throw new java.io.EOFException(
-          s"truncated Avro container: $path ends mid-block at byte " +
-            s"$fileLen (last complete block boundary " +
-            s"${stream.previousSync()})")
-      return false
-    }
-    if (stream.pastSync(endPos)) return false
+    if (!records.hasNext) return false
     emitted += 1
-    val record = stream.next()
-    val payload = record.getSchema.getField("payload") match {
-      case null => null
-      case _ => record.get("payload") match {
-        case r: GenericRecord => r
-        case _ => null
-      }
-    }
+    val record = records.next()
+    val payload = AvroValueConverter.recordField(record, "payload")
     val values: Seq[Any] = required.fields.toSeq.map { f =>
       f.name match {
-        case AvroCdcDataSource.InputPathCol => path
+        case AvroCdcDataSource.InputPathCol => split.path
         case "source_metadata" =>
-          val sm = record.getSchema.getField("source_metadata") match {
-            case null => null
-            case _ => record.get("source_metadata") match {
-              case r: GenericRecord => r
-              case _ => null
-            }
-          }
-          AvroValueConverter.convertSourceMetadata(sm)
+          AvroValueConverter.convertSourceMetadata(
+            AvroValueConverter.recordField(record, "source_metadata"))
         case name =>
-          fieldByName.get(name) match {
-            case Some((_, Some(targetType))) =>
-              val v =
-                if (payload == null || payload.getSchema.getField(name) == null) null
-                else payload.get(name)
-              AvroValueConverter.convert(v, targetType, ConvertMode.Standard)
-            case Some((_, None)) => null // type conflict, not merged to string
-            case None => null // column absent in this file's schema
+          targetByName.get(name).flatten match {
+            case Some(targetType) =>
+              AvroValueConverter.convert(
+                AvroValueConverter.fieldOf(payload, name), targetType, ConvertMode.Standard)
+            case None => null // type conflict not merged to string, or absent in this file
           }
       }
     }
@@ -463,5 +397,5 @@ class AvroCdcPartitionReader(
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = stream.close()
+  override def close(): Unit = records.close()
 }

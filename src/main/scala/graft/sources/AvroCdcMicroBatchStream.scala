@@ -2,7 +2,6 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types.StructType
@@ -33,8 +32,9 @@ object AvroCdcOffset {
   * (`MatchContinuously(has_deduplication=True)`, main.py:604-608) as a
   * first-class Spark streaming source — newly appeared files become the
   * next micro-batch, the processed-file set lives in the streaming
-  * checkpoint (exactly-once across restarts), and each file is one input
-  * partition read by the same flattening reader as the batch scan.
+  * checkpoint (exactly-once across restarts), and each file is one
+  * whole-file input partition read by the same flattening reader as the
+  * batch scan.
   */
 class AvroCdcMicroBatchStream(
     globs: Seq[String],
@@ -43,18 +43,10 @@ class AvroCdcMicroBatchStream(
     conf: SerializableConfiguration,
     ignoreCorrupt: Boolean = false) extends MicroBatchStream {
 
-  private def discover(): Seq[String] =
-    globs.flatMap { g =>
-      val hp = new Path(g)
-      val fs = hp.getFileSystem(conf.value)
-      val matches = fs.globStatus(hp)
-      if (matches == null) Seq.empty
-      else matches.filter(_.isFile).map(_.getPath.toString)
-    }.distinct.sorted
-
   override def initialOffset(): Offset = AvroCdcOffset(Seq.empty)
 
-  override def latestOffset(): Offset = AvroCdcOffset(discover())
+  override def latestOffset(): Offset =
+    AvroCdcOffset(graft.avro.AvroCdcReader.listFiles(globs, conf.value))
 
   override def deserializeOffset(json: String): Offset = AvroCdcOffset.fromJson(json)
 

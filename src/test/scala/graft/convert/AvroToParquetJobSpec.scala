@@ -367,23 +367,50 @@ class AvroToParquetJobSpec extends AnyFunSuite {
   }
 
   test("concurrent folder writes: one unwritable folder fails the poll only " +
-    "after every write job has finished, and the ledger does not advance") {
+    "after every write job has finished; only committed units are ledgered, " +
+    "so the retry writes each row once") {
     val in = tmpDir("graft-in-concfail")
     val out = tmpDir("graft-out-concfail")
     val ledger = tmpDir("graft-ledger-concfail")
-    writeFolderBatch(in, Seq("f1", "f2", "f3"))
+    val expected = writeFolderBatch(in, Seq("f1", "f2", "f3"))
     // a regular file where the f2 output folder should be
     assert(new File(s"$out/f2").createNewFile())
-    intercept[Exception] {
-      AvroToParquetJob.runOnce(spark, s"$in/avro/*/*.avro", out,
-        ConvertMode.Standard, Some(ledger), ingestionDate = Some("2024-06-01"))
-    }
+    def poll() = AvroToParquetJob.runOnce(spark, s"$in/avro/*/*.avro", out,
+      ConvertMode.Standard, Some(ledger), ingestionDate = Some("2024-06-01"))
+    intercept[Exception](poll())
     org.apache.spark.sql.GraftTestShims.drainListenerBus(spark)
     assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
       "no write job may outlive the failed poll")
-    assert(new FileLedger(ledger, spark.sparkContext.hadoopConfiguration).seen().isEmpty)
     Seq("f1", "f3").foreach(f =>
       assert(!allNames(new File(s"$out/$f")).contains("_temporary"), f))
+
+    def seen() = new FileLedger(ledger, spark.sparkContext.hadoopConfiguration)
+      .seen().map(relPath)
+    def idsIn(folder: String): Seq[Long] =
+      spark.read.parquet(s"$out/$folder").select("id")
+        .collect().map(_.getLong(0)).toSeq.sorted
+    // a write unit is one writer schema (generation g1/g2, the hundreds
+    // digit of an id) in one folder; which f1/f3 units committed before
+    // the failure stopped their chains depends on timing
+    def gen(id: Long) = id % 1000 / 100
+    val committed = Seq("f1", "f3").flatMap { folder =>
+      val got = if (new File(s"$out/$folder").isDirectory) idsIn(folder) else Nil
+      val gens = got.map(gen).toSet
+      assert(got == expected(folder).filter(id => gens(gen(id))),
+        s"$folder holds whole units only")
+      gens.toSeq.map(g => folder -> g)
+    }
+    val committedFiles = committed.flatMap { case (folder, g) =>
+      new File(s"$in/avro/$folder").list().toSeq
+        .filter(_.startsWith(s"g$g-")).map(f => s"$folder/$f")
+    }
+    assert(seen() == committedFiles.toSet, s"committed units $committed")
+
+    assert(new File(s"$out/f2").delete())
+    val rep = poll()
+    assert(rep.discovered == 14 - committedFiles.size)
+    assert(seen().size == 14)
+    expected.foreach { case (folder, ids) => assert(idsIn(folder) == ids, folder) }
   }
 
   test("hard failure: garbage tx_id fails the file in both modes, others convert") {

@@ -304,17 +304,44 @@ class ConverterMutationSpec extends AnyFunSuite {
     val ch = java.nio.channels.FileChannel.open(
       java.nio.file.Paths.get(p), StandardOpenOption.WRITE)
     try ch.truncate(ch.size() - 37) finally ch.close()
-    val e = intercept[org.apache.spark.SparkException] {
-      spark.read.format("cdc-avro").load(p).select("id").collect()
-    }
-    assert(e.getMessage.contains("truncated Avro container") ||
-      Option(e.getCause).exists(_.toString.contains("truncated")),
-      s"default scan must fail loudly on truncation: $e")
-    val ids = spark.read.format("cdc-avro")
-      .option("ignoreCorruptFiles", "true").load(p)
-      .select("id").collect().map(_.getLong(0)).sorted
-    assert(ids.nonEmpty && ids.length < 300 && ids.distinct.length == ids.length,
+    // the batch scan plans byte-range partitions; the stream plans one
+    // whole-file partition per new file
+    def ids(streaming: Boolean, ignoreCorrupt: Boolean): Seq[Long] =
+      if (!streaming)
+        spark.read.format("cdc-avro")
+          .option("ignoreCorruptFiles", ignoreCorrupt.toString).load(p)
+          .select("id").collect().map(_.getLong(0)).toSeq.sorted
+      else {
+        val got = new java.util.concurrent.ConcurrentLinkedQueue[Long]
+        val q = spark.readStream.format("cdc-avro")
+          .option("ignoreCorruptFiles", ignoreCorrupt.toString).load(p)
+          .select("id").writeStream
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            b.collect().foreach(r => got.add(r.getLong(0)))
+          }
+          .option("checkpointLocation", tmpDir("graft-mut-ckpt"))
+          .start()
+        try q.processAllAvailable() finally q.stop()
+        got.toArray.map(_.asInstanceOf[Long]).toSeq.sorted
+      }
+    def causes(e: Throwable): Iterator[Throwable] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(20)
+    val prefix = ids(streaming = false, ignoreCorrupt = true)
+    assert(prefix.nonEmpty && prefix.length < 300 &&
+      prefix.distinct.length == prefix.length,
       "ignoreCorruptFiles keeps the intact prefix exactly once")
+    Seq(false, true).foreach { streaming =>
+      val e = intercept[Exception](ids(streaming, ignoreCorrupt = false))
+      val failure =
+        if (streaming) classOf[org.apache.spark.sql.streaming.StreamingQueryException]
+        else classOf[org.apache.spark.SparkException]
+      assert(failure.isInstance(e), s"$e")
+      assert(causes(e).exists(c => String.valueOf(c.getMessage)
+        .contains("truncated Avro container")),
+        s"default scan (streaming=$streaming) must fail loudly on truncation: $e")
+    }
+    assert(ids(streaming = true, ignoreCorrupt = true) == prefix,
+      "the stream's whole-file partition keeps the same prefix, once")
     // clean end-of-stream of a zero-row container must NOT trip the guard
     AvroFixtures.writeAvro(s"$in/avro/t2/empty.avro",
       AvroFixtures.BasicEnvelope, Seq.empty)

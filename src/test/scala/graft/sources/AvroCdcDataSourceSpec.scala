@@ -39,6 +39,20 @@ class AvroCdcDataSourceSpec extends AnyFunSuite {
     assert(rows(2).getAs[String]("_input_path").endsWith("b.avro"))
   }
 
+  test("cdc-avro DSv2: load(p1, p2) reads every path") {
+    val in = writeFixture()
+    val df = spark.read.format("cdc-avro")
+      .load(s"$in/avro/users/a.avro", s"$in/avro/users/b.avro")
+    assert(df.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
+  test("cdc-avro DSv2: overlapping globs read each file once") {
+    val in = writeFixture()
+    val df = spark.read.format("cdc-avro")
+      .load(s"$in/avro/*/*.avro", s"$in/avro/users/a.avro", s"$in/avro/users/*.avro")
+    assert(df.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
   test("cdc-avro DSv2: column pruning reaches the scan") {
     val in = writeFixture()
     val df = spark.read.format("cdc-avro").load(s"$in/avro/*/*.avro")
