@@ -135,24 +135,14 @@ object Bench {
     (1 to n).map(_ => pass()).min
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** The bench's session (master, confs and extensions below, then
+    * `SPARK_GRAFT_EXTRA_CONF`); `graft.obs.Probe` measures on it too. */
+  def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Dev-only iteration hooks (the driver sets neither): SPARK_GRAFT_ONLY
-    // restricts the run to the named queries (comma-separated) and skips
-    // the conversion probes; SPARK_GRAFT_EXTRA_CONF applies "k=v;k=v"
-    // session-conf overrides so a candidate default can be A/B-measured
-    // through the exact bench path before being baked in below.
-    val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // SPARK_GRAFT_EXTRA_CONF (dev-only): "k=v;k=v" overrides, to A/B a
+    // candidate default through the exact bench path before baking it in
     val extraConf =
       EnvConf.parseExtraConf(sys.env.get("SPARK_GRAFT_EXTRA_CONF"), "bench")
-    // box calibration, sampled at run START (before any Spark state
-    // exists) and again at run END so the scalar reflects the box across
-    // the whole window; the machine line carries the overall min.
-    val cpuProbeStart = cpuProbe(3)
-    val memProbeStart = memProbe(3)
-
     // SPARK_GRAFT_MASTER (dev-only, mirrors Verify's hook): run the bench
     // under another master — `local-cluster[2,8,6144]` for real multi-JVM
     // executors with serialization/fetch on every exchange (pair with
@@ -227,7 +217,7 @@ object Bench {
       //    query's shuffle output stays on /tmp to the end. 60 s keeps
       //    the working set flat;
       //  - localCheckpoint blocks pin executor memory until unpersisted
-      //    (swept between queries in the timed loop below).
+      //    (swept between queries in main's timed loop).
       .config("spark.ui.retainedJobs", "50")
       .config("spark.ui.retainedStages", "50")
       .config("spark.ui.retainedTasks", "500")
@@ -238,6 +228,21 @@ object Bench {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // SPARK_GRAFT_ONLY (dev-only): time only the named queries
+    // (comma-separated), without the conversion probes
+    val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // box calibration, sampled at run START (before any Spark state
+    // exists) and again at run END so the scalar reflects the box across
+    // the whole window; the machine line carries the overall min.
+    val cpuProbeStart = cpuProbe(3)
+    val memProbeStart = memProbe(3)
+    val spark = session()
 
     // drop blocks a finished query left behind (localCheckpoint / cache):
     // they are dead weight once the query's passes are done, and in an 8g
@@ -421,8 +426,9 @@ object Bench {
           // 16m kept for cross-round artifact comparability (r13 recorded
           // 56 splits at 16m). The memory reason for the pin is GONE: the
           // round-14 lazy split reader holds one block + one record per
-          // task, and the Probe100x sweep measures flat peak heap across
-          // 16m/32m/64m (the strict reader OOM'd a 16g heap at 32m).
+          // task, and the round-14 sweep of this container measured flat
+          // peak heap across 16m/32m/64m (5.7-7.6 GB; the strict reader
+          // OOM'd a 16g heap at 32m); SPARK_GRAFT_CDC_100X=1 re-runs 16m.
           spark.conf.set("spark.sql.files.maxPartitionBytes", "16m")
           val splits = graft.avro.AvroCdcReader.planSplits(spark, Seq(in),
             spark.sparkContext.hadoopConfiguration).size

@@ -1,6 +1,6 @@
 package graft
 
-/** [[Probe100x]] × [[FaultSmoke]] (round 16): the 20M-row / ~936 MB
+/** [[Bench]]'s 100× probe × [[FaultSmoke]] (round 16): the 20M-row / ~936 MB
   * single-container conversion probe run under `local-cluster` (real
   * executor JVMs with a FIXED memory cap) with an executor `kill -9`
   * injected mid-conversion — proving the exactly-once committer result
@@ -21,7 +21,7 @@ package graft
   * (`local-cluster[2,6,4096]`, 12 task slots), so completion alone bounds
   * per-executor heap; executor JVM heap peaks are additionally sampled
   * from heartbeat ExecutorMetrics updates, and the driver's own heap-pool
-  * peak is read from MemoryPoolMXBeans (the [[Probe100x]] readout).
+  * peak is read from MemoryPoolMXBeans.
   *
   * Run: `SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13
   *   sbt "runMain graft.Probe100xFault"`; expect `[100xfault] RESULT ok`.

@@ -590,7 +590,7 @@ object AvroCdcReader {
     * typed / needs all-string fallback / hard-failed. Mirrors the
     * reference's Arrow-build try (main.py:524-527) at file granularity,
     * and on failure identifies the offending column(s) via
-    * [[probeColumns]].
+    * [[probeColumns]]. Standard mode has no fallback: a file is ok or failed.
     *
     * Driver-memory posture: the collect is one small status per file —
     * required driver-side because the statuses PARTITION the batch into
@@ -637,7 +637,8 @@ object AvroCdcReader {
             } finally it.close()
             FileOk(p): FileStatus
           } catch {
-            case e: FallbackConversionError => fallback(whole, e.msg)
+            case e: FallbackConversionError if mode == ConvertMode.ReferenceExact =>
+              fallback(whole, e.msg)
           }
         } catch {
           case e: Exception => FileFailed(p, e.toString): FileStatus

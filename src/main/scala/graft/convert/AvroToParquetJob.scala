@@ -46,14 +46,18 @@ object AvroToParquetJob {
         */
       columnFailures: Map[String, Seq[AvroCdcReader.ColumnFailure]] = Map.empty)
 
-  /** Extract the partition folder from the source path: regex group after
-    * `/avro/`, else "unknown" (reference main.py:570-571). Driver-side —
-    * the folder is per-FILE metadata, known before any task runs.
+  /** A source path's partition folder is group 1 of this pattern, else
+    * [[UnknownFolder]] (reference main.py:570-571); [[folderOf]] and
+    * [[runStreaming]] both apply it.
     */
-  def folderOf(path: String): String = {
-    val m = "/avro/([^/]+)/".r.findFirstMatchIn(path)
-    m.map(_.group(1)).filter(_.nonEmpty).getOrElse("unknown")
-  }
+  private val FolderPattern = "/avro/([^/]+)/"
+  private val UnknownFolder = "unknown"
+
+  /** The partition folder of `path`: per-FILE metadata, known before any
+    * task runs.
+    */
+  def folderOf(path: String): String =
+    FolderPattern.r.findFirstMatchIn(path).map(_.group(1)).getOrElse(UnknownFolder)
 
   def discover(spark: SparkSession, inputPattern: String): Seq[String] =
     AvroCdcReader.listFiles(Seq(inputPattern), spark.sparkContext.hadoopConfiguration)
@@ -227,15 +231,9 @@ object AvroToParquetJob {
             // restored at a cost bounded by the failure rate.
             val statuses = AvroCdcReader.probe(spark, groupPaths, flat, mode)
             val ok = statuses.collect { case AvroCdcReader.FileOk(p) => p }
-            val bad = statuses.collect {
-              case AvroCdcReader.FileFailed(p, _) => p
-              // Standard-mode flatten can throw the fallback-class
-              // errors too (string in a timestamp union, complex-type
-              // mismatch); Standard has no all-string fallback path,
-              // so those files FAIL — the pre-lazy per-split catch
-              // classified them identically
-              case f: AvroCdcReader.FileNeedsFallback => f.path
-            }
+            // fallback-class errors (string in a timestamp union) fail the
+            // file too: Standard has no all-string fallback path
+            val bad = statuses.collect { case AvroCdcReader.FileFailed(p, _) => p }
             val acc2 = newAcc()
             if (ok.nonEmpty)
               write(AvroCdcReader.readGroup(spark, ok, flat, mode, acc2),
@@ -484,9 +482,8 @@ object AvroToParquetJob {
     // shipped path and the measured path now agree)
     graft.streaming.CheckpointTuning.applyStreamingDefaults(spark)
     val pathCol = graft.sources.AvroCdcDataSource.InputPathCol
-    val folderCol = when(
-      regexp_extract(col(pathCol), "/avro/([^/]+)/", 1) === "", "unknown")
-      .otherwise(regexp_extract(col(pathCol), "/avro/([^/]+)/", 1))
+    val folder = regexp_extract(col(pathCol), FolderPattern, 1)
+    val folderCol = when(folder === "", UnknownFolder).otherwise(folder)
     spark.readStream.format("cdc-avro").options(readerOptions).load(inputPattern)
       .writeStream
       .option("checkpointLocation", checkpointDir)

@@ -785,7 +785,7 @@ object Dedup {
     * (17 keys/word, 68 rows/doc). Two probes compose, so any pair whose
     * closest word differs by ≤ 2 bits collides; by pigeonhole that
     * guarantees recall up to total hamming 11 (4 words × ≥3 flips each
-    * needs ≥ 12 to evade). Measured on this corpus (HammingProbe): true
+    * needs ≥ 12 to evade). Measured on this corpus (OpsSpec re-measures): true
     * J ≥ 0.8 pairs top out at hamming 11 with max min-word-hamming 2 at
     * both sf0.01 and sf0.1 — inside the guarantee, so the verified output
     * still equals the exact pair set and keeps [[exactPairOracle]].

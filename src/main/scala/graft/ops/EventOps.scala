@@ -612,7 +612,7 @@ object EventOps {
   def qJsonFuncs(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(spark, dir)
       // single-split scan + two per-row JSON parses (the query's whole
-      // cost, one ~0.5 s task — JobCost): the qSqlKernels repartition
+      // cost, one ~0.5 s task — graft.obs.Probe, r18): the qSqlKernels repartition
       // discipline; every aggregate below is an integer count/sum/min/max
       .repartition(spark.sparkContext.defaultParallelism)
       .withColumn("k_path",
@@ -1260,7 +1260,7 @@ object EventOps {
     val ev = Tables.events(spark, dir)
       // events is one scan split and the JSON build→parse→extract chain
       // is the query's whole cost: it ran as a single 1.0-2.3 s task
-      // (JobCost). The qSqlKernels repartition discipline; every
+      // (graft.obs.Probe, r18). The qSqlKernels repartition discipline; every
       // aggregate below is an integer sum/count/max or the
       // order-insensitive schema merge, so results are
       // partition-order-free.

@@ -251,7 +251,7 @@ object EventStats {
     // but a UnionLoop level containing a join plans a
     // BroadcastExchange + BroadcastHashJoin every iteration, and the
     // per-level broadcast machinery measured ~95% of the recursion's
-    // cost (graft.RecCost: 12 join-levels ≈ 2.0 s steady-state vs
+    // cost (OPTIMIZATION_r18.md: 12 join-levels ≈ 2.0 s steady-state vs
     // 0.11-0.16 s for the identical arithmetic over `element_at` on
     // the literal arrays — Catalyst's ConvertToLocalRelation folds a
     // join-free Project/Filter level without any exchange). Same
@@ -1341,7 +1341,7 @@ object EventStats {
         col("event_id"))
       // events is one scan split, and the 32× explode + per-(row, b)
       // md5 draw — the query's whole cost — ran as a single ~1.0 s task
-      // (JobCost). Redistribute the (narrow) purchase rows BEFORE the
+      // (graft.obs.Probe, r18). Redistribute the (narrow) purchase rows BEFORE the
       // fan-out multiplies them — the q_graph_linkpred rule; the draw
       // depends only on (event_id, b) and every aggregate is an integer
       // sum, so the result is partition-order-free.

@@ -379,8 +379,8 @@ object GraphOps {
     // qGraphBfs frontier precedent) and the peel runs ~a dozen rounds,
     // so without the hint every round materializes shuffle stages for
     // AQE to *discover* the small side before converting the join —
-    // 3-4 extra jobs per round of pure scheduling floor (JobCost: 55-64
-    // jobs per run before, wall 4.2-5.7 s steady vs 2.3 s of job time)
+    // 3-4 extra jobs per round of pure scheduling floor (graft.obs.Probe, r18:
+    // 55-64 jobs per run before, wall 4.2-5.7 s steady vs 2.3 s of job time)
     def peel(s: DataFrame): DataFrame = e
       .join(broadcast(s.toDF("pa")), "pa")
       .join(broadcast(s.toDF("pb")), "pb")
@@ -575,7 +575,7 @@ object GraphOps {
       // fan-out: AQE sizes the post-groupBy stage by its INPUT (the
       // coalesced center exchange lands at 1-2 partitions under the 2m
       // advisory), so the explode — the query's Ω(output) step — ran as
-      // ONE 1.5-1.6 s task while 31 cores idled (JobCost stage dump).
+      // ONE 1.5-1.6 s task while 31 cores idled (graft.obs.Probe, r18).
       // The round-robin exchange moves center rows once, BEFORE the
       // fan-out multiplies them — the §explode-before-join rule's
       // data-layout twin; pair counts/sums are integer aggregates, so

@@ -1050,8 +1050,8 @@ object Relational {
     // The hint used to sit on the OUTER select, which planned its
     // exchange ABOVE the kernel projection — Scan→Filter→Project(all
     // kernels)→Exchange — so the kernels still ran as ONE task and the
-    // repartition redistributed finished rows (JobCost: a 1.06 s
-    // single-task stage feeding a 32-task sort). Hinting the subquery
+    // repartition redistributed finished rows (graft.obs.Probe, r18: a
+    // 1.06 s single-task stage feeding a 32-task sort). Hinting the subquery
     // puts the exchange between the filter and the kernels, which is
     // what the hint was always meant to buy.
     spark.sql(s"""

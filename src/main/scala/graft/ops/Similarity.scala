@@ -708,7 +708,7 @@ object Similarity {
     * A recall regression (worse hashing, broken training, a dropped
     * candidate cut) flips `n_ge_floor` or `mean_ge_spec` and the DuckDB
     * hash-match FAILS — the oracle now gates the approximation quality, not
-    * just row counts. Thresholds were measured with `graft.RecallProbe`
+    * just row counts. Thresholds were measured (recall@10 vs [[qAnnTopk]])
     * across sf0.001/0.01/0.1 and chosen with margin (e.g. PQ mean recall
     * measured 0.31–0.55 across SFs → spec 0.25; SQ8 measured 1.00
     * everywhere → floor 0.9). The neighbor-list outputs remain available

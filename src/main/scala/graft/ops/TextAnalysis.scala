@@ -531,7 +531,7 @@ object TextAnalysis {
     val planted = Tables.documents(spark, dir)
       // documents is a single parquet file (one scan split), and this
       // query is per-doc regex-heavy — 8 regexp ops per row ran on ONE
-      // core (JobCost: two ~0.5 s single-task jobs of a 1.1 s floor).
+      // core (graft.obs.Probe, r18: two ~0.5 s one-task jobs of a 1.1 s floor).
       // The qSqlKernels REPARTITION-hint discipline, stated there for
       // the same table; row-level projection + filter, so the result
       // is partition-independent.
@@ -1263,7 +1263,7 @@ object TextAnalysis {
       // a micro-batch arrives as ONE small parquet file (single
       // row-group = one scan split), so without this the gopher kernel —
       // ~240 µs/doc, the batch's dominant cost — runs on ONE core while
-      // 31 idle (StreamCost probe: addBatch 1.2-1.5 s of a 1.7 s query).
+      // 31 idle (graft.obs.Probe, r18: addBatch 1.2-1.5 s of a 1.7 s query).
       // Redistributing a kernel-heavy micro-batch before the per-row
       // work is the qSqlKernels REPARTITION-hint discipline applied to
       // the stream; the exchange moves the raw docs once (~0.6 MB here,

@@ -58,46 +58,51 @@ class AvroCdcDataSource extends TableProvider with DataSourceRegister {
     (Option(options.get("path")).toSeq ++ many).map(_.trim).filter(_.nonEmpty)
   }
 
-  private def resolvePaths(options: CaseInsensitiveStringMap): Seq[String] =
-    AvroCdcReader.listFiles(paths(options), AvroCdcDataSource.hadoopConf)
+  private var resolved: Option[(Seq[String], AvroSchemaConverter.FlatSchema)] = None
 
-  /** The flat schema the scan exposes. Default: the first readable file's
-    * (cheap — one header read). With `mergeSchema=true`: header-read every file,
-    * derive each flat schema, and union the payload columns by name —
-    * conflicting types collapse to string (the reference's universal
-    * fallback type), giving one well-typed view over heterogeneous CDC
-    * file generations. Readers coerce per-file values to the merged
-    * column types.
+  /** The matching files and the flat schema the scan exposes, worked out
+    * once: Spark makes one provider per `load()` and calls `inferSchema`,
+    * then `getTable`, so the two share one listing and one header pass.
+    * The schema: the first readable file's (one header read). With
+    * `mergeSchema=true`: header-read every file, derive each flat schema,
+    * and union the payload columns by name — conflicting types collapse
+    * to string (the reference's universal fallback type), giving one
+    * well-typed view over heterogeneous CDC file generations. Readers
+    * coerce per-file values to the merged column types.
     */
-  private[sources] def flatSchemaFor(options: CaseInsensitiveStringMap): AvroSchemaConverter.FlatSchema = {
-    // explicit writer schema: no file access at all — REQUIRED for a
-    // streaming cold start where the glob matches zero files yet (the
-    // reference's MatchContinuously starts on an empty landing zone too)
-    Option(options.get("avroSchema")).map(_.trim).filter(_.nonEmpty).foreach {
-      json => return AvroSchemaConverter.deriveFlatSchema(json)
+  private def resolve(options: CaseInsensitiveStringMap): (Seq[String], AvroSchemaConverter.FlatSchema) =
+    resolved.getOrElse {
+      val globs = paths(options)
+      val files = AvroCdcReader.listFiles(globs, AvroCdcDataSource.hadoopConf)
+      // explicit writer schema: no header reads — REQUIRED for a
+      // streaming cold start where the glob matches zero files yet (the
+      // reference's MatchContinuously starts on an empty landing zone too)
+      val flat = Option(options.get("avroSchema")).map(_.trim).filter(_.nonEmpty)
+        .map(AvroSchemaConverter.deriveFlatSchema(_)).getOrElse {
+          require(files.nonEmpty,
+            s"cdc-avro: no files match $globs " +
+              "(pass the 'avroSchema' option to start on an empty directory)")
+          val flats = AvroCdcDataSource.headerFlats(files)
+          val found =
+            if (options.getBoolean("mergeSchema", false)) flats.toSeq else flats.nextOption().toSeq
+          require(found.nonEmpty,
+            s"cdc-avro: no readable Avro file among ${files.size} matches")
+          AvroCdcDataSource.mergeFlatSchemas(found)
+        }
+      resolved = Some((files, flat))
+      (files, flat)
     }
-    val files = resolvePaths(options)
-    require(files.nonEmpty,
-      s"cdc-avro: no files match ${paths(options)} " +
-        "(pass the 'avroSchema' option to start on an empty directory)")
-    val flats = AvroCdcDataSource.headerFlats(files)
-    val found =
-      if (options.getBoolean("mergeSchema", false)) flats.toSeq else flats.nextOption().toSeq
-    require(found.nonEmpty,
-      s"cdc-avro: no readable Avro file among ${files.size} matches")
-    AvroCdcDataSource.mergeFlatSchemas(found)
-  }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    AvroCdcDataSource.sparkSchema(flatSchemaFor(options))
+    AvroCdcDataSource.sparkSchema(resolve(options)._2)
 
   override def getTable(
       schema: StructType,
       partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     val options = new CaseInsensitiveStringMap(properties)
-    new AvroCdcTable(paths(options), resolvePaths(options), schema,
-      flatSchemaFor(options))
+    val (files, flat) = resolve(options)
+    new AvroCdcTable(paths(options), files, schema, flat)
   }
 }
 

@@ -88,6 +88,15 @@ class AvroToParquetJobSpec extends AnyFunSuite {
     AvroToParquetJob.runOnce(spark, s"$in/*.avro", out, ConvertMode.Standard,
       ingestionDate = Some("2024-06-01"))
     assert(new File(s"$out/unknown/ingestion_date=2024-06-01").isDirectory)
+
+    // the streaming converter applies the same rule to `_input_path`
+    val streamOut = tmpDir("graft-out2s")
+    val q = AvroToParquetJob.runStreaming(spark, s"$in/*.avro", streamOut,
+      tmpDir("graft-ck2s"), ingestionDate = Some("2024-06-01"))
+    try q.processAllAvailable() finally q.stop()
+    assert(new File(streamOut).list().toSeq.filterNot(_.startsWith(".")) == Seq("unknown"))
+    assert(spark.read.parquet(s"$streamOut/unknown/ingestion_date=2024-06-01")
+      .select("id").collect().map(_.getLong(0)).toSeq == Seq(1L))
   }
 
   private val complexEnvelope =
@@ -347,12 +356,12 @@ class AvroToParquetJobSpec extends AnyFunSuite {
       override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
         running -= 1
     }
-    org.apache.spark.sql.GraftTestShims.drainListenerBus(spark)
+    org.apache.spark.sql.graft.ListenerBusBridge.drainListenerBus(spark)
     spark.sparkContext.addSparkListener(listener)
     val rep = try AvroToParquetJob.runOnce(spark, s"$in/avro/*/*.avro", out,
       ConvertMode.Standard, ingestionDate = Some("2024-06-01"))
     finally {
-      org.apache.spark.sql.GraftTestShims.drainListenerBus(spark)
+      org.apache.spark.sql.graft.ListenerBusBridge.drainListenerBus(spark)
       spark.sparkContext.removeSparkListener(listener)
     }
     assert(rep.converted.size == 24 && rep.failed.size == 2, s"$rep")
@@ -378,7 +387,7 @@ class AvroToParquetJobSpec extends AnyFunSuite {
     def poll() = AvroToParquetJob.runOnce(spark, s"$in/avro/*/*.avro", out,
       ConvertMode.Standard, Some(ledger), ingestionDate = Some("2024-06-01"))
     intercept[Exception](poll())
-    org.apache.spark.sql.GraftTestShims.drainListenerBus(spark)
+    org.apache.spark.sql.graft.ListenerBusBridge.drainListenerBus(spark)
     assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
       "no write job may outlive the failed poll")
     Seq("f1", "f3").foreach(f =>

@@ -292,8 +292,17 @@ class ConverterMutationSpec extends AnyFunSuite {
       s"fallback-class error must fail the file in Standard mode: $report")
     assert(report.converted.size == 1 &&
       report.converted.head.endsWith("good.avro"), s"$report")
+    // the whole report: no fallback file and no column forensics
+    assert(report.discovered == 2 && report.failed.size == 1 &&
+      report.fallback.isEmpty && report.columnFailures.isEmpty, s"$report")
     assert(outIds(out) == (1L to 50L),
       "whole-file atomic: no prefix rows from the bad file")
+    // the probe-and-rewrite's probe fails the file outright: with no
+    // fallback to write, it does not re-read the file for column forensics
+    val statuses = graft.avro.AvroCdcReader.probe(spark, Seq(s"$in/avro/t/bad.avro"),
+      graft.avro.AvroSchemaConverter.deriveFlatSchema(schema), ConvertMode.Standard)
+    assert(statuses.collect { case f: graft.avro.AvroCdcReader.FileFailed => f.path }
+      .map(_.split('/').last) == Seq("bad.avro"), s"$statuses")
   }
 
   test("M9 truncated container through the DSv2 scan: loud failure by " +

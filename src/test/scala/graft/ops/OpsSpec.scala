@@ -3366,4 +3366,35 @@ class OpsSpec extends AnyFunSuite {
       "an interior bucket with an empty neighbor must keep its NULL " +
         "area — zeroing it diverges from the oracle's CASE")
   }
+
+  test("graft.obs Probe recorder: a batch pass counts jobs, stages and " +
+    "tasks and carries the planning-phase ms") {
+    val rec = new graft.obs.Probe.Recorder(spark)
+    val pass = try rec.run("q01_pricing_summary", dir, "pass1") finally rec.close()
+    assert(pass.jobs >= 1 && pass.stages >= 1 && pass.tasks >= 1, pass.line)
+    assert(Seq("analysis", "optimization", "planning").forall(pass.phaseMs.contains),
+      s"${pass.phaseMs}")
+    assert(pass.maxTaskMs >= pass.medianTaskMs && pass.oneTaskStages <= pass.stages,
+      pass.line)
+    assert(pass.batches.isEmpty, pass.line)
+  }
+
+  test("graft.obs Probe recorder: a streaming query's pass carries its " +
+    "micro-batch records") {
+    val rec = new graft.obs.Probe.Recorder(spark)
+    val pass = try rec.run("q_stream_join", dir, "pass1") finally rec.close()
+    assert(pass.batches.nonEmpty, pass.line)
+    assert(pass.batches.map(_.inputRows).sum > 0, pass.batches.map(_.line))
+    assert(pass.batches.forall(_.durationMs.contains("triggerExecution")),
+      pass.batches.map(_.line))
+    assert(pass.batches.exists(_.state.nonEmpty), "the join holds state")
+  }
+
+  test("graft.obs Probe --plans writes explain(\"formatted\") per query") {
+    val out = java.nio.file.Files.createTempDirectory("graft-probe-plans")
+    Console.withOut(new java.io.ByteArrayOutputStream)(graft.obs.Probe.run(spark,
+      Seq(dir, "--plans", out.toString, "t", "q01_pricing_summary")))
+    val txt = java.nio.file.Files.readString(out.resolve("q01_pricing_summary_t.txt"))
+    assert(txt.contains("Physical Plan"), txt.take(300))
+  }
 }

@@ -53,6 +53,23 @@ class AvroCdcDataSourceSpec extends AnyFunSuite {
     assert(df.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
   }
 
+  test("cdc-avro DSv2: one load lists each glob once and opens each file's " +
+    "header once, with mergeSchema") {
+    val in = writeFixture()
+    val globs = Seq(s"$in/avro/users/a.avro", s"$in/avro/users/b*.avro")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl" -> classOf[CountingLocalFs].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    val saved = keys.map { case (k, _) => k -> Option(conf.get(k)) }
+    CountingLocalFs.reset()
+    keys.foreach { case (k, v) => conf.set(k, v) }
+    val df = try spark.read.format("cdc-avro").option("mergeSchema", "true").load(globs: _*)
+    finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    assert(CountingLocalFs.counts("glob") == globs.map(_ -> 1).toMap)
+    assert(CountingLocalFs.counts("open") == Map("a.avro" -> 1, "b.avro" -> 1))
+    assert(df.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
   test("cdc-avro DSv2: column pruning reaches the scan") {
     val in = writeFixture()
     val df = spark.read.format("cdc-avro").load(s"$in/avro/*/*.avro")
@@ -247,4 +264,28 @@ class AvroCdcDataSourceSpec extends AnyFunSuite {
       .collect().head
     assert(got.getLong(0) == 3L && got.getLong(1) == 16L)
   }
+}
+
+/** The local file system, counting glob listings (by pattern) and opens (by
+  * file name) across every instance.
+  */
+class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path}
+  override def globStatus(p: Path): Array[FileStatus] = {
+    CountingLocalFs.count("glob", p.toString); super.globStatus(p)
+  }
+  override def open(p: Path, bufferSize: Int): FSDataInputStream = {
+    CountingLocalFs.count("open", p.getName); super.open(p, bufferSize)
+  }
+}
+
+object CountingLocalFs {
+  private val seen = scala.collection.mutable.Map[(String, String), Int]()
+  def count(kind: String, key: String): Unit = synchronized {
+    seen((kind, key)) = seen.getOrElse((kind, key), 0) + 1
+  }
+  def counts(kind: String): Map[String, Int] = synchronized {
+    seen.collect { case ((`kind`, key), n) => key -> n }.toMap
+  }
+  def reset(): Unit = synchronized(seen.clear())
 }

@@ -2,8 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Test-only bridge into `private[sql]` plan execution (and the
-  * `private[spark]` listener bus).
+/** Test-only bridge into `private[sql]` plan execution.
   *
   * BoundaryAuditSpec re-executes each audited query with its `round()`
   * calls STRIPPED from the analyzed plan, so it can measure how close the
@@ -16,10 +15,4 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 object GraftTestShims {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Wait until every listener event posted so far has been delivered, so
-    * `statusTracker` reflects every job that started or ended before now.
-    */
-  def drainListenerBus(spark: SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
 }
