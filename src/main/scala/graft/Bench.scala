@@ -234,9 +234,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // SPARK_GRAFT_ONLY (dev-only): time only the named queries
-    // (comma-separated), without the conversion probes
+    // (comma-separated), without the conversion probes; an unregistered
+    // name or an empty list stops the run before any Spark state exists
     val only: Option[Set[String]] = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val ordered = SparkEntry.select(only).toSeq.sortBy(_._1)
     // box calibration, sampled at run START (before any Spark state
     // exists) and again at run END so the scalar reflects the box across
     // the whole window; the machine line carries the overall min.
@@ -302,9 +304,7 @@ object Bench {
       if (cand.isDirectory) cand.getAbsolutePath else sfDir
     }
     if (Passes < 5)
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_(name)) }
-        .foreach { case (name, fn) =>
+      ordered.foreach { case (name, fn) =>
         try {
           fn(spark, warmDir).write.format("noop").mode("overwrite").save()
           sweepBlocks()
@@ -322,8 +322,6 @@ object Bench {
     // change.) Per-query caches (codegen, file footers) stay warm across
     // rounds, so steady-state per-pass times match the back-to-back
     // design at idle.
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_(name)) }
     // name -> pass times (empty marks a failed query)
     val raw = scala.collection.mutable.LinkedHashMap[String, List[Double]]()
     ordered.foreach { case (name, _) => raw(name) = Nil }

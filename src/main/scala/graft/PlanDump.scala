@@ -4,111 +4,15 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Dumps the optimized physical plans of the headline queries to PLANS.md —
-  * the per-round audit trail for the scale review (pushdown present?
-  * dimension joins broadcast? shuffles only where semantics require?).
+/** Dumps the optimized physical plan of every registered query
+  * ([[SparkEntry.queries]], sorted by name) to PLANS.md — the per-round
+  * audit trail for the scale review (pushdown present? dimension joins
+  * broadcast? shuffles only where semantics require?). A query added to a
+  * module's registry shows up here with no further edit.
   *
   * Usage: `sbt "runMain graft.PlanDump [sfDir]"`.
   */
 object PlanDump {
-  private val headline = Seq(
-    "q01_pricing_summary", "q03_shipping_priority", "q05_local_supplier",
-    "q_window_rank", "q_topk_agg", "q_dedup_minhash", "q_ann_topk",
-    "q_events_asof", "q_events_session", "q_cdc_decimal", "q_range_join",
-    "q_text_chunks",
-    // round 2
-    "q_cdc_apply", "q_ann_ivf", "q_grouping_sets", "q_window_range",
-    "q_sql_kernels", "q_dedup_simhash", "q_events_funnel", "q_json_funcs",
-    "q_sample_hash", "q_decontaminate", "q_dedup_clusters",
-    "q_exists_subquery", "q_percentiles", "q_window_dist",
-    "q_events_retention",
-    // round 3
-    "q_embed_neardup", "q_ann_pq", "q_approx_distinct",
-    // round 4
-    "q_dedup_cc_star", "q_text_surprisal", "q_events_anomaly",
-    "q_text_redact",
-    // round 5
-    "q_cdc_scd2", "q_dedup_paragraph", "q_sample_stratified",
-    "q_sample_weighted",
-    // round 6
-    "q04_order_priority", "q12_priority_class", "q_decontaminate_ngram",
-    "q_multimodal_meta", "q_multimodal_audio", "q_multimodal_video",
-    "q_ann_lsh", "q07_volume_shipping", "q10_returned_items",
-    "q13_customer_distribution", "q14_promo_revenue", "q_ann_mrl",
-    "q_multimodal_resize",
-    // round 6, late: curation ops + subquery shapes
-    "q_quality_gopher", "q_mix_temperature", "q_dedup_semantic",
-    "q_dedup_incremental", "q_split_train_val_test",
-    "q_shuffle_deterministic", "q15_top_supplier", "q17_small_qty_revenue",
-    "q18_large_orders", "q19_disjunctive_pred", "q22_dormant_customers",
-    "q_heavy_hitters", "q_pipeline_full", "q08_market_share",
-    "q_csv_json_roundtrip", "q_binary_source", "q_malformed_quarantine",
-    "q_orc_roundtrip", "q_stream_quality", "q_vocab_coverage",
-    "q_length_histogram",
-    // round 8: remaining TPC-H decorrelation shapes
-    "q02_min_cost_supplier", "q11_important_parts", "q16_supplier_diversity",
-    "q20_excess_share_supplier", "q21_sole_failing_supplier",
-    "q09_product_profit",
-    // round 8, late: clustering + tokenizer statistics + image dedup
-    "q_cluster_kmeans", "q_bpe_pairs", "q_text_bm25", "q_dedup_bloom",
-    "q_dedup_containment", "q_image_dedup", "q_quantile_sketch",
-    "q_ann_rerank", "q_snapshot_diff", "q_events_paths", "q_text_novelty",
-    "q_audio_pcm",
-    // round 8, continued
-    "q_image_neardup", "q_text_winnow", "q_events_pagerank",
-    "q_embed_covariance", "q_dedup_ppjoin", "q_graph_triangles",
-    "q_dedup_canonical", "q_heavy_hitters_grouped", "q_ann_ivf_sq8",
-    "q_text_boilerplate", "q_text_postings", "q_text_pmi",
-    "q_quality_normalize", "q_graph_kcore", "q_events_attribution",
-    "q_vocab_growth", "q_market_basket", "q_events_engagement",
-    "q_embed_centroid_eval", "q_join_bucketed", "q_events_streaks",
-    "q_text_rrf",
-    // round 8, post-gate session: runtime-filter join + MV maintenance
-    "q_join_bloom", "q_matview_merge", "q_partitioned_layout",
-    // round 9: URL/substring dedup, packing, epoch mixture, index refresh
-    "q_dedup_url", "q_pack_sequences", "q_ann_refresh",
-    "q_dedup_substring", "q_mix_epochs",
-    // round 9, second session: monitoring + curation report
-    "q_stats_drift", "q_skew_diagnose", "q_quality_classifier",
-    "q_curate_funnel", "q_bpe_encode", "q_events_forecast",
-    "q_graph_labelprop", "q_embed_whiten", "q_stats_profile",
-    // round 9, third session: scoring family
-    "q_graph_linkpred", "q_text_perplexity", "q_curate_dsir",
-    "q_stats_mutualinfo", "q_events_survival", "q_embed_pca",
-    "q_sql_recursive", "q_variant_json", "q_stats_corr",
-    "q_curate_token_budget", "q_events_abtest", "q_sql_pipe",
-    "q_lateral_join", "q_unpivot", "q_graph_bfs",
-    "q_langid_eval", "q_quality_calibration", "q_stream_abtest",
-    "q_compact_files", "q_multimodal_tar", "q_text_lm_heldout",
-    "q_skyline", "q_fuzzy_match",
-    // round 10: blocked fuzzy join, PII sweep, incremental dedup/CC,
-    // diversity selection, layout audit, negatives, robust stats
-    "q_text_pii", "q_decontaminate_semantic", "q_dedup_substring_incr",
-    "q_sample_kcenter", "q_layout_zorder", "q_dedup_cc_incr",
-    "q_ann_negatives", "q_quality_mad", "q_stats_chisq", "q_label_kappa",
-    // round 10, second session: monitoring/segmentation/spatial/sketch
-    "q_events_changepoint", "q_rfm_segments", "q_window_median",
-    "q_spatial_join", "q_sketch_merge", "q_window_distinct",
-    "q_observe_metrics", "q_events_active_users",
-    // round 10, third session: governance/eval/stats/layout/PIT
-    "q_privacy_dp", "q_gdpr_forget", "q_entity_resolve", "q_stats_ks",
-    "q_eval_ndcg", "q_text_zipf", "q_events_ltv", "q_layout_skipping",
-    "q_events_seasonality", "q_window_ewma", "q_dedup_lsh_calibration",
-    "q_cdc_timetravel", "q_eval_bleu", "q_stats_anova",
-    "q_sample_balanced", "q_stats_bootstrap", "q_join_pit",
-    // round 10, fifth session: series/rank/IR/layout/graph/LM additions
-    "q_events_markov", "q_stats_ttest", "q_series_lttb", "q_series_m4",
-    "q_eval_auc", "q_calibrate_isotonic", "q_eval_spearman",
-    "q_stats_linreg", "q_events_concurrency", "q_ann_mmr",
-    "q_text_kneserney", "q_graph_conductance", "q_layout_hilbert",
-    "q_stats_poisson", "q_text_jsd",
-    "q_privacy_ldp", "q_events_asof_nearest", "q_text_burstiness",
-    "q_events_bots", "q_stream_late_data", "q_stats_fdr", "q_stats_gini",
-    "q_multimodal_vad", "q_join_dpp", "q_events_timetoconvert",
-    "q_cluster_profile",
-    // round 12: frame decode via sample table, co-bucketed cross-modal
-    "q_multimodal_frames", "q_layout_comodal")
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = SparkSession.builder()
@@ -122,7 +26,7 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder
-    sb.append("# PLANS — physical plans of the headline queries\n\n")
+    sb.append("# PLANS — physical plans of every registered query\n\n")
     sb.append("Generated by `graft.PlanDump` (re-run per round). What to check\n")
     sb.append("per plan, per the 100 TB posture:\n\n")
     sb.append("- `PushedFilters` / `ReadSchema` on every `FileScan` — predicate\n")
@@ -137,17 +41,16 @@ object PlanDump {
     sb.append("- final `Sort`/top-k only at output granularity (driver-bound\n")
     sb.append("  result sizes), `TakeOrderedAndProject` for LIMIT queries.\n\n")
 
-    headline.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        sb.append(s"## $name\n\n```\n")
-        val plan = try fn(spark, sfDir).queryExecution.executedPlan.toString
-        catch { case e: Throwable => s"<failed: ${e.getMessage}>" }
-        sb.append(plan.linesIterator.take(60).mkString("\n"))
-        sb.append("\n```\n\n")
-      }
+    val all = SparkEntry.queries.toSeq.sortBy(_._1)
+    all.foreach { case (name, fn) =>
+      sb.append(s"## $name\n\n```\n")
+      val plan = try fn(spark, sfDir).queryExecution.executedPlan.toString
+      catch { case e: Throwable => s"<failed: ${e.getMessage}>" }
+      sb.append(plan.linesIterator.take(60).mkString("\n"))
+      sb.append("\n```\n\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"[plandump] wrote PLANS.md (${headline.size} plans)")
+    println(s"[plandump] wrote PLANS.md (${all.size} plans)")
     spark.stop()
   }
 }

@@ -102,8 +102,10 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // dev convenience: extra args restrict the dump to named queries
-    val only = args.drop(2).toSet
+    // dev convenience: extra args restrict the dump to named queries (an
+    // unregistered name is an error, not an empty dump)
+    val selected =
+      SparkEntry.select(Some(args.drop(2).toSet).filter(_.nonEmpty))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Dev-only gate-hardening hooks (the driver sets neither, keeping its
     // gate byte-for-byte unchanged): SPARK_GRAFT_MASTER runs the FULL
@@ -133,9 +135,7 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val hashes = scala.collection.mutable.SortedMap[String, String]()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftQuery
 import graft.functions.CdcExpressions
 import graft.ops.Tables
 
@@ -423,23 +424,13 @@ object CdcColumns {
         AND NOT h.is_deleted
       ORDER BY asof_tx, id"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_cdc_timetravel" -> (qCdcTimetravel _),
-    "q_cdc_flatten" -> (qCdcFlattenImpl _),
-    "q_cdc_decimal" -> (qCdcDecimal _),
-    "q_cdc_stringify" -> (qCdcStringify _),
-    "q_cdc_apply" -> (qCdcApply _),
-    "q_stream_cdc_apply" -> (qStreamCdcApply _),
-    "q_cdc_scd2" -> (qCdcScd2 _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_cdc_timetravel" -> qCdcTimetravelOracle,
-    "q_cdc_flatten" -> qCdcFlattenOracle,
-    "q_cdc_decimal" -> qCdcDecimalOracle,
-    "q_cdc_stringify" -> qCdcStringifyOracle,
-    "q_cdc_apply" -> qCdcApplyOracle,
-    "q_stream_cdc_apply" -> qCdcApplyOracle,
-    "q_cdc_scd2" -> qCdcScd2Oracle,
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q_cdc_timetravel", qCdcTimetravel, qCdcTimetravelOracle),
+    GraftQuery("q_cdc_flatten", qCdcFlattenImpl, qCdcFlattenOracle),
+    GraftQuery("q_cdc_decimal", qCdcDecimal, qCdcDecimalOracle),
+    GraftQuery("q_cdc_stringify", qCdcStringify, qCdcStringifyOracle),
+    GraftQuery("q_cdc_apply", qCdcApply, qCdcApplyOracle),
+    GraftQuery("q_stream_cdc_apply", qStreamCdcApply, qCdcApplyOracle),
+    GraftQuery("q_cdc_scd2", qCdcScd2, qCdcScd2Oracle),
   )
 }

@@ -3,6 +3,7 @@ package graft.convert
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftQuery
 import graft.avro.ConvertMode
 
 /** Conversion-path queries for the driver gate. These synthesize their own
@@ -279,14 +280,6 @@ object ConvertQueries {
           ORDER BY tbl""")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_cdc_convert_roundtrip" -> (qCdcConvertRoundtrip _),
-    "q_cdc_schema_evolution" -> (qCdcSchemaEvolution _),
-    "q_cdc_convert_exact" -> (qCdcConvertExact _),
-    "q_cdc_dsv2_scan" -> (qCdcDsv2Scan _),
-    "q_cdc_catalog" -> (qCdcCatalog _),
-  )
-
   val qCdcCatalogOracle: String =
     s"""WITH w AS (
         SELECT 'orders' AS tbl, * FROM
@@ -297,11 +290,11 @@ object ConvertQueries {
       SELECT tbl, count(*) AS n, sum(qty)::BIGINT AS total_qty
       FROM w GROUP BY tbl ORDER BY tbl"""
 
-  val oracles: Map[String, String] = Map(
-    "q_cdc_convert_roundtrip" -> qCdcConvertRoundtripOracle,
-    "q_cdc_schema_evolution" -> qCdcSchemaEvolutionOracle,
-    "q_cdc_convert_exact" -> qCdcConvertExactOracle,
-    "q_cdc_dsv2_scan" -> qCdcDsv2ScanOracle,
-    "q_cdc_catalog" -> qCdcCatalogOracle,
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q_cdc_convert_roundtrip", qCdcConvertRoundtrip, qCdcConvertRoundtripOracle),
+    GraftQuery("q_cdc_schema_evolution", qCdcSchemaEvolution, qCdcSchemaEvolutionOracle),
+    GraftQuery("q_cdc_convert_exact", qCdcConvertExact, qCdcConvertExactOracle),
+    GraftQuery("q_cdc_dsv2_scan", qCdcDsv2Scan, qCdcDsv2ScanOracle),
+    GraftQuery("q_cdc_catalog", qCdcCatalog, qCdcCatalogOracle),
   )
 }

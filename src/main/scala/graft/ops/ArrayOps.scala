@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftQuery
+
 /** Array / higher-order-function surface over the embedding table: the
   * lambda-function family (`transform`, `filter`, `aggregate`, `zip_with`)
   * plus ordered array ops (`array_sort`, `array_min/max`) and positional
@@ -124,15 +126,9 @@ object ArrayOps {
         (2 * sum(cnt))::BIGINT AS n_doubled
       FROM g GROUP BY p_brand ORDER BY p_brand"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_array_funcs" -> (qArrayFuncs _),
-    "q_unnest_ordinal" -> (qUnnestOrdinal _),
-    "q_map_funcs" -> (qMapFuncs _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_array_funcs" -> qArrayFuncsOracle,
-    "q_unnest_ordinal" -> qUnnestOrdinalOracle,
-    "q_map_funcs" -> qMapFuncsOracle,
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q_array_funcs", qArrayFuncs, qArrayFuncsOracle),
+    GraftQuery("q_unnest_ordinal", qUnnestOrdinal, qUnnestOrdinalOracle),
+    GraftQuery("q_map_funcs", qMapFuncs, qMapFuncsOracle),
   )
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftQuery
+
 /** Deduplication operators for training-data pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard.
   *
@@ -1661,28 +1663,6 @@ object Dedup {
         true AS calib_ok
       FROM g ORDER BY bucket"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_dedup_lsh_calibration" -> (qDedupLshCalibration _),
-    "q_dedup_url" -> (qDedupUrl _),
-    "q_dedup_substring" -> (qDedupSubstring _),
-    "q_dedup_substring_incr" -> (qDedupSubstringIncr _),
-    "q_dedup_exact" -> (qDedupExact _),
-    "q_dedup_minhash" -> (qDedupMinhash _),
-    "q_dedup_simhash" -> (qDedupSimhash _),
-    "q_dedup_ngram" -> (qDedupNgram _),
-    "q_dedup_keeplist" -> (qDedupKeeplist _),
-    "q_dedup_clusters" -> (qDedupClusters _),
-    "q_dedup_cc_star" -> (qDedupCcStar _),
-    "q_dedup_paragraph" -> (qDedupParagraph _),
-    "q_dedup_incremental" -> (qDedupIncremental _),
-    "q_dedup_cc_incr" -> (qDedupCcIncr _),
-    "q_dedup_bloom" -> (qDedupBloom _),
-    "q_dedup_containment" -> (qDedupContainment _),
-    "q_text_novelty" -> (qTextNovelty _),
-    "q_dedup_ppjoin" -> (qDedupPpjoin _),
-    "q_dedup_canonical" -> (qDedupCanonical _),
-  )
-
   /** q_dedup_simhash keeps the exact-set oracle under word blocking: the
     * symmetric multiprobe guarantees recall to hamming 11, which covers
     * the measured true-pair maximum (11, with min-word-hamming ≤ 2 at
@@ -1690,25 +1670,25 @@ object Dedup {
     * emitted set equals the exact jaccard-threshold pair set on this
     * corpus (OpsSpec asserts set equality vs minhash too).
     */
-  val oracles: Map[String, String] = Map(
-    "q_dedup_lsh_calibration" -> qDedupLshCalibrationOracle,
-    "q_dedup_url" -> qDedupUrlOracle,
-    "q_dedup_substring" -> qDedupSubstringOracle,
-    "q_dedup_substring_incr" -> qDedupSubstringIncrOracle,
-    "q_dedup_exact" -> qDedupExactOracle,
-    "q_dedup_minhash" -> exactPairOracle,
-    "q_dedup_simhash" -> exactPairOracle,
-    "q_dedup_ngram" -> qDedupNgramOracle,
-    "q_dedup_keeplist" -> qDedupKeeplistOracle,
-    "q_dedup_clusters" -> qDedupClustersOracle,
-    "q_dedup_cc_star" -> qDedupClustersOracle,
-    "q_dedup_paragraph" -> qDedupParagraphOracle,
-    "q_dedup_incremental" -> qDedupIncrementalOracle,
-    "q_dedup_cc_incr" -> qDedupCcIncrOracle,
-    "q_dedup_bloom" -> qDedupBloomOracle,
-    "q_dedup_containment" -> qDedupContainmentOracle,
-    "q_text_novelty" -> qTextNoveltyOracle,
-    "q_dedup_ppjoin" -> qDedupPpjoinOracle,
-    "q_dedup_canonical" -> qDedupCanonicalOracle,
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q_dedup_lsh_calibration", qDedupLshCalibration, qDedupLshCalibrationOracle),
+    GraftQuery("q_dedup_url", qDedupUrl, qDedupUrlOracle),
+    GraftQuery("q_dedup_substring", qDedupSubstring, qDedupSubstringOracle),
+    GraftQuery("q_dedup_substring_incr", qDedupSubstringIncr, qDedupSubstringIncrOracle),
+    GraftQuery("q_dedup_exact", qDedupExact, qDedupExactOracle),
+    GraftQuery("q_dedup_minhash", qDedupMinhash, exactPairOracle),
+    GraftQuery("q_dedup_simhash", qDedupSimhash, exactPairOracle),
+    GraftQuery("q_dedup_ngram", qDedupNgram, qDedupNgramOracle),
+    GraftQuery("q_dedup_keeplist", qDedupKeeplist, qDedupKeeplistOracle),
+    GraftQuery("q_dedup_clusters", qDedupClusters, qDedupClustersOracle),
+    GraftQuery("q_dedup_cc_star", qDedupCcStar, qDedupClustersOracle),
+    GraftQuery("q_dedup_paragraph", qDedupParagraph, qDedupParagraphOracle),
+    GraftQuery("q_dedup_incremental", qDedupIncremental, qDedupIncrementalOracle),
+    GraftQuery("q_dedup_cc_incr", qDedupCcIncr, qDedupCcIncrOracle),
+    GraftQuery("q_dedup_bloom", qDedupBloom, qDedupBloomOracle),
+    GraftQuery("q_dedup_containment", qDedupContainment, qDedupContainmentOracle),
+    GraftQuery("q_text_novelty", qTextNovelty, qTextNoveltyOracle),
+    GraftQuery("q_dedup_ppjoin", qDedupPpjoin, qDedupPpjoinOracle),
+    GraftQuery("q_dedup_canonical", qDedupCanonical, qDedupCanonicalOracle),
   )
 }

@@ -7,6 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.GraftQuery
+
 /** Event-time operators over the `events` table: tumbling, sliding, and
   * session windows, an as-of join, and a Structured Streaming execution of
   * the tumbling aggregation (complete mode + memory sink, driven to
@@ -1639,69 +1641,36 @@ object EventOps {
       FROM sm ORDER BY event_type, dte"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_events_concurrency" -> (qEventsConcurrency _),
-    "q_join_pit" -> (qJoinPit _),
-    "q_events_seasonality" -> (qEventsSeasonality _),
-    "q_window_ewma" -> (qWindowEwma _),
-    "q_events_ltv" -> (qEventsLtv _),
-    "q_events_tumbling" -> (qEventsTumbling _),
-    "q_events_sliding" -> (qEventsSliding _),
-    "q_events_session" -> (qEventsSession _),
-    "q_events_asof" -> (qEventsAsof _),
-    "q_events_asof_nearest" -> (qEventsAsofNearest _),
-    "q_events_funnel" -> (qEventsFunnel _),
-    "q_json_funcs" -> (qJsonFuncs _),
-    "q_events_gapfill" -> (qEventsGapfill _),
-    "q_events_cum_users" -> (qEventsCumulativeUsers _),
-    "q_events_retention" -> (qEventsRetention _),
-    "q_events_anomaly" -> (qEventsAnomaly _),
-    "q_observe_metrics" -> (qObserveMetrics _),
-    "q_events_active_users" -> (qEventsActiveUsers _),
-    "q_events_paths" -> (qEventsPaths _),
-    "q_events_pagerank" -> (qEventsPagerank _),
-    "q_events_attribution" -> (qEventsAttribution _),
-    "q_events_engagement" -> (qEventsEngagement _),
-    "q_events_streaks" -> (qEventsStreaks _),
-    "q_partitioned_layout" -> (qPartitionedLayout _),
-    "q_join_dpp" -> (qJoinDpp _),
-    "q_events_timetoconvert" -> (qEventsTimeToConvert _),
-    "q_skew_diagnose" -> (qSkewDiagnose _),
-    "q_events_forecast" -> (qEventsForecast _),
-    "q_events_pattern" -> (qEventsPattern _),
-    "q_variant_json" -> (qVariantJson _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_events_concurrency" -> qEventsConcurrencyOracle,
-    "q_join_pit" -> qJoinPitOracle,
-    "q_events_seasonality" -> qEventsSeasonalityOracle,
-    "q_window_ewma" -> qWindowEwmaOracle,
-    "q_events_ltv" -> qEventsLtvOracle,
-    "q_events_tumbling" -> qEventsTumblingOracle,
-    "q_events_sliding" -> qEventsSlidingOracle,
-    "q_events_session" -> qEventsSessionOracle,
-    "q_events_asof" -> qEventsAsofOracle,
-    "q_events_asof_nearest" -> qEventsAsofNearestOracle,
-    "q_events_funnel" -> qEventsFunnelOracle,
-    "q_json_funcs" -> qJsonFuncsOracle,
-    "q_events_gapfill" -> qEventsGapfillOracle,
-    "q_events_cum_users" -> qEventsCumulativeUsersOracle,
-    "q_events_retention" -> qEventsRetentionOracle,
-    "q_events_anomaly" -> qEventsAnomalyOracle,
-    "q_observe_metrics" -> qObserveMetricsOracle,
-    "q_events_active_users" -> qEventsActiveUsersOracle,
-    "q_events_paths" -> qEventsPathsOracle,
-    "q_events_pagerank" -> qEventsPagerankOracle,
-    "q_events_attribution" -> qEventsAttributionOracle,
-    "q_events_engagement" -> qEventsEngagementOracle,
-    "q_events_streaks" -> qEventsStreaksOracle,
-    "q_partitioned_layout" -> qPartitionedLayoutOracle,
-    "q_join_dpp" -> qJoinDppOracle,
-    "q_events_timetoconvert" -> qEventsTimeToConvertOracle,
-    "q_skew_diagnose" -> qSkewDiagnoseOracle,
-    "q_events_forecast" -> qEventsForecastOracle,
-    "q_events_pattern" -> qEventsPatternOracle,
-    "q_variant_json" -> qVariantJsonOracle,
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q_events_concurrency", qEventsConcurrency, qEventsConcurrencyOracle),
+    GraftQuery("q_join_pit", qJoinPit, qJoinPitOracle),
+    GraftQuery("q_events_seasonality", qEventsSeasonality, qEventsSeasonalityOracle),
+    GraftQuery("q_window_ewma", qWindowEwma, qWindowEwmaOracle),
+    GraftQuery("q_events_ltv", qEventsLtv, qEventsLtvOracle),
+    GraftQuery("q_events_tumbling", qEventsTumbling, qEventsTumblingOracle),
+    GraftQuery("q_events_sliding", qEventsSliding, qEventsSlidingOracle),
+    GraftQuery("q_events_session", qEventsSession, qEventsSessionOracle),
+    GraftQuery("q_events_asof", qEventsAsof, qEventsAsofOracle),
+    GraftQuery("q_events_asof_nearest", qEventsAsofNearest, qEventsAsofNearestOracle),
+    GraftQuery("q_events_funnel", qEventsFunnel, qEventsFunnelOracle),
+    GraftQuery("q_json_funcs", qJsonFuncs, qJsonFuncsOracle),
+    GraftQuery("q_events_gapfill", qEventsGapfill, qEventsGapfillOracle),
+    GraftQuery("q_events_cum_users", qEventsCumulativeUsers, qEventsCumulativeUsersOracle),
+    GraftQuery("q_events_retention", qEventsRetention, qEventsRetentionOracle),
+    GraftQuery("q_events_anomaly", qEventsAnomaly, qEventsAnomalyOracle),
+    GraftQuery("q_observe_metrics", qObserveMetrics, qObserveMetricsOracle),
+    GraftQuery("q_events_active_users", qEventsActiveUsers, qEventsActiveUsersOracle),
+    GraftQuery("q_events_paths", qEventsPaths, qEventsPathsOracle),
+    GraftQuery("q_events_pagerank", qEventsPagerank, qEventsPagerankOracle),
+    GraftQuery("q_events_attribution", qEventsAttribution, qEventsAttributionOracle),
+    GraftQuery("q_events_engagement", qEventsEngagement, qEventsEngagementOracle),
+    GraftQuery("q_events_streaks", qEventsStreaks, qEventsStreaksOracle),
+    GraftQuery("q_partitioned_layout", qPartitionedLayout, qPartitionedLayoutOracle),
+    GraftQuery("q_join_dpp", qJoinDpp, qJoinDppOracle),
+    GraftQuery("q_events_timetoconvert", qEventsTimeToConvert, qEventsTimeToConvertOracle),
+    GraftQuery("q_skew_diagnose", qSkewDiagnose, qSkewDiagnoseOracle),
+    GraftQuery("q_events_forecast", qEventsForecast, qEventsForecastOracle),
+    GraftQuery("q_events_pattern", qEventsPattern, qEventsPatternOracle),
+    GraftQuery("q_variant_json", qVariantJson, qVariantJsonOracle),
   )
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftQuery
+
 /** Statistical and series readouts over the `events` table, split out of
   * [[EventOps]] along the family seam (round 16, zero behavior change):
   * PSI distribution drift, survival analysis (life table + exact
@@ -1475,45 +1477,24 @@ object EventStats {
           (t1::HUGEINT * t2)::DOUBLE, 6) AS d6
       FROM tot"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_stats_anova" -> (qStatsAnova _),
-    "q_stats_bootstrap" -> (qStatsBootstrap _),
-    "q_events_markov" -> (qEventsMarkov _),
-    "q_stats_linreg" -> (qStatsLinreg _),
-    "q_stats_ttest" -> (qStatsTtest _),
-    "q_series_lttb" -> (qSeriesLttb _),
-    "q_series_m4" -> (qSeriesM4 _),
-    "q_stats_poisson" -> (qStatsPoisson _),
-    "q_stats_fdr" -> (qStatsFdr _),
-    "q_stats_gini" -> (qStatsGini _),
-    "q_events_did" -> (qEventsDid _),
-    "q_stats_ks" -> (qStatsKs _),
-    "q_events_changepoint" -> (qEventsChangepoint _),
-    "q_events_bots" -> (qEventsBots _),
-    "q_stats_drift" -> (qStatsDrift _),
-    "q_events_survival" -> (qEventsSurvival _),
-    "q_sql_recursive" -> (qSqlRecursive _),
-    "q_events_abtest" -> (qEventsAbtest _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_stats_anova" -> qStatsAnovaOracle,
-    "q_stats_bootstrap" -> qStatsBootstrapOracle,
-    "q_events_markov" -> qEventsMarkovOracle,
-    "q_stats_linreg" -> qStatsLinregOracle,
-    "q_stats_ttest" -> qStatsTtestOracle,
-    "q_series_lttb" -> qSeriesLttbOracle,
-    "q_series_m4" -> qSeriesM4Oracle,
-    "q_stats_poisson" -> qStatsPoissonOracle,
-    "q_stats_fdr" -> qStatsFdrOracle,
-    "q_stats_gini" -> qStatsGiniOracle,
-    "q_events_did" -> qEventsDidOracle,
-    "q_stats_ks" -> qStatsKsOracle,
-    "q_events_changepoint" -> qEventsChangepointOracle,
-    "q_events_bots" -> qEventsBotsOracle,
-    "q_stats_drift" -> qStatsDriftOracle,
-    "q_events_survival" -> qEventsSurvivalOracle,
-    "q_sql_recursive" -> qSqlRecursiveOracle,
-    "q_events_abtest" -> qEventsAbtestOracle,
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q_stats_anova", qStatsAnova, qStatsAnovaOracle),
+    GraftQuery("q_stats_bootstrap", qStatsBootstrap, qStatsBootstrapOracle),
+    GraftQuery("q_events_markov", qEventsMarkov, qEventsMarkovOracle),
+    GraftQuery("q_stats_linreg", qStatsLinreg, qStatsLinregOracle),
+    GraftQuery("q_stats_ttest", qStatsTtest, qStatsTtestOracle),
+    GraftQuery("q_series_lttb", qSeriesLttb, qSeriesLttbOracle),
+    GraftQuery("q_series_m4", qSeriesM4, qSeriesM4Oracle),
+    GraftQuery("q_stats_poisson", qStatsPoisson, qStatsPoissonOracle),
+    GraftQuery("q_stats_fdr", qStatsFdr, qStatsFdrOracle),
+    GraftQuery("q_stats_gini", qStatsGini, qStatsGiniOracle),
+    GraftQuery("q_events_did", qEventsDid, qEventsDidOracle),
+    GraftQuery("q_stats_ks", qStatsKs, qStatsKsOracle),
+    GraftQuery("q_events_changepoint", qEventsChangepoint, qEventsChangepointOracle),
+    GraftQuery("q_events_bots", qEventsBots, qEventsBotsOracle),
+    GraftQuery("q_stats_drift", qStatsDrift, qStatsDriftOracle),
+    GraftQuery("q_events_survival", qEventsSurvival, qEventsSurvivalOracle),
+    GraftQuery("q_sql_recursive", qSqlRecursive, qSqlRecursiveOracle),
+    GraftQuery("q_events_abtest", qEventsAbtest, qEventsAbtestOracle),
   )
 }

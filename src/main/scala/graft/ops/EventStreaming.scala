@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.GraftQuery
+
 /** Structured Streaming executions of the event-table operators — the
   * `readStream` → stateful transform → memory-sink queries split out of
   * [[EventOps]] along the family seam (round 16, zero behavior change):
@@ -872,29 +874,16 @@ object EventStreaming {
     EventStats.abtestFinish(exposure, conv)
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_stream_late_data" -> (qStreamLateData _),
-    "q_stream_tumbling" -> (qStreamTumbling _),
-    "q_stream_recovery" -> (qStreamRecovery _),
-    "q_stream_session" -> (qStreamSession _),
-    "q_stream_dedup" -> (qStreamDedup _),
-    "q_stream_join" -> (qStreamJoin _),
-    "q_stream_outer_join" -> (qStreamOuterJoin _),
-    "q_stream_static_join" -> (qStreamStaticJoin _),
-    "q_stream_drift" -> (qStreamDrift _),
-    "q_stream_abtest" -> (qStreamAbtest _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_stream_late_data" -> qStreamLateDataOracle,
-    "q_stream_tumbling" -> EventOps.qEventsTumblingOracle,
-    "q_stream_recovery" -> qStreamRecoveryOracle,
-    "q_stream_session" -> qStreamSessionOracle,
-    "q_stream_dedup" -> qStreamDedupOracle,
-    "q_stream_join" -> qStreamJoinOracle,
-    "q_stream_outer_join" -> qStreamOuterJoinOracle,
-    "q_stream_static_join" -> qStreamStaticJoinOracle,
-    "q_stream_drift" -> EventStats.qStatsDriftOracle,
-    "q_stream_abtest" -> EventStats.qEventsAbtestOracle,
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q_stream_late_data", qStreamLateData, qStreamLateDataOracle),
+    GraftQuery("q_stream_tumbling", qStreamTumbling, EventOps.qEventsTumblingOracle),
+    GraftQuery("q_stream_recovery", qStreamRecovery, qStreamRecoveryOracle),
+    GraftQuery("q_stream_session", qStreamSession, qStreamSessionOracle),
+    GraftQuery("q_stream_dedup", qStreamDedup, qStreamDedupOracle),
+    GraftQuery("q_stream_join", qStreamJoin, qStreamJoinOracle),
+    GraftQuery("q_stream_outer_join", qStreamOuterJoin, qStreamOuterJoinOracle),
+    GraftQuery("q_stream_static_join", qStreamStaticJoin, qStreamStaticJoinOracle),
+    GraftQuery("q_stream_drift", qStreamDrift, EventStats.qStatsDriftOracle),
+    GraftQuery("q_stream_abtest", qStreamAbtest, EventStats.qEventsAbtestOracle),
   )
 }

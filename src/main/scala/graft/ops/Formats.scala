@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.GraftQuery
+
 /** Non-parquet source/sink surface: CSV and JSON-lines, the two text
   * formats every ingestion edge still speaks.
   *
@@ -309,21 +311,12 @@ object Formats {
         count(*) n, min(doc_id) min_doc, max(doc_id) max_doc
       FROM j GROUP BY 1 ORDER BY 1"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_csv_json_roundtrip" -> (qCsvJsonRoundtrip _),
-    "q_malformed_quarantine" -> (qMalformedQuarantine _),
-    "q_orc_roundtrip" -> (qOrcRoundtrip _),
-    "q_binary_source" -> (qBinarySource _),
-    "q_snapshot_diff" -> (qSnapshotDiff _),
-    "q_compact_files" -> (qCompactFiles _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_csv_json_roundtrip" -> qCsvJsonRoundtripOracle,
-    "q_malformed_quarantine" -> qMalformedQuarantineOracle,
-    "q_orc_roundtrip" -> qOrcRoundtripOracle,
-    "q_binary_source" -> qBinarySourceOracle,
-    "q_snapshot_diff" -> qSnapshotDiffOracle,
-    "q_compact_files" -> qCompactFilesOracle,
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q_csv_json_roundtrip", qCsvJsonRoundtrip, qCsvJsonRoundtripOracle),
+    GraftQuery("q_malformed_quarantine", qMalformedQuarantine, qMalformedQuarantineOracle),
+    GraftQuery("q_orc_roundtrip", qOrcRoundtrip, qOrcRoundtripOracle),
+    GraftQuery("q_binary_source", qBinarySource, qBinarySourceOracle),
+    GraftQuery("q_snapshot_diff", qSnapshotDiff, qSnapshotDiffOracle),
+    GraftQuery("q_compact_files", qCompactFiles, qCompactFilesOracle),
   )
 }

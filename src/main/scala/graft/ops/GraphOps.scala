@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftQuery
+
 /** Distributed graph analytics over graphs derived from the TPC-H-ish
   * tables. Complements the fixed-point iteration family (PageRank in
   * [[EventOps]], label propagation / star contraction in [[Dedup]]) with
@@ -784,25 +786,14 @@ object GraphOps {
       FROM f ORDER BY community"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_graph_conductance" -> (qGraphConductance _),
-    "q_graph_triangles" -> (qGraphTriangles _),
-    "q_graph_kcore" -> (qGraphKcore _),
-    "q_graph_labelprop" -> (qGraphLabelprop _),
-    "q_graph_modularity" -> (qGraphModularity _),
-    "q_graph_linkpred" -> (qGraphLinkpred _),
-    "q_graph_bfs" -> (qGraphBfs _),
-    "q_market_basket" -> (qMarketBasket _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_graph_conductance" -> qGraphConductanceOracle,
-    "q_graph_triangles" -> qGraphTrianglesOracle,
-    "q_graph_kcore" -> qGraphKcoreOracle,
-    "q_graph_labelprop" -> qGraphLabelpropOracle,
-    "q_graph_modularity" -> qGraphModularityOracle,
-    "q_graph_linkpred" -> qGraphLinkpredOracle,
-    "q_graph_bfs" -> qGraphBfsOracle,
-    "q_market_basket" -> qMarketBasketOracle,
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q_graph_conductance", qGraphConductance, qGraphConductanceOracle),
+    GraftQuery("q_graph_triangles", qGraphTriangles, qGraphTrianglesOracle),
+    GraftQuery("q_graph_kcore", qGraphKcore, qGraphKcoreOracle),
+    GraftQuery("q_graph_labelprop", qGraphLabelprop, qGraphLabelpropOracle),
+    GraftQuery("q_graph_modularity", qGraphModularity, qGraphModularityOracle),
+    GraftQuery("q_graph_linkpred", qGraphLinkpred, qGraphLinkpredOracle),
+    GraftQuery("q_graph_bfs", qGraphBfs, qGraphBfsOracle),
+    GraftQuery("q_market_basket", qMarketBasket, qMarketBasketOracle),
   )
 }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.GraftQuery
+
 /** Data-layout operators: multi-dimensional clustering for scan pruning.
   *
   * Parquet keeps min/max statistics per row group and Spark pushes
@@ -345,13 +347,9 @@ object Layout {
       FROM g ORDER BY bucket"""
   }
 
-  val queries: Map[String, (org.apache.spark.sql.SparkSession, String) => DataFrame] =
-    Map("q_layout_zorder" -> (qLayoutZorder _),
-      "q_layout_hilbert" -> (qLayoutHilbert _),
-      "q_layout_skipping" -> (qLayoutSkipping _))
-
-  val oracles: Map[String, String] =
-    Map("q_layout_zorder" -> qLayoutZorderOracle,
-      "q_layout_hilbert" -> qLayoutHilbertOracle,
-      "q_layout_skipping" -> qLayoutSkippingOracle)
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q_layout_zorder", qLayoutZorder, qLayoutZorderOracle),
+    GraftQuery("q_layout_hilbert", qLayoutHilbert, qLayoutHilbertOracle),
+    GraftQuery("q_layout_skipping", qLayoutSkipping, qLayoutSkippingOracle),
+  )
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.GraftQuery
+
 /** Multimodal-column plumbing: treat image/audio/video payloads as opaque
   * `BINARY` columns with typed metadata, and run decode / feature-extract /
   * frame-sample as partition-wise batch transforms.
@@ -970,33 +972,18 @@ object Multimodal {
       FROM d JOIN e USING (doc_id)
       GROUP BY lang ORDER BY lang"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_layout_comodal" -> (qLayoutComodal _),
-    "q_multimodal_meta" -> (qMultimodalMeta _),
-    "q_multimodal_audio" -> (qMultimodalAudio _),
-    "q_multimodal_video" -> (qMultimodalVideo _),
-    "q_multimodal_frames" -> (qMultimodalFrames _),
-    "q_multimodal_resize" -> (qMultimodalResize _),
-    "q_image_dedup" -> (qImageDedup _),
-    "q_image_neardup" -> (qImageNeardup _),
-    "q_audio_pcm" -> (qAudioPcm _),
-    "q_multimodal_vad" -> (qMultimodalVad _),
-    "q_multimodal_tar" -> (qMultimodalTar _),
-    "q_multimodal_shard_write" -> (qMultimodalShardWrite _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_layout_comodal" -> qLayoutComodalOracle,
-    "q_multimodal_meta" -> qMultimodalMetaOracle,
-    "q_multimodal_audio" -> qMultimodalAudioOracle,
-    "q_multimodal_video" -> qMultimodalVideoOracle,
-    "q_multimodal_frames" -> qMultimodalFramesOracle,
-    "q_multimodal_resize" -> qMultimodalResizeOracle,
-    "q_image_dedup" -> qImageDedupOracle,
-    "q_image_neardup" -> qImageNeardupOracle,
-    "q_audio_pcm" -> qAudioPcmOracle,
-    "q_multimodal_vad" -> qMultimodalVadOracle,
-    "q_multimodal_tar" -> qMultimodalTarOracle,
-    "q_multimodal_shard_write" -> qMultimodalShardWriteOracle,
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q_layout_comodal", qLayoutComodal, qLayoutComodalOracle),
+    GraftQuery("q_multimodal_meta", qMultimodalMeta, qMultimodalMetaOracle),
+    GraftQuery("q_multimodal_audio", qMultimodalAudio, qMultimodalAudioOracle),
+    GraftQuery("q_multimodal_video", qMultimodalVideo, qMultimodalVideoOracle),
+    GraftQuery("q_multimodal_frames", qMultimodalFrames, qMultimodalFramesOracle),
+    GraftQuery("q_multimodal_resize", qMultimodalResize, qMultimodalResizeOracle),
+    GraftQuery("q_image_dedup", qImageDedup, qImageDedupOracle),
+    GraftQuery("q_image_neardup", qImageNeardup, qImageNeardupOracle),
+    GraftQuery("q_audio_pcm", qAudioPcm, qAudioPcmOracle),
+    GraftQuery("q_multimodal_vad", qMultimodalVad, qMultimodalVadOracle),
+    GraftQuery("q_multimodal_tar", qMultimodalTar, qMultimodalTarOracle),
+    GraftQuery("q_multimodal_shard_write", qMultimodalShardWrite, qMultimodalShardWriteOracle),
   )
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftQuery
+
 /** Relational operator coverage over the TPC-H-ish test tables: scans with
   * pushdown, aggregations, joins of every flavor, window functions,
   * rollup/cube, set operations, subqueries, pivot, top-k.
@@ -1519,93 +1521,48 @@ object Relational {
       WHERE o_orderpriority = '1-URGENT'
       GROUP BY yr, mo ORDER BY yr, mo"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_join_bloom" -> (qJoinBloom _),
-    "q_window_firstlast" -> (qWindowFirstLast _),
-    "q_join_broadcast" -> (qJoinBroadcast _),
-    "q_join_bucketed" -> (qJoinBucketed _),
-    "q_semi_join" -> (qSemiJoin _),
-    "q_anti_join" -> (qAntiJoin _),
-    "q_outer_join_agg" -> (qOuterJoinAgg _),
-    "q_window_rank" -> (qWindowRank _),
-    "q_window_running" -> (qWindowRunning _),
-    "q_window_lag" -> (qWindowLag _),
-    "q_window_distinct" -> (qWindowDistinct _),
-    "q_rollup" -> (qRollup _),
-    "q_cube" -> (qCube _),
-    "q_set_ops" -> (qSetOps _),
-    "q_distinct_agg" -> (qDistinctAgg _),
-    "q_stats_corr" -> (qStatsCorr _),
-    "q_sql_pipe" -> (qSqlPipe _),
-    "q_lateral_join" -> (qLateralJoin _),
-    "q_unpivot" -> (qUnpivot _),
-    "q_skyline" -> (qSkyline _),
-    "q_fuzzy_match" -> (qFuzzyMatch _),
-    "q_scalar_subquery" -> (qScalarSubquery _),
-    "q_case_when" -> (qCaseWhen _),
-    "q_string_funcs" -> (qStringFuncs _),
-    "q_date_funcs" -> (qDateFuncs _),
-    "q_having" -> (qHaving _),
-    "q_pivot" -> (qPivot _),
-    "q_stats" -> (qStats _),
-    "q_geom_mean" -> (qGeomMean _),
-    "q_range_join" -> (qRangeJoin _),
-    "q_salted_join" -> (qSaltedJoin _),
-    "q_topk_agg" -> (qTopkAgg _),
-    "q_typed_dataset" -> (qTypedDataset _),
-    "q_approx_distinct" -> (qApproxDistinct _),
-    "q_sql_surface" -> (qSqlSurface _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_window_range" -> (qWindowRange _),
-    "q_sql_kernels" -> (qSqlKernels _),
-    "q_percentiles" -> (qPercentiles _),
-    "q_quantile_sketch" -> (qQuantileSketch _),
-    "q_window_dist" -> (qWindowDist _),
-    "q_exists_subquery" -> (qExistsSubquery _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_join_bloom" -> qJoinBloomOracle,
-    "q_approx_distinct" -> qApproxDistinctOracle,
-    "q_window_firstlast" -> qWindowFirstLastOracle,
-    "q_join_broadcast" -> qJoinBroadcastOracle,
-    "q_join_bucketed" -> qJoinBucketedOracle,
-    "q_semi_join" -> qSemiJoinOracle,
-    "q_anti_join" -> qAntiJoinOracle,
-    "q_outer_join_agg" -> qOuterJoinAggOracle,
-    "q_window_rank" -> qWindowRankOracle,
-    "q_window_running" -> qWindowRunningOracle,
-    "q_window_lag" -> qWindowLagOracle,
-    "q_window_distinct" -> qWindowDistinctOracle,
-    "q_rollup" -> qRollupOracle,
-    "q_cube" -> qCubeOracle,
-    "q_set_ops" -> qSetOpsOracle,
-    "q_distinct_agg" -> qDistinctAggOracle,
-    "q_stats_corr" -> qStatsCorrOracle,
-    "q_sql_pipe" -> qSqlPipeOracle,
-    "q_lateral_join" -> qLateralJoinOracle,
-    "q_unpivot" -> qUnpivotOracle,
-    "q_skyline" -> qSkylineOracle,
-    "q_fuzzy_match" -> qFuzzyMatchOracle,
-    "q_scalar_subquery" -> qScalarSubqueryOracle,
-    "q_case_when" -> qCaseWhenOracle,
-    "q_string_funcs" -> qStringFuncsOracle,
-    "q_date_funcs" -> qDateFuncsOracle,
-    "q_having" -> qHavingOracle,
-    "q_pivot" -> qPivotOracle,
-    "q_stats" -> qStatsOracle,
-    "q_geom_mean" -> qGeomMeanOracle,
-    "q_range_join" -> qRangeJoinOracle,
-    "q_salted_join" -> qSaltedJoinOracle,
-    "q_topk_agg" -> qTopkAggOracle,
-    "q_typed_dataset" -> qTypedDatasetOracle,
-    "q_sql_surface" -> qSqlSurfaceOracle,
-    "q_grouping_sets" -> qGroupingSetsOracle,
-    "q_window_range" -> qWindowRangeOracle,
-    "q_sql_kernels" -> qSqlKernelsOracle,
-    "q_percentiles" -> qPercentilesOracle,
-    "q_quantile_sketch" -> qQuantileSketchOracle,
-    "q_window_dist" -> qWindowDistOracle,
-    "q_exists_subquery" -> qExistsSubqueryOracle,
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q_join_bloom", qJoinBloom, qJoinBloomOracle),
+    GraftQuery("q_window_firstlast", qWindowFirstLast, qWindowFirstLastOracle),
+    GraftQuery("q_join_broadcast", qJoinBroadcast, qJoinBroadcastOracle),
+    GraftQuery("q_join_bucketed", qJoinBucketed, qJoinBucketedOracle),
+    GraftQuery("q_semi_join", qSemiJoin, qSemiJoinOracle),
+    GraftQuery("q_anti_join", qAntiJoin, qAntiJoinOracle),
+    GraftQuery("q_outer_join_agg", qOuterJoinAgg, qOuterJoinAggOracle),
+    GraftQuery("q_window_rank", qWindowRank, qWindowRankOracle),
+    GraftQuery("q_window_running", qWindowRunning, qWindowRunningOracle),
+    GraftQuery("q_window_lag", qWindowLag, qWindowLagOracle),
+    GraftQuery("q_window_distinct", qWindowDistinct, qWindowDistinctOracle),
+    GraftQuery("q_rollup", qRollup, qRollupOracle),
+    GraftQuery("q_cube", qCube, qCubeOracle),
+    GraftQuery("q_set_ops", qSetOps, qSetOpsOracle),
+    GraftQuery("q_distinct_agg", qDistinctAgg, qDistinctAggOracle),
+    GraftQuery("q_stats_corr", qStatsCorr, qStatsCorrOracle),
+    GraftQuery("q_sql_pipe", qSqlPipe, qSqlPipeOracle),
+    GraftQuery("q_lateral_join", qLateralJoin, qLateralJoinOracle),
+    GraftQuery("q_unpivot", qUnpivot, qUnpivotOracle),
+    GraftQuery("q_skyline", qSkyline, qSkylineOracle),
+    GraftQuery("q_fuzzy_match", qFuzzyMatch, qFuzzyMatchOracle),
+    GraftQuery("q_scalar_subquery", qScalarSubquery, qScalarSubqueryOracle),
+    GraftQuery("q_case_when", qCaseWhen, qCaseWhenOracle),
+    GraftQuery("q_string_funcs", qStringFuncs, qStringFuncsOracle),
+    GraftQuery("q_date_funcs", qDateFuncs, qDateFuncsOracle),
+    GraftQuery("q_having", qHaving, qHavingOracle),
+    GraftQuery("q_pivot", qPivot, qPivotOracle),
+    GraftQuery("q_stats", qStats, qStatsOracle),
+    GraftQuery("q_geom_mean", qGeomMean, qGeomMeanOracle),
+    GraftQuery("q_range_join", qRangeJoin, qRangeJoinOracle),
+    GraftQuery("q_salted_join", qSaltedJoin, qSaltedJoinOracle),
+    GraftQuery("q_topk_agg", qTopkAgg, qTopkAggOracle),
+    GraftQuery("q_typed_dataset", qTypedDataset, qTypedDatasetOracle),
+    GraftQuery("q_approx_distinct", qApproxDistinct, qApproxDistinctOracle),
+    GraftQuery("q_sql_surface", qSqlSurface, qSqlSurfaceOracle),
+    GraftQuery("q_grouping_sets", qGroupingSets, qGroupingSetsOracle),
+    GraftQuery("q_window_range", qWindowRange, qWindowRangeOracle),
+    GraftQuery("q_sql_kernels", qSqlKernels, qSqlKernelsOracle),
+    GraftQuery("q_percentiles", qPercentiles, qPercentilesOracle),
+    GraftQuery("q_quantile_sketch", qQuantileSketch, qQuantileSketchOracle),
+    GraftQuery("q_window_dist", qWindowDist, qWindowDistOracle),
+    GraftQuery("q_exists_subquery", qExistsSubquery, qExistsSubqueryOracle),
   )
 }

@@ -8,6 +8,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftQuery
+
 /** Data-quality, privacy and sketch-maintenance operators, split out of
   * [[Relational]] along the family seam (round 16, zero behavior
   * change): incremental materialized-view maintenance, declarative
@@ -836,33 +838,18 @@ object RelationalQuality {
       FROM labels l JOIN names nm ON nm.p_name = l.node
       GROUP BY 1 ORDER BY canonical"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_entity_resolve" -> (qEntityResolve _),
-    "q_sketch_joinsize" -> (qSketchJoinsize _),
-    "q_privacy_dp" -> (qPrivacyDp _),
-    "q_privacy_ldp" -> (qPrivacyLdp _),
-    "q_gdpr_forget" -> (qGdprForget _),
-    "q_dq_constraints" -> (qDqConstraints _),
-    "q_privacy_kanon" -> (qPrivacyKanon _),
-    "q_sketch_merge" -> (qSketchMerge _),
-    "q_spatial_join" -> (qSpatialJoin _),
-    "q_rfm_segments" -> (qRfmSegments _),
-    "q_window_median" -> (qWindowMedian _),
-    "q_matview_merge" -> (qMatviewMerge _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_entity_resolve" -> qEntityResolveOracle,
-    "q_sketch_joinsize" -> qSketchJoinsizeOracle,
-    "q_privacy_dp" -> qPrivacyDpOracle,
-    "q_privacy_ldp" -> qPrivacyLdpOracle,
-    "q_gdpr_forget" -> qGdprForgetOracle,
-    "q_dq_constraints" -> qDqConstraintsOracle,
-    "q_privacy_kanon" -> qPrivacyKanonOracle,
-    "q_sketch_merge" -> qSketchMergeOracle,
-    "q_spatial_join" -> qSpatialJoinOracle,
-    "q_rfm_segments" -> qRfmSegmentsOracle,
-    "q_window_median" -> qWindowMedianOracle,
-    "q_matview_merge" -> qMatviewMergeOracle,
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q_entity_resolve", qEntityResolve, qEntityResolveOracle),
+    GraftQuery("q_sketch_joinsize", qSketchJoinsize, qSketchJoinsizeOracle),
+    GraftQuery("q_privacy_dp", qPrivacyDp, qPrivacyDpOracle),
+    GraftQuery("q_privacy_ldp", qPrivacyLdp, qPrivacyLdpOracle),
+    GraftQuery("q_gdpr_forget", qGdprForget, qGdprForgetOracle),
+    GraftQuery("q_dq_constraints", qDqConstraints, qDqConstraintsOracle),
+    GraftQuery("q_privacy_kanon", qPrivacyKanon, qPrivacyKanonOracle),
+    GraftQuery("q_sketch_merge", qSketchMerge, qSketchMergeOracle),
+    GraftQuery("q_spatial_join", qSpatialJoin, qSpatialJoinOracle),
+    GraftQuery("q_rfm_segments", qRfmSegments, qRfmSegmentsOracle),
+    GraftQuery("q_window_median", qWindowMedian, qWindowMedianOracle),
+    GraftQuery("q_matview_merge", qMatviewMerge, qMatviewMergeOracle),
   )
 }

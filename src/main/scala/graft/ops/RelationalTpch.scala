@@ -8,6 +8,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftQuery
+
 /** The TPC-H-shaped analytic queries (q01-q22 adaptations over the test
   * tables), split out of [[Relational]] along the family seam (round 16,
   * zero behavior change). Same conventions as [[Relational]]: identical
@@ -911,55 +913,29 @@ object RelationalTpch {
                 AND o.o_orderdate >= TIMESTAMP '2001-01-01')
       GROUP BY c_nationkey ORDER BY c_nationkey"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing_summary" -> (q01PricingSummary _),
-    "q02_topk_orders" -> (q02TopkOrders _),
-    "q03_shipping_priority" -> (q03ShippingPriority _),
-    "q04_order_priority" -> (q04OrderPriority _),
-    "q05_local_supplier" -> (q05LocalSupplier _),
-    "q06_forecast_revenue" -> (q06ForecastRevenue _),
-    "q07_volume_shipping" -> (q07VolumeShipping _),
-    "q10_returned_items" -> (q10ReturnedItems _),
-    "q13_customer_distribution" -> (q13CustomerDistribution _),
-    "q12_priority_class" -> (q12PriorityClass _),
-    "q14_promo_revenue" -> (q14PromoRevenue _),
-    "q08_market_share" -> (q08MarketShare _),
-    "q15_top_supplier" -> (q15TopSupplier _),
-    "q17_small_qty_revenue" -> (q17SmallQtyRevenue _),
-    "q18_large_orders" -> (q18LargeOrders _),
-    "q19_disjunctive_pred" -> (q19DisjunctivePredicates _),
-    "q02_min_cost_supplier" -> (q02MinCostSupplier _),
-    "q09_product_profit" -> (q09ProductProfit _),
-    "q11_important_parts" -> (q11ImportantParts _),
-    "q16_supplier_diversity" -> (q16SupplierDiversity _),
-    "q20_excess_share_supplier" -> (q20ExcessShareSupplier _),
-    "q21_sole_failing_supplier" -> (q21SoleFailingSupplier _),
-    "q22_dormant_customers" -> (q22DormantCustomers _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q01_pricing_summary" -> q01Oracle,
-    "q02_topk_orders" -> q02Oracle,
-    "q03_shipping_priority" -> q03Oracle,
-    "q04_order_priority" -> q04Oracle,
-    "q05_local_supplier" -> q05Oracle,
-    "q06_forecast_revenue" -> q06Oracle,
-    "q07_volume_shipping" -> q07Oracle,
-    "q10_returned_items" -> q10Oracle,
-    "q13_customer_distribution" -> q13Oracle,
-    "q12_priority_class" -> q12Oracle,
-    "q14_promo_revenue" -> q14Oracle,
-    "q08_market_share" -> q08Oracle,
-    "q15_top_supplier" -> q15Oracle,
-    "q17_small_qty_revenue" -> q17Oracle,
-    "q18_large_orders" -> q18Oracle,
-    "q19_disjunctive_pred" -> q19Oracle,
-    "q02_min_cost_supplier" -> q02MinCostOracle,
-    "q09_product_profit" -> q09Oracle,
-    "q11_important_parts" -> q11Oracle,
-    "q16_supplier_diversity" -> q16Oracle,
-    "q20_excess_share_supplier" -> q20Oracle,
-    "q21_sole_failing_supplier" -> q21Oracle,
-    "q22_dormant_customers" -> q22Oracle,
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q01_pricing_summary", q01PricingSummary, q01Oracle),
+    GraftQuery("q02_topk_orders", q02TopkOrders, q02Oracle),
+    GraftQuery("q03_shipping_priority", q03ShippingPriority, q03Oracle),
+    GraftQuery("q04_order_priority", q04OrderPriority, q04Oracle),
+    GraftQuery("q05_local_supplier", q05LocalSupplier, q05Oracle),
+    GraftQuery("q06_forecast_revenue", q06ForecastRevenue, q06Oracle),
+    GraftQuery("q07_volume_shipping", q07VolumeShipping, q07Oracle),
+    GraftQuery("q10_returned_items", q10ReturnedItems, q10Oracle),
+    GraftQuery("q13_customer_distribution", q13CustomerDistribution, q13Oracle),
+    GraftQuery("q12_priority_class", q12PriorityClass, q12Oracle),
+    GraftQuery("q14_promo_revenue", q14PromoRevenue, q14Oracle),
+    GraftQuery("q08_market_share", q08MarketShare, q08Oracle),
+    GraftQuery("q15_top_supplier", q15TopSupplier, q15Oracle),
+    GraftQuery("q17_small_qty_revenue", q17SmallQtyRevenue, q17Oracle),
+    GraftQuery("q18_large_orders", q18LargeOrders, q18Oracle),
+    GraftQuery("q19_disjunctive_pred", q19DisjunctivePredicates, q19Oracle),
+    GraftQuery("q02_min_cost_supplier", q02MinCostSupplier, q02MinCostOracle),
+    GraftQuery("q09_product_profit", q09ProductProfit, q09Oracle),
+    GraftQuery("q11_important_parts", q11ImportantParts, q11Oracle),
+    GraftQuery("q16_supplier_diversity", q16SupplierDiversity, q16Oracle),
+    GraftQuery("q20_excess_share_supplier", q20ExcessShareSupplier, q20Oracle),
+    GraftQuery("q21_sole_failing_supplier", q21SoleFailingSupplier, q21Oracle),
+    GraftQuery("q22_dormant_customers", q22DormantCustomers, q22Oracle),
   )
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftQuery
+
 /** Similarity search over the embedding table (`vec_id, embedding
   * ARRAY<FLOAT>, label`).
   *
@@ -713,47 +715,49 @@ object Similarity {
     * measured 0.31–0.55 across SFs → spec 0.25; SQ8 measured 1.00
     * everywhere → floor 0.9). The neighbor-list outputs remain available
     * as the public `qAnnLsh`/`qAnnIvf`/... methods (specs assert on them
-    * directly); the certified row is what Verify/Bench exercise.
+    * directly); the certified row is what Verify/Bench exercise. One call
+    * builds the query and its oracle from the same thresholds.
     */
-  private def certifyRecall(
-      algo: String, floorR: Double, specMean: Double,
-      approxFn: (SparkSession, String) => DataFrame)(
-      spark: SparkSession, dir: String): DataFrame = {
-    val exact = qAnnTopk(spark, dir).select(col("a_id"), col("b_id"))
-    val ap = approxFn(spark, dir).select(col("a_id"), col("b_id"))
-    val kEff = exact.groupBy("a_id").agg(count(lit(1)).as("k_eff"))
-    val hits = ap.join(exact, Seq("a_id", "b_id"))
-      .groupBy("a_id").agg(count(lit(1)).as("hits"))
-    val per = kEff.join(hits, Seq("a_id"), "left")
-      .na.fill(0, Seq("hits"))
-      .withColumn("recall", col("hits") / col("k_eff"))
-    per
-      .agg(
-        count(lit(1)).cast("long").as("n_anchors"),
-        sum("k_eff").cast("long").as("n_exact"),
-        sum(when(col("recall") >= floorR, 1L).otherwise(0L))
-          .cast("long").as("n_ge_floor"),
-        when(avg(col("recall")) >= specMean, 1L).otherwise(0L)
-          .cast("long").as("mean_ge_spec"))
-      .select(
-        lit(algo).as("algo"), lit(10L).as("k"),
-        col("n_anchors"), col("n_exact"),
-        lit(floorR).as("floor_recall"), lit(specMean).as("spec_mean"),
-        col("n_ge_floor"), col("mean_ge_spec"))
-  }
-
-  /** Oracle side of [[certifyRecall]]: the anchor counts come from the
-    * embeddings table (not bare literals), the contract columns are the
-    * expected constants. `::BIGINT` everywhere — DuckDB `count(*)` is
-    * BIGINT but arithmetic promotes to HUGEINT, which hash-mismatches.
-    */
-  private def certifyOracle(algo: String, floorR: Double, specMean: Double): String =
+  private def certified(name: String, algo: String, floorR: Double,
+      specMean: Double, approxFn: (SparkSession, String) => DataFrame)
+      : GraftQuery = {
+    def run(spark: SparkSession, dir: String): DataFrame = {
+      val exact = qAnnTopk(spark, dir).select(col("a_id"), col("b_id"))
+      val ap = approxFn(spark, dir).select(col("a_id"), col("b_id"))
+      val kEff = exact.groupBy("a_id").agg(count(lit(1)).as("k_eff"))
+      val hits = ap.join(exact, Seq("a_id", "b_id"))
+        .groupBy("a_id").agg(count(lit(1)).as("hits"))
+      val per = kEff.join(hits, Seq("a_id"), "left")
+        .na.fill(0, Seq("hits"))
+        .withColumn("recall", col("hits") / col("k_eff"))
+      per
+        .agg(
+          count(lit(1)).cast("long").as("n_anchors"),
+          sum("k_eff").cast("long").as("n_exact"),
+          sum(when(col("recall") >= floorR, 1L).otherwise(0L))
+            .cast("long").as("n_ge_floor"),
+          when(avg(col("recall")) >= specMean, 1L).otherwise(0L)
+            .cast("long").as("mean_ge_spec"))
+        .select(
+          lit(algo).as("algo"), lit(10L).as("k"),
+          col("n_anchors"), col("n_exact"),
+          lit(floorR).as("floor_recall"), lit(specMean).as("spec_mean"),
+          col("n_ge_floor"), col("mean_ge_spec"))
+    }
+    // the oracle's anchor counts come from the embeddings table (not bare
+    // literals), the contract columns are the expected constants.
+    // `::BIGINT` everywhere — DuckDB `count(*)` is BIGINT but arithmetic
+    // promotes to HUGEINT, which hash-mismatches. (The SQL's indentation is
+    // part of the oracle text, so it stays where it was.)
+    val oracle =
     s"""WITH a AS (SELECT count(*)::BIGINT AS n FROM embeddings WHERE vec_id < $Anchors)
       SELECT '$algo' AS algo, 10::BIGINT AS k,
         n AS n_anchors, (n * 10)::BIGINT AS n_exact,
         ($floorR)::DOUBLE AS floor_recall, ($specMean)::DOUBLE AS spec_mean,
         n AS n_ge_floor, 1::BIGINT AS mean_ge_spec
       FROM a"""
+    GraftQuery(name, run, oracle)
+  }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023): compare
     * embeddings pairwise only WITHIN a cluster, drop every vector whose
@@ -1477,7 +1481,7 @@ object Similarity {
   }
 
   /** Corpus counts from the table, contract columns as constants —
-    * `::BIGINT` per the [[certifyOracle]] HUGEINT note.
+    * `::BIGINT` per the [[certified]] HUGEINT note.
     */
   val qAnnRefreshOracle: String =
     """WITH c AS (SELECT count(*)::BIGINT AS n,
@@ -1802,55 +1806,29 @@ object Similarity {
       FROM a JOIN m USING (doc_id)
       GROUP BY a.cluster ORDER BY a.cluster"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ann_mmr" -> (qAnnMmr _),
-    "q_cluster_profile" -> (qClusterProfile _),
-    "q_eval_ndcg" -> (qEvalNdcg _),
-    "q_ann_refresh" -> (qAnnRefresh _),
-    "q_embed_neardup" -> (qEmbedNeardup _),
-    "q_embed_centroid_eval" -> (qEmbedCentroidEval _),
-    "q_dedup_semantic" -> (qDedupSemantic _),
-    "q_decontaminate_semantic" -> (qDecontaminateSemantic _),
-    "q_ann_topk" -> (qAnnTopk _),
-    "q_ann_negatives" -> (qAnnNegatives _),
-    "q_ann_lsh" -> (certifyRecall("lsh", 0.0, 0.30, qAnnLsh) _),
-    "q_ann_ivf" -> (certifyRecall("ivf", 0.1, 0.50, qAnnIvf) _),
-    "q_ann_quantized" -> (certifyRecall("sq8", 0.9, 0.90, qAnnQuantized) _),
-    "q_ann_pq" -> (certifyRecall("pq", 0.1, 0.25, qAnnPq) _),
-    "q_ann_ivf_sq8" -> (certifyRecall("ivf_sq8", 0.1, 0.55, qAnnIvfSq8) _),
-    "q_ann_filtered" -> (qAnnFiltered _),
-    "q_ann_mrl" -> (qAnnMrl _),
-    "q_ann_rerank" -> (qAnnRerank _),
-    "q_cluster_kmeans" -> (qClusterKmeans _),
-    "q_sample_kcenter" -> (qSampleKcenter _),
-    "q_embed_covariance" -> (qEmbedCovariance _),
-    "q_embed_whiten" -> (qEmbedWhiten _),
-    "q_embed_pca" -> (qEmbedPca _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_eval_ndcg" -> qEvalNdcgOracle,
-    "q_ann_refresh" -> qAnnRefreshOracle,
-    "q_embed_neardup" -> qEmbedNeardupOracle,
-    "q_embed_centroid_eval" -> qEmbedCentroidEvalOracle,
-    "q_dedup_semantic" -> qDedupSemanticOracle,
-    "q_decontaminate_semantic" -> qDecontaminateSemanticOracle,
-    "q_ann_topk" -> qAnnTopkOracle,
-    "q_ann_mmr" -> qAnnMmrOracle,
-    "q_cluster_profile" -> qClusterProfileOracle,
-    "q_ann_negatives" -> qAnnNegativesOracle,
-    "q_ann_lsh" -> certifyOracle("lsh", 0.0, 0.30),
-    "q_ann_ivf" -> certifyOracle("ivf", 0.1, 0.50),
-    "q_ann_quantized" -> certifyOracle("sq8", 0.9, 0.90),
-    "q_ann_pq" -> certifyOracle("pq", 0.1, 0.25),
-    "q_ann_ivf_sq8" -> certifyOracle("ivf_sq8", 0.1, 0.55),
-    "q_ann_filtered" -> qAnnFilteredOracle,
-    "q_ann_mrl" -> qAnnMrlOracle,
-    "q_ann_rerank" -> qAnnRerankOracle,
-    "q_cluster_kmeans" -> qClusterKmeansOracle,
-    "q_sample_kcenter" -> qSampleKcenterOracle,
-    "q_embed_covariance" -> qEmbedCovarianceOracle,
-    "q_embed_whiten" -> qEmbedWhitenOracle,
-    "q_embed_pca" -> qEmbedPcaOracle,
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q_ann_mmr", qAnnMmr, qAnnMmrOracle),
+    GraftQuery("q_cluster_profile", qClusterProfile, qClusterProfileOracle),
+    GraftQuery("q_eval_ndcg", qEvalNdcg, qEvalNdcgOracle),
+    GraftQuery("q_ann_refresh", qAnnRefresh, qAnnRefreshOracle),
+    GraftQuery("q_embed_neardup", qEmbedNeardup, qEmbedNeardupOracle),
+    GraftQuery("q_embed_centroid_eval", qEmbedCentroidEval, qEmbedCentroidEvalOracle),
+    GraftQuery("q_dedup_semantic", qDedupSemantic, qDedupSemanticOracle),
+    GraftQuery("q_decontaminate_semantic", qDecontaminateSemantic, qDecontaminateSemanticOracle),
+    GraftQuery("q_ann_topk", qAnnTopk, qAnnTopkOracle),
+    GraftQuery("q_ann_negatives", qAnnNegatives, qAnnNegativesOracle),
+    certified("q_ann_lsh", "lsh", 0.0, 0.30, qAnnLsh),
+    certified("q_ann_ivf", "ivf", 0.1, 0.50, qAnnIvf),
+    certified("q_ann_quantized", "sq8", 0.9, 0.90, qAnnQuantized),
+    certified("q_ann_pq", "pq", 0.1, 0.25, qAnnPq),
+    certified("q_ann_ivf_sq8", "ivf_sq8", 0.1, 0.55, qAnnIvfSq8),
+    GraftQuery("q_ann_filtered", qAnnFiltered, qAnnFilteredOracle),
+    GraftQuery("q_ann_mrl", qAnnMrl, qAnnMrlOracle),
+    GraftQuery("q_ann_rerank", qAnnRerank, qAnnRerankOracle),
+    GraftQuery("q_cluster_kmeans", qClusterKmeans, qClusterKmeansOracle),
+    GraftQuery("q_sample_kcenter", qSampleKcenter, qSampleKcenterOracle),
+    GraftQuery("q_embed_covariance", qEmbedCovariance, qEmbedCovarianceOracle),
+    GraftQuery("q_embed_whiten", qEmbedWhiten, qEmbedWhitenOracle),
+    GraftQuery("q_embed_pca", qEmbedPca, qEmbedPcaOracle),
   )
 }

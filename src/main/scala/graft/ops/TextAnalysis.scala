@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
+import graft.GraftQuery
 import graft.functions.RollingHash
 
 /** Text-analysis operators for training-data pipelines: language ID,
@@ -1651,69 +1652,36 @@ object TextAnalysis {
         min(CASE WHEN kept = 1 THEN score END) cutoff_score
       FROM k GROUP BY source ORDER BY source"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_text_langid" -> (qTextLangid _),
-    "q_text_quality" -> (qTextQuality _),
-    "q_text_tokens" -> (qTextTokens _),
-    "q_text_fingerprint" -> (qTextFingerprint _),
-    "q_text_tfidf" -> (qTextTfidf _),
-    "q_text_chunks" -> (qTextChunks _),
-    "q_pipeline_curate" -> (qPipelineCurate _),
-    "q_shingle_generator" -> (qShingleGenerator _),
-    "q_decontaminate" -> (qDecontaminate _),
-    "q_decontaminate_ngram" -> (qDecontaminateNgram _),
-    "q_text_redact" -> (qTextRedact _),
-    "q_text_pii" -> (qTextPii _),
-    "q_quality_mad" -> (qQualityMad _),
-    "q_text_surprisal" -> (qTextSurprisal _),
-    "q_text_repetition" -> (qTextRepetition _),
-    "q_quality_gopher" -> (qQualityGopher _),
-    "q_curate_funnel" -> (qCurateFunnel _),
-    "q_stats_profile" -> (qStatsProfile _),
-    "q_mix_temperature" -> (qMixTemperature _),
-    "q_heavy_hitters_grouped" -> (qHeavyHittersGrouped _),
-    "q_text_boilerplate" -> (qTextBoilerplate _),
-    "q_text_postings" -> (qTextPostings _),
-    "q_text_pmi" -> (qTextPmi _),
-    "q_quality_normalize" -> (qQualityNormalize _),
-    "q_vocab_growth" -> (qVocabGrowth _),
-    "q_pipeline_full" -> (qPipelineFull _),
-    "q_stream_quality" -> (qStreamQuality _),
-    "q_vocab_coverage" -> (qVocabCoverage _),
-    "q_length_histogram" -> (qLengthHistogram _),
-    "q_curate_token_budget" -> (qCurateTokenBudget _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_text_langid" -> qTextLangidOracle,
-    "q_text_quality" -> qTextQualityOracle,
-    "q_text_tokens" -> qTextTokensOracle,
-    "q_text_fingerprint" -> qTextFingerprintOracle,
-    "q_text_tfidf" -> qTextTfidfOracle,
-    "q_text_chunks" -> qTextChunksOracle,
-    "q_pipeline_curate" -> qPipelineCurateOracle,
-    "q_shingle_generator" -> qShingleGeneratorOracle,
-    "q_decontaminate" -> qDecontaminateOracle,
-    "q_decontaminate_ngram" -> qDecontaminateNgramOracle,
-    "q_text_redact" -> qTextRedactOracle,
-    "q_text_pii" -> qTextPiiOracle,
-    "q_quality_mad" -> qQualityMadOracle,
-    "q_text_surprisal" -> qTextSurprisalOracle,
-    "q_text_repetition" -> qTextRepetitionOracle,
-    "q_quality_gopher" -> qQualityGopherOracle,
-    "q_curate_funnel" -> qCurateFunnelOracle,
-    "q_stats_profile" -> qStatsProfileOracle,
-    "q_mix_temperature" -> qMixTemperatureOracle,
-    "q_heavy_hitters_grouped" -> qHeavyHittersGroupedOracle,
-    "q_text_boilerplate" -> qTextBoilerplateOracle,
-    "q_text_postings" -> qTextPostingsOracle,
-    "q_text_pmi" -> qTextPmiOracle,
-    "q_quality_normalize" -> qQualityNormalizeOracle,
-    "q_vocab_growth" -> qVocabGrowthOracle,
-    "q_pipeline_full" -> qPipelineFullOracle,
-    "q_stream_quality" -> qStreamQualityOracle,
-    "q_vocab_coverage" -> qVocabCoverageOracle,
-    "q_length_histogram" -> qLengthHistogramOracle,
-    "q_curate_token_budget" -> qCurateTokenBudgetOracle,
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q_text_langid", qTextLangid, qTextLangidOracle),
+    GraftQuery("q_text_quality", qTextQuality, qTextQualityOracle),
+    GraftQuery("q_text_tokens", qTextTokens, qTextTokensOracle),
+    GraftQuery("q_text_fingerprint", qTextFingerprint, qTextFingerprintOracle),
+    GraftQuery("q_text_tfidf", qTextTfidf, qTextTfidfOracle),
+    GraftQuery("q_text_chunks", qTextChunks, qTextChunksOracle),
+    GraftQuery("q_pipeline_curate", qPipelineCurate, qPipelineCurateOracle),
+    GraftQuery("q_shingle_generator", qShingleGenerator, qShingleGeneratorOracle),
+    GraftQuery("q_decontaminate", qDecontaminate, qDecontaminateOracle),
+    GraftQuery("q_decontaminate_ngram", qDecontaminateNgram, qDecontaminateNgramOracle),
+    GraftQuery("q_text_redact", qTextRedact, qTextRedactOracle),
+    GraftQuery("q_text_pii", qTextPii, qTextPiiOracle),
+    GraftQuery("q_quality_mad", qQualityMad, qQualityMadOracle),
+    GraftQuery("q_text_surprisal", qTextSurprisal, qTextSurprisalOracle),
+    GraftQuery("q_text_repetition", qTextRepetition, qTextRepetitionOracle),
+    GraftQuery("q_quality_gopher", qQualityGopher, qQualityGopherOracle),
+    GraftQuery("q_curate_funnel", qCurateFunnel, qCurateFunnelOracle),
+    GraftQuery("q_stats_profile", qStatsProfile, qStatsProfileOracle),
+    GraftQuery("q_mix_temperature", qMixTemperature, qMixTemperatureOracle),
+    GraftQuery("q_heavy_hitters_grouped", qHeavyHittersGrouped, qHeavyHittersGroupedOracle),
+    GraftQuery("q_text_boilerplate", qTextBoilerplate, qTextBoilerplateOracle),
+    GraftQuery("q_text_postings", qTextPostings, qTextPostingsOracle),
+    GraftQuery("q_text_pmi", qTextPmi, qTextPmiOracle),
+    GraftQuery("q_quality_normalize", qQualityNormalize, qQualityNormalizeOracle),
+    GraftQuery("q_vocab_growth", qVocabGrowth, qVocabGrowthOracle),
+    GraftQuery("q_pipeline_full", qPipelineFull, qPipelineFullOracle),
+    GraftQuery("q_stream_quality", qStreamQuality, qStreamQualityOracle),
+    GraftQuery("q_vocab_coverage", qVocabCoverage, qVocabCoverageOracle),
+    GraftQuery("q_length_histogram", qLengthHistogram, qLengthHistogramOracle),
+    GraftQuery("q_curate_token_budget", qCurateTokenBudget, qCurateTokenBudgetOracle),
   )
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftQuery
+
 /** Evaluation and distributional statistics over text-pipeline outputs,
   * split out of [[TextAnalysis]] along the family seam (round 16, zero
   * behavior change): mutual information, Cohen's kappa, chi-square
@@ -1056,37 +1058,20 @@ object TextEval {
           6) AS spearman6
       FROM mm"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_eval_auc" -> (qEvalAuc _),
-    "q_eval_spearman" -> (qEvalSpearman _),
-    "q_calibrate_isotonic" -> (qCalibrateIsotonic _),
-    "q_eval_bleu" -> (qEvalBleu _),
-    "q_text_zipf" -> (qTextZipf _),
-    "q_stats_mutualinfo" -> (qStatsMutualinfo _),
-    "q_stats_chisq" -> (qStatsChisq _),
-    "q_label_kappa" -> (qLabelKappa _),
-    "q_langid_eval" -> (qLangidEval _),
-    "q_quality_calibration" -> (qQualityCalibration _),
-    "q_text_lm_heldout" -> (qTextLmHeldout _),
-    "q_text_kneserney" -> (qTextKneserNey _),
-    "q_text_jsd" -> (qTextJsd _),
-    "q_text_burstiness" -> (qTextBurstiness _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_eval_auc" -> qEvalAucOracle,
-    "q_eval_spearman" -> qEvalSpearmanOracle,
-    "q_calibrate_isotonic" -> qCalibrateIsotonicOracle,
-    "q_eval_bleu" -> qEvalBleuOracle,
-    "q_text_zipf" -> qTextZipfOracle,
-    "q_stats_mutualinfo" -> qStatsMutualinfoOracle,
-    "q_stats_chisq" -> qStatsChisqOracle,
-    "q_label_kappa" -> qLabelKappaOracle,
-    "q_langid_eval" -> qLangidEvalOracle,
-    "q_quality_calibration" -> qQualityCalibrationOracle,
-    "q_text_lm_heldout" -> qTextLmHeldoutOracle,
-    "q_text_kneserney" -> qTextKneserNeyOracle,
-    "q_text_jsd" -> qTextJsdOracle,
-    "q_text_burstiness" -> qTextBurstinessOracle,
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q_eval_auc", qEvalAuc, qEvalAucOracle),
+    GraftQuery("q_eval_spearman", qEvalSpearman, qEvalSpearmanOracle),
+    GraftQuery("q_calibrate_isotonic", qCalibrateIsotonic, qCalibrateIsotonicOracle),
+    GraftQuery("q_eval_bleu", qEvalBleu, qEvalBleuOracle),
+    GraftQuery("q_text_zipf", qTextZipf, qTextZipfOracle),
+    GraftQuery("q_stats_mutualinfo", qStatsMutualinfo, qStatsMutualinfoOracle),
+    GraftQuery("q_stats_chisq", qStatsChisq, qStatsChisqOracle),
+    GraftQuery("q_label_kappa", qLabelKappa, qLabelKappaOracle),
+    GraftQuery("q_langid_eval", qLangidEval, qLangidEvalOracle),
+    GraftQuery("q_quality_calibration", qQualityCalibration, qQualityCalibrationOracle),
+    GraftQuery("q_text_lm_heldout", qTextLmHeldout, qTextLmHeldoutOracle),
+    GraftQuery("q_text_kneserney", qTextKneserNey, qTextKneserNeyOracle),
+    GraftQuery("q_text_jsd", qTextJsd, qTextJsdOracle),
+    GraftQuery("q_text_burstiness", qTextBurstiness, qTextBurstinessOracle),
   )
 }

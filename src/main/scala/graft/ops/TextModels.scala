@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftQuery
+
 /** Retrieval scoring, tokenizer training and language-model scoring over
   * the `documents` table, split out of [[TextAnalysis]] along the family
   * seam (round 16, zero behavior change): BM25, reciprocal-rank fusion,
@@ -636,27 +638,15 @@ object TextModels {
       FROM tok JOIN model USING (b) CROSS JOIN tot
       GROUP BY doc_id ORDER BY doc_id"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_quality_classifier" -> (qQualityClassifier _),
-    "q_bpe_train" -> (qBpeTrain _),
-    "q_bpe_encode" -> (qBpeEncode _),
-    "q_text_rrf" -> (qTextRrf _),
-    "q_text_bm25" -> (qTextBm25 _),
-    "q_bpe_pairs" -> (qBpePairs _),
-    "q_text_winnow" -> (qTextWinnow _),
-    "q_text_perplexity" -> (qTextPerplexity _),
-    "q_curate_dsir" -> (qCurateDsir _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_quality_classifier" -> qQualityClassifierOracle,
-    "q_bpe_train" -> qBpeTrainOracle,
-    "q_bpe_encode" -> qBpeEncodeOracle,
-    "q_text_rrf" -> qTextRrfOracle,
-    "q_text_bm25" -> qTextBm25Oracle,
-    "q_bpe_pairs" -> qBpePairsOracle,
-    "q_text_winnow" -> qTextWinnowOracle,
-    "q_text_perplexity" -> qTextPerplexityOracle,
-    "q_curate_dsir" -> qCurateDsirOracle,
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q_quality_classifier", qQualityClassifier, qQualityClassifierOracle),
+    GraftQuery("q_bpe_train", qBpeTrain, qBpeTrainOracle),
+    GraftQuery("q_bpe_encode", qBpeEncode, qBpeEncodeOracle),
+    GraftQuery("q_text_rrf", qTextRrf, qTextRrfOracle),
+    GraftQuery("q_text_bm25", qTextBm25, qTextBm25Oracle),
+    GraftQuery("q_bpe_pairs", qBpePairs, qBpePairsOracle),
+    GraftQuery("q_text_winnow", qTextWinnow, qTextWinnowOracle),
+    GraftQuery("q_text_perplexity", qTextPerplexity, qTextPerplexityOracle),
+    GraftQuery("q_curate_dsir", qCurateDsir, qCurateDsirOracle),
   )
 }

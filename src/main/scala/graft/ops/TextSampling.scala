@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftQuery
 import graft.functions.RollingHash
 
 /** Sampling, mixing and packing operators for training-data assembly,
@@ -500,31 +501,17 @@ object TextSampling {
         sum(CASE WHEN rk <= m THEN doc_id ELSE 0 END)::BIGINT sel_sum
       FROM r CROSS JOIN m GROUP BY lang ORDER BY lang"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_sample_balanced" -> (qSampleBalanced _),
-    "q_curate_domain_cap" -> (qCurateDomainCap _),
-    "q_sample_hash" -> (qSampleHash _),
-    "q_pack_batches" -> (qPackBatches _),
-    "q_pack_sequences" -> (qPackSequences _),
-    "q_mix_epochs" -> (qMixEpochs _),
-    "q_sample_stratified" -> (qSampleStratified _),
-    "q_sample_weighted" -> (qSampleWeighted _),
-    "q_split_train_val_test" -> (qSplitTrainValTest _),
-    "q_shuffle_deterministic" -> (qShuffleDeterministic _),
-    "q_heavy_hitters" -> (qHeavyHitters _),
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q_sample_balanced" -> qSampleBalancedOracle,
-    "q_curate_domain_cap" -> qCurateDomainCapOracle,
-    "q_sample_hash" -> qSampleHashOracle,
-    "q_pack_batches" -> qPackBatchesOracle,
-    "q_pack_sequences" -> qPackSequencesOracle,
-    "q_mix_epochs" -> qMixEpochsOracle,
-    "q_sample_stratified" -> qSampleStratifiedOracle,
-    "q_sample_weighted" -> qSampleWeightedOracle,
-    "q_split_train_val_test" -> qSplitTrainValTestOracle,
-    "q_shuffle_deterministic" -> qShuffleDeterministicOracle,
-    "q_heavy_hitters" -> qHeavyHittersOracle,
+  val registry: Seq[GraftQuery] = Seq(
+    GraftQuery("q_sample_balanced", qSampleBalanced, qSampleBalancedOracle),
+    GraftQuery("q_curate_domain_cap", qCurateDomainCap, qCurateDomainCapOracle),
+    GraftQuery("q_sample_hash", qSampleHash, qSampleHashOracle),
+    GraftQuery("q_pack_batches", qPackBatches, qPackBatchesOracle),
+    GraftQuery("q_pack_sequences", qPackSequences, qPackSequencesOracle),
+    GraftQuery("q_mix_epochs", qMixEpochs, qMixEpochsOracle),
+    GraftQuery("q_sample_stratified", qSampleStratified, qSampleStratifiedOracle),
+    GraftQuery("q_sample_weighted", qSampleWeighted, qSampleWeightedOracle),
+    GraftQuery("q_split_train_val_test", qSplitTrainValTest, qSplitTrainValTestOracle),
+    GraftQuery("q_shuffle_deterministic", qShuffleDeterministic, qShuffleDeterministicOracle),
+    GraftQuery("q_heavy_hitters", qHeavyHitters, qHeavyHittersOracle),
   )
 }
