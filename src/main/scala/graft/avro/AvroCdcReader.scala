@@ -5,16 +5,23 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.avro.Schema
 import org.apache.avro.file.{DataFileReader, DataFileStream}
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+import org.apache.avro.io.DatumReader
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graft.DataFrameBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.{CollectionAccumulator, SerializableConfiguration}
 
 /** Distributed single-pass Avro CDC reader, and the only module that opens
   * an Avro container: header reads go through [[writerSchema]], record
-  * reads through [[RangeRecordIterator]] — for the converter here and for
-  * the `cdc-avro` scan, stream and catalog in `graft.sources`.
+  * reads through [[RangeIterator]] — for the converter here and for the
+  * `cdc-avro` scan, stream and catalog in `graft.sources`. Records become
+  * rows in one step: [[CdcRowReader]] decodes each container's blocks
+  * straight into Catalyst rows, and [[readGroup]] turns the split fan-out's
+  * `RDD[InternalRow]` into a DataFrame with no encoder between.
   *
   * Design (Spark-first, NOT a port of the reference's per-file DoFn):
   *  - File discovery is driver-side glob; schema fingerprinting is a
@@ -25,11 +32,11 @@ import org.apache.spark.util.{CollectionAccumulator, SerializableConfiguration}
   *    one well-typed DataFrame — Spark wants one schema per scan, while the
   *    reference derives a schema per file; grouping preserves the per-file
   *    dynamic-schema semantics without giving up DataFrame typing.
-  *  - Conversion runs inside `flatMap` tasks, one file per element, so a
-  *    1000-executor cluster converts files embarrassingly parallel with no
-  *    shuffle anywhere — same dataflow shape as the reference pipeline
-  *    (main.py:601-613), but vectorized parquet write and task-commit
-  *    atomicity come from Spark.
+  *  - Conversion runs inside `flatMap` tasks, one byte-range split per
+  *    element, so a 1000-executor cluster converts files embarrassingly
+  *    parallel with no shuffle anywhere — same dataflow shape as the
+  *    reference pipeline (main.py:601-613), but vectorized parquet write
+  *    and task-commit atomicity come from Spark.
   */
 object AvroCdcReader {
 
@@ -401,10 +408,11 @@ object AvroCdcReader {
     } finally raw.close()
   }
 
-  /** Record-at-a-time reader over one split: the converter's, the probe's
-    * and the `cdc-avro` scan's and stream's only record reader. Holds ONE
-    * Avro block buffer + one record regardless of split size, so memory
-    * does not couple to `maxPartitionBytes × task slots`.
+  /** Datum-at-a-time reader over one split: the converter's, the probe's
+    * and the `cdc-avro` scan's and stream's only record reader, decoding
+    * with `datumReader` ([[CdcRowReader]] for rows). Holds ONE Avro block
+    * buffer + one datum regardless of split size, so memory does not
+    * couple to `maxPartitionBytes × task slots`.
     *
     * TRUNCATION GUARD: avro-java's `hasNext` swallows the EOFException of
     * a cut-short final block and reports a clean end-of-stream, so a
@@ -417,12 +425,12 @@ object AvroCdcReader {
     * [[validateRange]] first, so for it this is a second line of defense
     * (a file replaced between validation and read).
     */
-  private[graft] final class RangeRecordIterator(
-      split: FileSplit, conf: Configuration)
-      extends Iterator[GenericRecord] with java.io.Closeable {
+  private[graft] class RangeIterator[D](
+      split: FileSplit, conf: Configuration, datumReader: DatumReader[D])
+      extends Iterator[D] with java.io.Closeable {
     private val reader = {
       val in = new org.apache.avro.mapred.FsInput(new Path(split.path), conf)
-      try new DataFileReader[GenericRecord](in, newDatumReader())
+      try new DataFileReader[D](in, datumReader)
       catch {
         case e: Throwable =>
           try in.close() catch { case _: Exception => () }
@@ -446,9 +454,6 @@ object AvroCdcReader {
       }
     private var closed = false
 
-    /** The container's writer schema. */
-    def schema: Schema = reader.getSchema
-
     override def hasNext: Boolean = {
       if (closed) return false
       val live = more && !reader.pastSync(split.end)
@@ -463,7 +468,7 @@ object AvroCdcReader {
       live
     }
 
-    override def next(): GenericRecord = {
+    override def next(): D = {
       val r = reader.next()
       more = reader.hasNext
       r
@@ -472,9 +477,14 @@ object AvroCdcReader {
     override def close(): Unit = if (!closed) { closed = true; reader.close() }
   }
 
-  /** Strict form of the split read (the probe's fallback branch, tests):
-    * validates the range, then drains the lazy iterator. Production
-    * emission goes through [[lazyRows]] instead.
+  /** [[RangeIterator]] over `GenericRecord`s (tests, the probe's column
+    * forensics, the benchmark's decode layer). */
+  private[graft] final class RangeRecordIterator(split: FileSplit, conf: Configuration)
+      extends RangeIterator[GenericRecord](split, conf, newDatumReader())
+
+  /** Strict form of the split read as `GenericRecord`s (tests, the
+    * benchmark's flatten layer): validates the range, then drains the
+    * lazy iterator. Production emission goes through [[lazyRows]] instead.
     */
   private[graft] def readRange(split: FileSplit, conf: Configuration): ArrayBuffer[GenericRecord] = {
     validateRange(split, conf)
@@ -493,25 +503,25 @@ object AvroCdcReader {
     *    the split stops emitting (rows from complete blocks already
     *    decoded stand — the data is valid and exactly-once; Spark's own
     *    `ignoreCorruptFiles` shape) and the path lands in `failedAcc`.
-    *  - CONVERSION failures (`f` throws — e.g. the reference's strict
-    *    int rule) PROPAGATE and fail the task: valid input data exists
-    *    past the failing record, so a partial emission would be an
-    *    incomplete conversion of available data. The job-level caller
-    *    ([[graft.convert.AvroToParquetJob.runOnce]]) catches the job
-    *    failure and falls back to probe-and-rewrite, restoring the
-    *    reference's whole-file atomic failure (zero output rows from a
-    *    file that fails conversion) at a cost bounded by the failure
-    *    rate.
+    *  - CONVERSION failures (a decoded record `rows` cannot convert — e.g.
+    *    the reference's strict int rule) PROPAGATE and fail the task:
+    *    valid input data exists past the failing record, so a partial
+    *    emission would be an incomplete conversion of available data. The
+    *    job-level caller ([[graft.convert.AvroToParquetJob.runOnce]])
+    *    catches the job failure and falls back to probe-and-rewrite,
+    *    restoring the reference's whole-file atomic failure (zero output
+    *    rows from a file that fails conversion) at a cost bounded by the
+    *    failure rate.
     */
   private def lazyRows(
       split: FileSplit,
       conf: Configuration,
-      failedAcc: CollectionAccumulator[String])(
-      f: GenericRecord => Row): Iterator[Row] = {
+      failedAcc: CollectionAccumulator[String],
+      rows: CdcRowReader): Iterator[InternalRow] = {
     val opened =
       try {
         validateRange(split, conf)
-        val it = new RangeRecordIterator(split, conf)
+        val it = new RangeIterator(split, conf, rows)
         Option(org.apache.spark.TaskContext.get()).foreach(
           _.addTaskCompletionListener[Unit](_ => it.close()))
         Some(it)
@@ -523,33 +533,29 @@ object AvroCdcReader {
     opened match {
       case None => Iterator.empty
       case Some(it) =>
-        new scala.collection.AbstractIterator[Row] {
+        new scala.collection.AbstractIterator[InternalRow] {
           private var done = false
-          private var pending: Row = _
+          private var pending: InternalRow = _
           private def fetch(): Unit = {
             if (done || pending != null) return
-            val rec: GenericRecord =
+            pending =
               try {
                 if (it.hasNext) it.next()
                 else { done = true; null }
               } catch {
+                // a conversion failure fails the task (see contract
+                // above), typed so the job-level caller can classify it
+                case CdcRowReader.ConversionFailure(e) =>
+                  throw ConversionTaskError(split.path, e)
                 case e: Exception =>
                   failedAcc.add(s"${split.path}\t${e.toString}")
                   try it.close() catch { case _: Exception => () }
                   done = true
                   null
               }
-            // conversion runs OUTSIDE the read guard: a throw here fails
-            // the task (see contract above), typed so the job-level
-            // caller can classify it
-            if (rec != null) pending =
-              try f(rec)
-              catch {
-                case e: Exception => throw ConversionTaskError(split.path, e)
-              }
           }
           override def hasNext: Boolean = { fetch(); pending != null }
-          override def next(): Row = {
+          override def next(): InternalRow = {
             fetch()
             if (pending == null) throw new NoSuchElementException("empty split")
             val r = pending
@@ -560,31 +566,50 @@ object AvroCdcReader {
     }
   }
 
-  /** Column-level probe over an already-read file (the reference's
-    * per-column `pa.array` retry, main.py:529-540): convert each payload
-    * field independently across all records and report every field that
-    * fails, with the breaking datum and error. Only runs on files already
+  /** Reads every row of `split` with `columns`, keeping none. */
+  private def drain(split: FileSplit, conf: Configuration, columns: Seq[CdcRowReader.Column]): Unit = {
+    val it = new RangeIterator(split, conf, new CdcRowReader(_ => columns))
+    try while (it.hasNext) it.next()
+    finally it.close()
+  }
+
+  /** A [[CdcRowReader.ConversionFailure]]'s own cause; `e` otherwise. */
+  private def conversionCause(e: Exception): Throwable = e match {
+    case CdcRowReader.ConversionFailure(cause) => cause
+    case other => other
+  }
+
+  /** Column-level probe of one file (the reference's per-column
+    * `pa.array` retry, main.py:529-540): convert each payload field of
+    * every record independently and report every field that fails, with
+    * its first breaking datum and error. Only runs on files already
     * classified as needing fallback, so its cost is bounded by the
     * failure rate, not the corpus size.
     */
   private[avro] def probeColumns(
-      records: scala.collection.Seq[GenericRecord],
-      flat: AvroSchemaConverter.FlatSchema): Seq[ColumnFailure] =
-    flat.payloadFields.flatMap { f =>
-      var failure: Option[ColumnFailure] = None
-      val it = records.iterator
-      while (failure.isEmpty && it.hasNext) {
-        val v = AvroValueConverter.fieldOf(
-          AvroValueConverter.recordField(it.next(), "payload"), f.name)
-        try { AvroValueConverter.convert(v, f.tpe, ConvertMode.ReferenceExact); () }
-        catch {
-          case e: Exception =>
-            failure = Some(ColumnFailure(
-              f.name, f.tpe.toString, String.valueOf(v).take(200), e.toString))
+      split: FileSplit,
+      conf: Configuration,
+      flat: AvroSchemaConverter.FlatSchema): Seq[ColumnFailure] = {
+    val fields = flat.payloadFields.toIndexedSeq
+    val found = Array.fill[Option[ColumnFailure]](fields.size)(None)
+    val it = new RangeRecordIterator(split, conf)
+    try {
+      while (found.exists(_.isEmpty) && it.hasNext) {
+        val payload = AvroValueConverter.recordField(it.next(), "payload")
+        fields.indices.filter(found(_).isEmpty).foreach { i =>
+          val f = fields(i)
+          val v = AvroValueConverter.fieldOf(payload, f.name)
+          try { AvroValueConverter.convert(v, f.tpe, ConvertMode.ReferenceExact); () }
+          catch {
+            case e: Exception =>
+              found(i) = Some(ColumnFailure(
+                f.name, f.tpe.toString, String.valueOf(v).take(200), e.toString))
+          }
         }
       }
-      failure
-    }.toSeq
+    } finally it.close()
+    found.toSeq.flatten
+  }
 
   /** Probe pass for ReferenceExact mode: classify each file as cleanly
     * typed / needs all-string fallback / hard-failed. Mirrors the
@@ -612,36 +637,30 @@ object AvroCdcReader {
       .parallelize(paths, slices(paths.size, spark))
       .map { p =>
         // the fallback projection itself can still hard-fail (the
-        // reference re-raises, main.py:565-567) — probe it too; this branch
-        // buffers the file, bounded by the failure rate
+        // reference re-raises, main.py:565-567) — read it too
         def fallback(whole: FileSplit, reason: String): FileStatus =
           try {
-            val records = readRange(whole, conf.value)
-            val cols = probeColumns(records, flatB.value)
-            records.foreach(r => AvroValueConverter.flattenFallback(r, flatB.value))
-            FileNeedsFallback(p, reason, cols)
+            drain(whole, conf.value, CdcRowReader.fallbackColumns(flatB.value))
+            FileNeedsFallback(p, reason, probeColumns(whole, conf.value, flatB.value))
           } catch {
-            case e: Exception => FileFailed(p, e.toString)
+            case e: Exception => FileFailed(p, conversionCause(e).toString)
           }
         try {
-          // the happy path streams record-at-a-time: a probe file is WHOLE
-          // (no split bound), so strict buffering here would be the worst
-          // memory offender of all the read paths
+          // every read streams record-at-a-time: a probe file is WHOLE
+          // (no split bound), so buffering it would be the worst memory
+          // offender of all the read paths
           val whole = wholeFile(p, conf.value)
           try {
             validateRange(whole, conf.value)
-            val it = new RangeRecordIterator(whole, conf.value)
-            try {
-              while (it.hasNext)
-                AvroValueConverter.flatten(it.next(), flatB.value, mode)
-            } finally it.close()
+            drain(whole, conf.value, CdcRowReader.flatColumns(flatB.value, mode))
             FileOk(p): FileStatus
           } catch {
-            case e: FallbackConversionError if mode == ConvertMode.ReferenceExact =>
+            case CdcRowReader.ConversionFailure(e: FallbackConversionError)
+                if mode == ConvertMode.ReferenceExact =>
               fallback(whole, e.msg)
           }
         } catch {
-          case e: Exception => FileFailed(p, e.toString): FileStatus
+          case e: Exception => FileFailed(p, conversionCause(e).toString): FileStatus
         }
       }
       .collect()
@@ -650,10 +669,11 @@ object AvroCdcReader {
 
   /** The reference's declared non-nullability is never enforced at runtime
     * (pyarrow's Table.from_pylist does not validate the nullable flag, so a
-    * null payload happily writes nulls into "required" columns). Spark's
-    * row encoder DOES enforce it, so we relax everything to nullable at the
-    * DataFrame boundary; [[AvroSchemaConverter]] still models the declared
-    * nullability for schema-derivation parity.
+    * null payload happily writes nulls into "required" columns). A Spark
+    * schema's nullability is a promise the plan relies on, so we relax
+    * everything to nullable at the DataFrame boundary;
+    * [[AvroSchemaConverter]] still models the declared nullability for
+    * schema-derivation parity.
     */
   private def asNullable(dt: DataType): DataType =
     dt match {
@@ -677,23 +697,24 @@ object AvroCdcReader {
   }
 
   /** The byte-range split fan-out of one group of files: each split's
-    * records go through [[lazyRows]] with `toRow`, and each row gets its
-    * file's path as [[InputPathCol]].
+    * rows come from [[lazyRows]] with `columns` plus its file's path as
+    * [[InputPathCol]], straight into a DataFrame of `schema` — no encoder.
     */
   private def readSplits(
       spark: SparkSession,
       paths: Seq[String],
-      flat: AvroSchemaConverter.FlatSchema,
-      failedAcc: CollectionAccumulator[String])(
-      toRow: GenericRecord => Row): DataFrame = {
+      schema: StructType,
+      failedAcc: CollectionAccumulator[String],
+      columns: Seq[CdcRowReader.Column]): DataFrame = {
     val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     val splits = planSplits(spark, paths, spark.sparkContext.hadoopConfiguration)
     val rows = spark.sparkContext
       .parallelize(splits, slices(splits.size, spark))
       .flatMap { s =>
-        lazyRows(s, conf.value, failedAcc)(r => Row.fromSeq(toRow(r).toSeq :+ s.path))
+        val path = CdcRowReader.Constant(UTF8String.fromString(s.path))
+        lazyRows(s, conf.value, failedAcc, new CdcRowReader(_ => columns :+ path))
       }
-    spark.createDataFrame(rows, sparkSchema(flat, InputPathCol))
+    DataFrameBridge.fromInternalRows(spark, rows, schema)
   }
 
   /** Typed conversion of one schema group, parallelized over BYTE-RANGE
@@ -724,11 +745,9 @@ object AvroCdcReader {
       paths: Seq[String],
       flat: AvroSchemaConverter.FlatSchema,
       mode: ConvertMode,
-      failedAcc: CollectionAccumulator[String]): DataFrame = {
-    val flatB = spark.sparkContext.broadcast(flat)
-    readSplits(spark, paths, flat, failedAcc)(
-      AvroValueConverter.flatten(_, flatB.value, mode))
-  }
+      failedAcc: CollectionAccumulator[String]): DataFrame =
+    readSplits(spark, paths, sparkSchema(flat, InputPathCol), failedAcc,
+      CdcRowReader.flatColumns(flat, mode))
 
   /** All-string fallback read of files that defeated the typed schema
     * (same byte-range split fan-out as [[readGroup]]).
@@ -737,9 +756,8 @@ object AvroCdcReader {
       spark: SparkSession,
       paths: Seq[String],
       flat: AvroSchemaConverter.FlatSchema,
-      failedAcc: CollectionAccumulator[String]): DataFrame = {
-    val flatB = spark.sparkContext.broadcast(flat)
-    readSplits(spark, paths, AvroSchemaConverter.fallbackSchema(flat), failedAcc)(
-      AvroValueConverter.flattenFallback(_, flatB.value))
-  }
+      failedAcc: CollectionAccumulator[String]): DataFrame =
+    readSplits(spark, paths,
+      sparkSchema(AvroSchemaConverter.fallbackSchema(flat), InputPathCol), failedAcc,
+      CdcRowReader.fallbackColumns(flat))
 }

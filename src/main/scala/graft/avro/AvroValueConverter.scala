@@ -2,14 +2,17 @@ package graft.avro
 
 import java.math.{BigDecimal => JBigDecimal, BigInteger, RoundingMode}
 import java.nio.ByteBuffer
-import java.sql.{Date, Timestamp}
 import java.time.LocalDate
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.avro.generic.{GenericEnumSymbol, GenericFixed, GenericRecord}
+import org.apache.avro.generic.{GenericFixed, GenericRecord}
 import org.apache.avro.util.Utf8
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, DateTimeUtils, GenericArrayData, RebaseDateTime}
+import org.apache.spark.sql.types.Decimal
+import org.apache.spark.unsafe.types.UTF8String
 
 import AvroSparkType._
 
@@ -34,6 +37,8 @@ object Coercions {
     * return null for those.)
     */
   private val IntegerRe = "^[+-]?[0-9]+$".r
+  private val TrueTokens = Set("true", "t", "1", "yes", "y")
+  private val FalseTokens = Set("false", "f", "0", "no", "n")
 
   def toBoolLenient(x: Any): java.lang.Boolean = x match {
     case null => null
@@ -44,8 +49,8 @@ object Coercions {
       // lowercase would make data coercion depend on the executor
       // JVM's -Duser.language (the tr-TR I→ı class)
       val s = scalarString(other).trim.toLowerCase(java.util.Locale.ROOT)
-      if (Set("true", "t", "1", "yes", "y").contains(s)) java.lang.Boolean.TRUE
-      else if (Set("false", "f", "0", "no", "n").contains(s)) java.lang.Boolean.FALSE
+      if (TrueTokens.contains(s)) java.lang.Boolean.TRUE
+      else if (FalseTokens.contains(s)) java.lang.Boolean.FALSE
       else if (IntegerRe.matches(s))
         java.lang.Boolean.valueOf(new BigInteger(s).signum() != 0)
       else null
@@ -127,6 +132,45 @@ object Coercions {
     q
   }
 
+  /** A timestamp datum (`millis` or micros since the epoch) as Catalyst
+    * micros: the value Spark stores for the `java.sql.Timestamp` of that
+    * instant. From the 1582 calendar switch on that is the micros count
+    * itself; before it, the hybrid Julian calendar's reading moves the
+    * instant, so those go through the `Timestamp` as before (as do their
+    * overflows, near the ends of the range). Millis beyond the micros
+    * range throw `ArithmeticException`.
+    */
+  def timestampMicros(v: Long, millis: Boolean): Long = {
+    val micros = if (millis) Math.multiplyExact(v, 1000L) else v
+    if (micros >= RebaseDateTime.lastSwitchJulianTs) micros
+    else {
+      val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
+      ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
+      try DateTimeUtils.fromJavaTimestamp(ts)
+      catch { case e: ArithmeticException => throw new RebaseOverflow(e) }
+    }
+  }
+
+  /** A date datum (days since the epoch) as Catalyst days: the value Spark
+    * stores for the `java.sql.Date` of that proleptic-Gregorian day, which
+    * differs from `days` only before the 1582 calendar switch (and throws
+    * `ArithmeticException` far outside the `java.sql.Date` range).
+    */
+  def dateDays(days: Int): Int =
+    if (days >= RebaseDateTime.lastSwitchGregorianDay) days
+    else
+      try DateTimeUtils.fromJavaDate(java.sql.Date.valueOf(LocalDate.ofEpochDay(days.toLong)))
+      catch { case e: ArithmeticException => throw new RebaseOverflow(e) }
+
+  /** A timestamp or date whose `java.sql` form Spark cannot store (a few
+    * hundred micros from the ends of the `Long` range, days far outside
+    * `java.sql.Date`'s range). The external-`Row` path met these in
+    * Spark's encoder, after the whole record had converted, so
+    * [[CdcRowReader]] ranks them after every other failure of the record.
+    */
+  final class RebaseOverflow(cause: ArithmeticException)
+    extends ArithmeticException(cause.getMessage)
+
   private[avro] def scalarString(x: Any): String = x match {
     case s: Utf8 => s.toString
     case other   => other.toString
@@ -146,39 +190,77 @@ final case class HardConversionError(msg: String) extends RuntimeException(msg)
 final case class FallbackConversionError(msg: String) extends RuntimeException(msg)
 
 /** Converts Avro datums (as produced by `GenericDatumReader`) into Spark
-  * external-Row values for a target [[AvroSparkType]], following the
-  * reference's per-type coercion semantics (main.py:147-240).
+  * Catalyst values for a target [[AvroSparkType]], following the
+  * reference's per-type coercion semantics (main.py:147-240): `UTF8String`
+  * strings, `Decimal(38,9)` decimals, micros `Long` timestamps, days `Int`
+  * dates, and array, map and row data for complex values.
+  *
+  * These are the value rules stated over whole datums. [[CdcRowReader]]
+  * applies the same rules straight off the Avro decoder and falls back to
+  * [[coerce]] for the shapes it does not decode natively; [[flatten]] and
+  * the probe's column forensics use them directly.
   */
 object AvroValueConverter {
   import Coercions._
+
+  /** How one value is coerced: a payload column ([[Typed]], or
+    * [[AsString]] in the all-string fallback) or one of the fixed
+    * source_metadata rules.
+    */
+  sealed trait Target extends Serializable
+  final case class Typed(tpe: AvroSparkType, mode: ConvertMode) extends Target
+  /** The all-string fallback's value (reference main.py:556-563). */
+  final case class AsString(tpe: AvroSparkType) extends Target
+  /** `source_metadata.tx_id`: [[Coercions.toLongStrict]]. */
+  case object StrictLong extends Target
+  /** `source_metadata.primary_keys`: [[Coercions.toListOfStr]]. */
+  case object StringList extends Target
+
+  private val Str = Typed(TString, ConvertMode.Standard)
+
+  /** The fixed source_metadata conversion (reference main.py:117-128), one
+    * rule per field of [[AvroSchemaConverter.SourceMetadataType]], in its
+    * order. A garbage tx_id throws: a hard failure.
+    */
+  val SourceMetadataTargets: IndexedSeq[(String, Target)] = IndexedSeq(
+    "schema" -> Str,
+    "table" -> Str,
+    "is_deleted" -> Typed(TBoolean, ConvertMode.Standard),
+    "change_type" -> Str,
+    "tx_id" -> StrictLong,
+    "lsn" -> Str,
+    "primary_keys" -> StringList)
+
+  /** `value` coerced by `target`, as a Catalyst value. */
+  def coerce(value: Any, target: Target): Any = target match {
+    case Typed(tpe, mode) => convert(value, tpe, mode)
+    case AsString(tpe) => UTF8String.fromString(fallbackValue(value, tpe))
+    case StrictLong => toLongStrict(value)
+    case StringList =>
+      val xs = toListOfStr(value)
+      if (xs == null) null else new GenericArrayData(xs.map(UTF8String.fromString).toArray[Any])
+  }
 
   def convert(value: Any, target: AvroSparkType, mode: ConvertMode): Any = {
     if (value == null) return null
     target match {
       case TTimestamp(unit) =>
+        val millis = unit == "millis"
         value match {
-          case n: java.lang.Long    => toTimestamp(n.longValue(), unit)
-          case n: java.lang.Integer => toTimestamp(n.longValue(), unit)
-          case n: java.lang.Double  => toTimestamp(n.longValue(), unit)
-          case n: java.lang.Float   => toTimestamp(n.longValue(), unit)
+          case n: java.lang.Long    => timestampMicros(n.longValue(), millis)
+          case n: java.lang.Integer => timestampMicros(n.longValue(), millis)
+          case n: java.lang.Double  => timestampMicros(n.longValue(), millis)
+          case n: java.lang.Float   => timestampMicros(n.longValue(), millis)
           // reference passes non-numerics through → Arrow build fails → fallback
           case other => throw FallbackConversionError(s"timestamp target got ${other.getClass}")
         }
       case TDate =>
         value match {
-          case n: java.lang.Integer => toDate(n.intValue())
-          case n: java.lang.Long    => toDate(n.intValue())
+          case n: java.lang.Integer => dateDays(n.intValue())
+          case n: java.lang.Long    => dateDays(n.intValue())
           case other => throw FallbackConversionError(s"date target got ${other.getClass}")
         }
-      case TDecimal =>
-        value match {
-          case b: ByteBuffer   => decimalFromBytes(byteArray(b))
-          case b: Array[Byte]  => decimalFromBytes(b)
-          case f: GenericFixed => decimalFromBytes(f.bytes())
-          case n @ (_: java.lang.Integer | _: java.lang.Long | _: java.lang.Float |
-                    _: java.lang.Double | _: JBigDecimal) => decimalFromNumber(n)
-          case _ => DecimalZero // reference main.py:198: anything else → 0
-        }
+      case TDecimal => Decimal(decimalOf(value))
       case TInt =>
         lenientLong(value).map(l => java.lang.Integer.valueOf(l.toInt)).orNull
       case TLong =>
@@ -188,7 +270,7 @@ object AvroValueConverter {
       case TDouble =>
         lenientDouble(value).map(java.lang.Double.valueOf).orNull
       case TBoolean => toBoolLenient(value)
-      case TString  => CanonicalJson.stringify(value)
+      case TString  => UTF8String.fromString(CanonicalJson.stringify(value))
       case TBinary =>
         mode match {
           case ConvertMode.Standard =>
@@ -208,7 +290,7 @@ object AvroValueConverter {
           case ConvertMode.Standard =>
             value match {
               case c: java.util.Collection[_] =>
-                c.asScala.toSeq.map(v => convert(v, elem, mode))
+                new GenericArrayData(c.asScala.map(v => convert(v, elem, mode)).toArray[Any])
               case other => throw FallbackConversionError(s"array target got ${other.getClass}")
             }
           case ConvertMode.ReferenceExact =>
@@ -219,22 +301,32 @@ object AvroValueConverter {
           case ConvertMode.Standard =>
             value match {
               case m: java.util.Map[_, _] =>
-                m.asScala.map { case (k, v) =>
+                // entries in this Scala Map's iteration order, the order
+                // earlier outputs hold, so a map column's bytes stay put
+                val entries = m.asScala.map { case (k, v) =>
                   CanonicalJson.stringify(k) -> convert(v, vt, mode)
                 }.toMap
+                val keys, values = new Array[Any](entries.size)
+                var i = 0
+                entries.foreach { case (k, v) =>
+                  keys(i) = UTF8String.fromString(k)
+                  values(i) = v
+                  i += 1
+                }
+                ArrayBasedMapData(keys, values)
               case other => throw FallbackConversionError(s"map target got ${other.getClass}")
             }
           case ConvertMode.ReferenceExact =>
             throw FallbackConversionError("complex column in ReferenceExact mode")
         }
-      case st @ TStruct(fields) =>
+      case TStruct(fields) =>
         mode match {
           case ConvertMode.Standard =>
             value match {
               case r: GenericRecord =>
-                Row.fromSeq(fields.map { f =>
+                new GenericInternalRow(fields.map { f =>
                   convert(fieldOf(r, f.name), f.tpe, mode)
-                })
+                }.toArray[Any])
               case other => throw FallbackConversionError(s"struct target got ${other.getClass}")
             }
           case ConvertMode.ReferenceExact =>
@@ -285,14 +377,18 @@ object AvroValueConverter {
       }
     } catch { case _: Exception => None }
 
-  private def toTimestamp(v: Long, unit: String): Timestamp = {
-    val micros = if (unit == "millis") Math.multiplyExact(v, 1000L) else v
-    val ts = new Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
-    ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-    ts
+  /** The decimal target's rule (reference main.py:170-199): bytes rescale
+    * and never fail, numerics quantize and fail on overflow, anything
+    * else is zero.
+    */
+  private def decimalOf(value: Any): JBigDecimal = value match {
+    case b: ByteBuffer   => decimalFromBytes(byteArray(b))
+    case b: Array[Byte]  => decimalFromBytes(b)
+    case f: GenericFixed => decimalFromBytes(f.bytes())
+    case n @ (_: java.lang.Integer | _: java.lang.Long | _: java.lang.Float |
+              _: java.lang.Double | _: JBigDecimal) => decimalFromNumber(n)
+    case _ => DecimalZero // reference main.py:198: anything else → 0
   }
-
-  private def toDate(days: Int): Date = Date.valueOf(LocalDate.ofEpochDay(days.toLong))
 
   private def byteArray(b: ByteBuffer): Array[Byte] = {
     val dup = b.duplicate()
@@ -317,24 +413,15 @@ object AvroValueConverter {
       case _ => null
     }
 
-  /** The fixed source_metadata conversion (reference main.py:117-128). */
-  def convertSourceMetadata(sm: GenericRecord): Row = {
-    def str(name: String): String = {
-      val v = fieldOf(sm, name)
-      if (v == null) null else CanonicalJson.stringify(v)
-    }
-    Row(
-      str("schema"),
-      str("table"),
-      Coercions.toBoolLenient(fieldOf(sm, "is_deleted")),
-      str("change_type"),
-      Coercions.toLongStrict(fieldOf(sm, "tx_id")), // throws on garbage — hard failure
-      str("lsn"),
-      Coercions.toListOfStr(fieldOf(sm, "primary_keys")),
-    )
-  }
+  /** The source_metadata struct of `sm` ([[SourceMetadataTargets]]); a
+    * null `sm` gives a struct of nulls.
+    */
+  def convertSourceMetadata(sm: GenericRecord): InternalRow =
+    new GenericInternalRow(SourceMetadataTargets.map { case (name, t) =>
+      coerce(fieldOf(sm, name), t)
+    }.toArray[Any])
 
-  /** One Avro record → flat external Row (source_metadata + payload.*).
+  /** One Avro record → flat row (source_metadata + payload.*).
     * Payload fields absent from the record are null; payload fields in the
     * record but not in the schema are dropped; a null payload yields all
     * null payload columns (reference main.py:111-145 + from_pylist).
@@ -342,13 +429,13 @@ object AvroValueConverter {
   def flatten(
       record: GenericRecord,
       flat: AvroSchemaConverter.FlatSchema,
-      mode: ConvertMode): Row = {
+      mode: ConvertMode): InternalRow = {
     val sm = convertSourceMetadata(recordField(record, "source_metadata"))
     val payload = recordField(record, "payload")
     val values = flat.payloadFields.map { f =>
       convert(fieldOf(payload, f.name), f.tpe, mode)
     }
-    Row.fromSeq(sm +: values)
+    new GenericInternalRow((sm +: values).toArray[Any])
   }
 
   /** The fallback path stringifies the CONVERTED value, not the raw datum
@@ -362,9 +449,7 @@ object AvroValueConverter {
     if (value == null) return null
     target match {
       case TTimestamp(_) | TDate => CanonicalJson.stringify(value) // raw passthrough
-      case TDecimal =>
-        val d = convert(value, TDecimal, ConvertMode.Standard).asInstanceOf[JBigDecimal]
-        d.toPlainString
+      case TDecimal => decimalOf(value).toPlainString
       case TInt | TLong =>
         lenientLong(value).map(_.toString).orNull
       case TFloat | TDouble =>
@@ -374,17 +459,5 @@ object AvroValueConverter {
       case TString | TBinary => CanonicalJson.stringify(value)
       case _: TArray | _: TMap | _: TStruct => CanonicalJson.stringify(value)
     }
-  }
-
-  /** All-string fallback row (reference main.py:556-563): source_metadata
-    * kept typed, every payload value stringified post-conversion.
-    */
-  def flattenFallback(record: GenericRecord, flat: AvroSchemaConverter.FlatSchema): Row = {
-    val sm = convertSourceMetadata(recordField(record, "source_metadata"))
-    val payload = recordField(record, "payload")
-    val values = flat.payloadFields.map { f =>
-      fallbackValue(fieldOf(payload, f.name), f.tpe)
-    }
-    Row.fromSeq(sm +: values)
   }
 }

@@ -51,13 +51,14 @@ object AvroToParquetJob {
     * [[runStreaming]] both apply it.
     */
   private val FolderPattern = "/avro/([^/]+)/"
+  private val FolderRegex = FolderPattern.r
   private val UnknownFolder = "unknown"
 
   /** The partition folder of `path`: per-FILE metadata, known before any
     * task runs.
     */
   def folderOf(path: String): String =
-    FolderPattern.r.findFirstMatchIn(path).map(_.group(1)).getOrElse(UnknownFolder)
+    FolderRegex.findFirstMatchIn(path).map(_.group(1)).getOrElse(UnknownFolder)
 
   def discover(spark: SparkSession, inputPattern: String): Seq[String] =
     AvroCdcReader.listFiles(Seq(inputPattern), spark.sparkContext.hadoopConfiguration)

@@ -6,17 +6,17 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
+import org.apache.avro.Schema
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.avro._
@@ -317,12 +317,13 @@ class EmptyPartitionReader extends PartitionReader[InternalRow] {
 }
 
 /** Streams one split of an Avro container as flattened InternalRows through
-  * [[AvroCdcReader.RangeRecordIterator]] (its sync-marker ownership and
-  * truncation guard), converting ONLY the columns the scan requires.
-  * Values are coerced to the TABLE's merged column types: a column whose
-  * per-file type matches converts natively; a column merged to string
-  * (type conflict across file generations) is stringified; anything else
-  * incompatible yields null.
+  * [[AvroCdcReader.RangeIterator]] (its sync-marker ownership and
+  * truncation guard), decoding with a [[graft.avro.CdcRowReader]] compiled
+  * once per file for the scan's `required` columns: the rest of the
+  * payload is skipped undecoded. Values are coerced to the TABLE's merged
+  * column types: a column whose per-file type matches converts natively; a
+  * column merged to string (type conflict across file generations) is
+  * stringified; anything else incompatible yields null.
   */
 class AvroCdcPartitionReader(
     split: AvroCdcReader.FileSplit,
@@ -334,28 +335,8 @@ class AvroCdcPartitionReader(
 
   private var emitted = 0L
 
-  private val records = new AvroCdcReader.RangeRecordIterator(split, conf)
-
-  // type to convert each payload field WITH, from the file's own writer
-  // schema (name-matched to `required`): the file's (unit-aware) type when
-  // it matches the table column; TString when the table merged to string;
-  // None (→ null) on any other mismatch
-  private val targetByName: Map[String, Option[AvroSparkType]] = {
-    val tableByName = tableFlat.payloadFields.map(f => f.name -> f).toMap
-    AvroSchemaConverter.deriveFlatSchema(records.schema.toString).payloadFields.map { f =>
-      f.name -> (tableByName.get(f.name) match {
-        case Some(t) if t.tpe == f.tpe => Some(f.tpe)
-        case Some(t) if t.tpe == AvroSparkType.TString => Some(AvroSparkType.TString)
-        case Some(_) => None
-        case None => Some(f.tpe) // single-schema mode: table == file
-      })
-    }.toMap
-  }
-
-  private val serializer: ExpressionEncoder.Serializer[Row] = {
-    val enc = ExpressionEncoder(RowEncoder.encoderFor(required))
-    enc.createSerializer()
-  }
+  private val rows = new AvroCdcReader.RangeIterator(split, conf,
+    new CdcRowReader(AvroCdcPartitionReader.columns(required, tableFlat, split.path)))
 
   private var current: InternalRow = _
 
@@ -378,29 +359,51 @@ class AvroCdcPartitionReader(
 
   private def nextUnsafe(): Boolean = {
     if (limit >= 0 && emitted >= limit) return false // pushed-down LIMIT
-    if (!records.hasNext) return false
+    if (!rows.hasNext) return false
     emitted += 1
-    val record = records.next()
-    val payload = AvroValueConverter.recordField(record, "payload")
-    val values: Seq[Any] = required.fields.toSeq.map { f =>
-      f.name match {
-        case AvroCdcDataSource.InputPathCol => split.path
-        case "source_metadata" =>
-          AvroValueConverter.convertSourceMetadata(
-            AvroValueConverter.recordField(record, "source_metadata"))
-        case name =>
-          targetByName.get(name).flatten match {
-            case Some(targetType) =>
-              AvroValueConverter.convert(
-                AvroValueConverter.fieldOf(payload, name), targetType, ConvertMode.Standard)
-            case None => null // type conflict not merged to string, or absent in this file
-          }
-      }
-    }
-    current = serializer(Row.fromSeq(values)).copy()
+    current =
+      try rows.next()
+      catch { case CdcRowReader.ConversionFailure(e) => throw e }
     true
   }
 
   override def get(): InternalRow = current
-  override def close(): Unit = records.close()
+  override def close(): Unit = rows.close()
+}
+
+object AvroCdcPartitionReader {
+
+  /** The scan's columns for one file of writer schema `writer`. Each
+    * payload column converts WITH the file's own (unit-aware) type when it
+    * matches the table column, as string when the table merged it to
+    * string, and is null on any other mismatch or when the file lacks it.
+    */
+  private[graft] def columns(
+      required: StructType,
+      tableFlat: AvroSchemaConverter.FlatSchema,
+      path: String)(writer: Schema): Seq[CdcRowReader.Column] = {
+    val tableByName = tableFlat.payloadFields.map(f => f.name -> f).toMap
+    val target: Map[String, Option[AvroSparkType]] =
+      AvroSchemaConverter.deriveFlatSchema(writer.toString).payloadFields.map { f =>
+        f.name -> (tableByName.get(f.name) match {
+          case Some(t) if t.tpe == f.tpe => Some(f.tpe)
+          case Some(t) if t.tpe == AvroSparkType.TString => Some(AvroSparkType.TString)
+          case Some(_) => None
+          case None => Some(f.tpe) // single-schema mode: table == file
+        })
+      }.toMap
+    required.fields.toSeq.map { f =>
+      f.name match {
+        case AvroCdcDataSource.InputPathCol =>
+          CdcRowReader.Constant(UTF8String.fromString(path))
+        case "source_metadata" => CdcRowReader.SourceMetadata
+        case name =>
+          target.get(name).flatten match {
+            case Some(t) =>
+              CdcRowReader.Payload(name, AvroValueConverter.Typed(t, ConvertMode.Standard))
+            case None => CdcRowReader.Constant(null)
+          }
+      }
+    }
+  }
 }

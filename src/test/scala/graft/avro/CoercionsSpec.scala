@@ -118,21 +118,20 @@ class CoercionsSpec extends AnyFunSuite {
 
   test("timestamp conversion: millis and micros units") {
     import ConvertMode.Standard
+    // Catalyst timestamps: micros since the epoch
     val tMs = AvroValueConverter
       .convert(java.lang.Long.valueOf(1704067200123L), TTimestamp("millis"), Standard)
-      .asInstanceOf[java.sql.Timestamp]
-    assert(tMs.getTime == 1704067200123L)
+    assert(tMs == 1704067200123000L)
     val tUs = AvroValueConverter
       .convert(java.lang.Long.valueOf(1704067200123456L), TTimestamp("micros"), Standard)
-      .asInstanceOf[java.sql.Timestamp]
-    assert(tUs.getTime == 1704067200123L && tUs.getNanos == 123456000)
+    assert(tUs == 1704067200123456L)
   }
 
   test("date conversion: days since epoch") {
     import ConvertMode.Standard
+    // Catalyst dates: days since the epoch
     val d = AvroValueConverter.convert(java.lang.Integer.valueOf(19723), TDate, Standard)
-      .asInstanceOf[java.sql.Date]
-    assert(d.toLocalDate == java.time.LocalDate.ofEpochDay(19723)) // 2024-01-01
+    assert(d == 19723) // 2024-01-01
   }
 
   // ---- canonical JSON (_stringify_any, main.py:16-24) ----
