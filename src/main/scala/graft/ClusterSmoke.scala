@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   *    closures) must resolve on executors via
   *    `spark.executor.extraClassPath` — exactly the deploy shape of
   *    `spark-submit --class graft.Convert` with a library jar;
-  *  - `SerializableConfiguration`, the broadcast flat schemas and the
+  *  - the broadcast Hadoop conf, the broadcast flat schemas and the
   *    collection accumulators must round-trip executor↔driver;
   *  - localCheckpoint fixture blocks live on ONE executor and later
   *    stages on the OTHER executor must fetch them remotely;

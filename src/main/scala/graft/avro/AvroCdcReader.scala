@@ -8,6 +8,7 @@ import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.io.DatumReader
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graft.DataFrameBridge
@@ -32,11 +33,12 @@ import org.apache.spark.util.{CollectionAccumulator, SerializableConfiguration}
   *    one well-typed DataFrame — Spark wants one schema per scan, while the
   *    reference derives a schema per file; grouping preserves the per-file
   *    dynamic-schema semantics without giving up DataFrame typing.
-  *  - Conversion runs inside `flatMap` tasks, one byte-range split per
-  *    element, so a 1000-executor cluster converts files embarrassingly
-  *    parallel with no shuffle anywhere — same dataflow shape as the
-  *    reference pipeline (main.py:601-613), but vectorized parquet write
-  *    and task-commit atomicity come from Spark.
+  *  - Conversion runs inside `flatMap` tasks, one bin of byte-range
+  *    splits per element ([[planBins]]: large containers cut, small ones
+  *    packed, bins balanced), so a 1000-executor cluster converts files
+  *    embarrassingly parallel with no shuffle anywhere — same dataflow
+  *    shape as the reference pipeline (main.py:601-613), but vectorized
+  *    parquet write and task-commit atomicity come from Spark.
   */
 object AvroCdcReader {
 
@@ -147,7 +149,7 @@ object AvroCdcReader {
       spark: SparkSession,
       paths: Seq[String]): (Seq[FileSchema], Seq[(String, String)]) = {
     if (paths.isEmpty) return (Seq.empty, Seq.empty)
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    val conf = broadcastConf(spark)
     val parts = spark.sparkContext
       .parallelize(paths, slices(paths.size, spark))
       .mapPartitions { it =>
@@ -156,7 +158,7 @@ object AvroCdcReader {
         val errs = ArrayBuffer.empty[(String, String)]
         it.foreach { p =>
           try {
-            val schema = writerSchema(p, conf.value)
+            val schema = writerSchema(p, conf.value.value)
             val fp = org.apache.avro.SchemaNormalization.parsingFingerprint64(schema)
             files += (p -> fp)
             if (!jsons.contains(fp)) jsons(fp) = schema.toString
@@ -188,38 +190,95 @@ object AvroCdcReader {
     FileSplit(path, 0L, len, len)
   }
 
-  /** Plan byte-range splits for a group of container files, Spark's own
-    * file-source sizing formula: split = min(maxPartitionBytes,
-    * max(openCostInBytes, totalBytes / defaultParallelism)) — a handful of
-    * giant containers still fans out across the cluster, a million small
-    * files cost one split each. Lengths come from one driver-side
-    * `getFileStatus` per file (the discovery glob already returned them;
-    * carrying the FileStatus through the schema-group pipeline instead is
-    * the production refinement).
+  /** Floor of the split target. Below about 1 MB a split or bin costs
+    * more in task launch and deserialization than it gains in balance (a
+    * 200-row write task takes 150-230 ms from launch to finish on a 4-core
+    * box; there a 0.5 MB floor converted the perfbench backlog at a
+    * median 108k rows/s against 115k at 1 MB, and 2 MB matched 1 MB).
+    */
+  private[avro] val MinSplitBytes: Long = 1L << 20
+
+  /** The split target for files totalling `groupBytes`:
+    * min(maxPartitionBytes, max([[MinSplitBytes]], groupBytes /
+    * defaultParallelism)), or `maxSplitBytesOverride`.
+    */
+  private def splitTarget(
+      spark: SparkSession, groupBytes: Long, maxSplitBytesOverride: Option[Long]): Long =
+    math.max(1L, maxSplitBytesOverride.getOrElse {
+      val maxPartition = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
+        .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
+        .getOrElse(128L << 20)
+      val perCore = groupBytes / math.max(1, spark.sparkContext.defaultParallelism)
+      math.min(maxPartition, math.max(MinSplitBytes, perCore))
+    })
+
+  /** Each file longer than `target` cut into ceil(length / target) equal
+    * byte ranges; shorter files whole.
+    */
+  private def cut(files: Seq[FileSplit], target: Long): Seq[FileSplit] =
+    files.flatMap { f =>
+      val n = (f.length + target - 1) / target
+      if (n <= 1) Seq(f)
+      else {
+        val (base, rem) = (f.length / n, f.length % n)
+        def at(i: Long) = i * base + math.min(i, rem)
+        (0L until n).map(i => FileSplit(f.path, at(i), at(i + 1), f.length))
+      }
+    }
+
+  /** Byte-range splits for a group of container files (see [[planBins]]
+    * for the target). Lengths come from one driver-side `getFileStatus`
+    * per file.
     */
   private[graft] def planSplits(
       spark: SparkSession,
       paths: Seq[String],
       conf: Configuration,
       maxSplitBytesOverride: Option[Long] = None): Seq[FileSplit] = {
-    def bytesConf(key: String, default: Long): Long =
-      spark.conf.getOption(key)
-        .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes)
-        .getOrElse(default)
     val files = paths.map(wholeFile(_, conf))
-    val maxSplit = maxSplitBytesOverride.getOrElse {
-      val maxPartition = bytesConf("spark.sql.files.maxPartitionBytes", 128L << 20)
-      val openCost = bytesConf("spark.sql.files.openCostInBytes", 4L << 20)
-      val perCore = files.map(_.length).sum /
-        math.max(1, spark.sparkContext.defaultParallelism)
-      math.min(maxPartition, math.max(openCost, perCore))
-    }
-    files.flatMap { f =>
-      if (f.length <= maxSplit) Seq(f)
-      else (0L until f.length by maxSplit).map(s =>
-        FileSplit(f.path, s, math.min(s + maxSplit, f.length), f.length))
-    }
+    cut(files, splitTarget(spark, files.map(_.length).sum, maxSplitBytesOverride))
   }
+
+  /** The split plan of one group of whole `files` (one write unit, one
+    * scan): one task per returned bin. The target T = min(maxPartitionBytes,
+    * max([[MinSplitBytes]], groupBytes / defaultParallelism)), or
+    * `maxSplitBytesOverride`; files longer than T are cut into equal ranges
+    * (a few giant containers still fan out across the cluster), and the
+    * splits are packed into ceil(groupBytes / T) bins, the largest split
+    * first, each into the least-loaded bin (a million small files cost a
+    * few tasks, not a million). No bin is empty: every split is at most T,
+    * so there are at least as many non-empty splits as bins. Within a bin,
+    * splits are in (path, start) order.
+    */
+  private[graft] def planBins(
+      spark: SparkSession,
+      files: Seq[FileSplit],
+      maxSplitBytesOverride: Option[Long] = None): Seq[Seq[FileSplit]] = {
+    val groupBytes = files.map(_.length).sum
+    val target = splitTarget(spark, groupBytes, maxSplitBytesOverride)
+    val splits = cut(files, target)
+    if (splits.isEmpty) return Seq.empty
+    val bins = Array.fill(math.max(1L, (groupBytes + target - 1) / target).toInt)(
+      ArrayBuffer.empty[FileSplit])
+    // (load, bin), least load first, ties to the lower bin
+    val open = scala.collection.mutable.PriorityQueue.empty[(Long, Int)](
+      Ordering[(Long, Int)].reverse)
+    bins.indices.foreach(i => open.enqueue((0L, i)))
+    splits.sortBy(s => s.start - s.end).foreach { s =>
+      val (load, i) = open.dequeue()
+      bins(i) += s
+      open.enqueue((load + s.end - s.start, i))
+    }
+    bins.toSeq.map(_.sortBy(s => (s.path, s.start)).toSeq)
+  }
+
+  /** The session's Hadoop conf as one broadcast per job: each task reads it
+    * from its executor's block store instead of deserializing a whole
+    * `Configuration` shipped in its closure.
+    */
+  private[graft] def broadcastConf(spark: SparkSession): Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
 
   // ------------------------------------------------------------------
   // Lazy split reading (round 14): the convert path used to buffer a
@@ -631,17 +690,18 @@ object AvroCdcReader {
       flat: AvroSchemaConverter.FlatSchema,
       mode: ConvertMode = ConvertMode.ReferenceExact): Seq[FileStatus] = {
     if (paths.isEmpty) return Seq.empty
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    val confB = broadcastConf(spark)
     val flatB = spark.sparkContext.broadcast(flat)
     spark.sparkContext
       .parallelize(paths, slices(paths.size, spark))
       .map { p =>
+        val conf = confB.value.value
         // the fallback projection itself can still hard-fail (the
         // reference re-raises, main.py:565-567) — read it too
         def fallback(whole: FileSplit, reason: String): FileStatus =
           try {
-            drain(whole, conf.value, CdcRowReader.fallbackColumns(flatB.value))
-            FileNeedsFallback(p, reason, probeColumns(whole, conf.value, flatB.value))
+            drain(whole, conf, CdcRowReader.fallbackColumns(flatB.value))
+            FileNeedsFallback(p, reason, probeColumns(whole, conf, flatB.value))
           } catch {
             case e: Exception => FileFailed(p, conversionCause(e).toString)
           }
@@ -649,10 +709,10 @@ object AvroCdcReader {
           // every read streams record-at-a-time: a probe file is WHOLE
           // (no split bound), so buffering it would be the worst memory
           // offender of all the read paths
-          val whole = wholeFile(p, conf.value)
+          val whole = wholeFile(p, conf)
           try {
-            validateRange(whole, conf.value)
-            drain(whole, conf.value, CdcRowReader.flatColumns(flatB.value, mode))
+            validateRange(whole, conf)
+            drain(whole, conf, CdcRowReader.flatColumns(flatB.value, mode))
             FileOk(p): FileStatus
           } catch {
             case CdcRowReader.ConversionFailure(e: FallbackConversionError)
@@ -696,8 +756,9 @@ object AvroCdcReader {
     StructType(relaxed.fields :+ StructField(pathCol, StringType, nullable = false))
   }
 
-  /** The byte-range split fan-out of one group of files: each split's
-    * rows come from [[lazyRows]] with `columns` plus its file's path as
+  /** The split plan of one group of files run as one task and one Parquet
+    * file per bin ([[planBins]]): each split of a bin, in turn, gives its
+    * rows through [[lazyRows]] with `columns` plus its file's path as
     * [[InputPathCol]], straight into a DataFrame of `schema` — no encoder.
     */
   private def readSplits(
@@ -706,27 +767,28 @@ object AvroCdcReader {
       schema: StructType,
       failedAcc: CollectionAccumulator[String],
       columns: Seq[CdcRowReader.Column]): DataFrame = {
-    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
-    val splits = planSplits(spark, paths, spark.sparkContext.hadoopConfiguration)
+    val conf = broadcastConf(spark)
+    val bins = planBins(spark, paths.map(wholeFile(_, spark.sparkContext.hadoopConfiguration)))
     val rows = spark.sparkContext
-      .parallelize(splits, slices(splits.size, spark))
-      .flatMap { s =>
+      .parallelize(bins, math.max(1, bins.size))
+      .flatMap(_.iterator.flatMap { s =>
         val path = CdcRowReader.Constant(UTF8String.fromString(s.path))
-        lazyRows(s, conf.value, failedAcc, new CdcRowReader(_ => columns :+ path))
-      }
+        lazyRows(s, conf.value.value, failedAcc, new CdcRowReader(_ => columns :+ path))
+      })
     DataFrameBridge.fromInternalRows(spark, rows, schema)
   }
 
-  /** Typed conversion of one schema group, parallelized over BYTE-RANGE
-    * splits (not just files): a handful of multi-GB containers fans out
-    * across the cluster instead of pinning one core per file.
+  /** Typed conversion of one schema group, parallelized over packed bins
+    * of BYTE-RANGE splits (not files): a handful of multi-GB containers
+    * fans out across the cluster instead of pinning one core per file, and
+    * many small files share a few tasks.
     *
     * READ-failure contract — GUARDED EMISSION, not whole-file atomicity
     * (pinned by mutation scenario M10): rows from Avro blocks decoded
     * before a mid-range codec/decode failure STAND — whether the range is
     * one split of a large container or the whole of a small file — the
-    * failure stops further emission from that range and the path lands in
-    * `failedAcc`. The emitted prefix is valid, exactly-decoded data
+    * failure stops further emission from that range (the other splits of
+    * its bin still convert) and the path lands in `failedAcc`. The emitted prefix is valid, exactly-decoded data
     * (Spark's own `ignoreCorruptFiles` shape); header-level corruption is
     * caught a stage earlier by [[schemaFingerprints]] and contributes
     * zero rows. CONSEQUENCE for callers: a path reported in
@@ -750,7 +812,7 @@ object AvroCdcReader {
       CdcRowReader.flatColumns(flat, mode))
 
   /** All-string fallback read of files that defeated the typed schema
-    * (same byte-range split fan-out as [[readGroup]]).
+    * (same split plan as [[readGroup]]).
     */
   def readGroupFallback(
       spark: SparkSession,

@@ -26,7 +26,7 @@ import graft.avro.AvroCdcReader
   * file generations (conflicting payload types collapse to string — the
   * reference's universal fallback), so a consumer sees one stable view as
   * writer schemas evolve. Reads go through the same [[AvroCdcTable]] scan
-  * as `format("cdc-avro")`: one partition per sync-marker byte range,
+  * as `format("cdc-avro")`: one partition per bin of sync-marker byte ranges,
   * column pruning, per-file type coercion to the merged view.
   *
   * Read-only by design — the landing zone is produced by the upstream CDC

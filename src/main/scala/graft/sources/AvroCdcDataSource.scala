@@ -8,7 +8,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.avro.Schema
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -30,9 +30,10 @@ import graft.avro._
   * writer schema), plus an `_input_path` provenance column.
   *
   * Spark-native properties the reference lacks:
-  *  - one input partition per sync-marker byte range → a few giant
-  *    containers fan out across the cluster, small files stay one
-  *    partition each;
+  *  - the converter's split plan ([[graft.avro.AvroCdcReader.planBins]]):
+  *    one input partition per bin of sync-marker byte ranges → a few giant
+  *    containers fan out across the cluster, small files are packed a few
+  *    to a partition, and partitions are balanced by bytes;
   *  - REAL column pruning ([[SupportsPushDownRequiredColumns]]): unneeded
   *    payload fields are never converted (the reference materializes every
   *    file fully, twice);
@@ -235,76 +236,76 @@ class AvroCdcScan(
   override def description(): String =
     s"cdc-avro scan, ${files.size} files, columns=[${required.fieldNames.mkString(",")}]"
 
-  /** One partition per BYTE RANGE, not per file (same sync-marker split
-    * contract and sizing formula as the conversion path,
-    * [[graft.avro.AvroCdcReader.planSplits]]): a few giant containers fan
-    * out across the cluster; small files stay one partition each.
+  /** Each file's length, read once per scan for both the plan and the
+    * size estimate; a file gone since the listing keeps its error.
     */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    graft.avro.AvroCdcReader
-      .planSplits(spark, files, spark.sparkContext.hadoopConfiguration)
-      .map(s => AvroCdcInputPartition(s.path, s.start, s.end, s.length): InputPartition)
-      .toArray
+  private lazy val wholeFiles: Seq[scala.util.Try[AvroCdcReader.FileSplit]] = {
+    val conf = AvroCdcDataSource.hadoopConf
+    files.map(f => scala.util.Try(AvroCdcReader.wholeFile(f, conf)))
   }
+
+  /** One partition per bin of the converter's split plan
+    * ([[graft.avro.AvroCdcReader.planBins]], same sync-marker split
+    * contract): a few giant containers fan out across the cluster, small
+    * files are packed a few to a partition.
+    */
+  override def planInputPartitions(): Array[InputPartition] =
+    AvroCdcReader.planBins(org.apache.spark.sql.SparkSession.active, wholeFiles.map(_.get))
+      .map(bin => AvroCdcBinPartition(
+        bin.map(s => AvroCdcInputPartition(s.path, s.start, s.end, s.length))): InputPartition)
+      .toArray
 
   /** Compressed on-disk bytes as the size estimate: lets Spark's join
     * planning auto-broadcast small CDC tables (e.g. catalog dimension
     * folders) instead of shuffling both sides.
     */
   override def estimateStatistics(): Statistics = new Statistics {
-    private lazy val totalBytes: Long = {
-      val conf = AvroCdcDataSource.hadoopConf
-      files.map { f =>
-        val p = new Path(f)
-        try p.getFileSystem(conf).getFileStatus(p).getLen
-        catch { case _: Exception => 0L }
-      }.sum
-    }
     override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(totalBytes)
+      java.util.OptionalLong.of(wholeFiles.map(_.map(_.length).getOrElse(0L)).sum)
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
   }
 
-  private def serializableConf = new SerializableConfiguration(AvroCdcDataSource.hadoopConf)
+  private def confBroadcast =
+    AvroCdcReader.broadcastConf(org.apache.spark.sql.SparkSession.active)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    AvroCdcReaderFactory(required, tableFlat, serializableConf, ignoreCorrupt, limit)
+    AvroCdcReaderFactory(required, tableFlat, confBroadcast, ignoreCorrupt, limit)
 
   override def toMicroBatchStream(checkpointLocation: String):
       org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new AvroCdcMicroBatchStream(globs, required, tableFlat, serializableConf,
+    new AvroCdcMicroBatchStream(globs, required, tableFlat, confBroadcast,
       ignoreCorrupt)
 }
 
-/** One scan partition: the byte range `[start, end)` of a file `length`
-  * bytes long, or, when `end < 0` (the micro-batch stream's partitions),
-  * the whole file.
+/** One split of a scan partition: the byte range `[start, end)` of a file
+  * `length` bytes long, or, when `end < 0` (the micro-batch stream's
+  * splits, one whole file per partition), the whole file.
   */
 case class AvroCdcInputPartition(
-    path: String, start: Long = 0L, end: Long = -1L, length: Long = -1L)
-    extends InputPartition {
+    path: String, start: Long = 0L, end: Long = -1L, length: Long = -1L) {
   private[sources] def split(conf: Configuration): AvroCdcReader.FileSplit =
     if (end < 0) AvroCdcReader.wholeFile(path, conf)
     else AvroCdcReader.FileSplit(path, start, end, length)
 }
 
+/** One scan partition: the splits of one bin, read in turn. */
+case class AvroCdcBinPartition(splits: Seq[AvroCdcInputPartition]) extends InputPartition
+
 case class AvroCdcReaderFactory(
     required: StructType,
     tableFlat: AvroSchemaConverter.FlatSchema,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     ignoreCorrupt: Boolean = false,
     limit: Int = -1) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[AvroCdcInputPartition]
-    def open() = new AvroCdcPartitionReader(
-      p.split(conf.value), required, tableFlat, conf.value, ignoreCorrupt, limit)
-    if (!ignoreCorrupt) open()
-    else
-      try open()
+    def open(p: AvroCdcInputPartition): PartitionReader[InternalRow] =
+      try new AvroCdcPartitionReader(
+        p.split(conf.value.value), required, tableFlat, conf.value.value, ignoreCorrupt, limit)
       catch {
-        case _: Exception => new EmptyPartitionReader
+        case _: Exception if ignoreCorrupt => new EmptyPartitionReader
       }
+    new ChainedPartitionReader(
+      partition.asInstanceOf[AvroCdcBinPartition].splits.iterator.map(open))
   }
 }
 
@@ -314,6 +315,27 @@ class EmptyPartitionReader extends PartitionReader[InternalRow] {
   override def get(): InternalRow =
     throw new IllegalStateException("empty reader")
   override def close(): Unit = ()
+}
+
+/** The rows of `readers` one reader after another, each opened when the
+  * one before it is exhausted and closed then, so one file is open at a
+  * time.
+  */
+class ChainedPartitionReader(readers: Iterator[PartitionReader[InternalRow]])
+    extends PartitionReader[InternalRow] {
+  private var current: PartitionReader[InternalRow] = new EmptyPartitionReader
+
+  override def next(): Boolean = {
+    while (!current.next()) {
+      current.close()
+      if (!readers.hasNext) return false
+      current = readers.next()
+    }
+    true
+  }
+
+  override def get(): InternalRow = current.get()
+  override def close(): Unit = current.close()
 }
 
 /** Streams one split of an Avro container as flattened InternalRows through

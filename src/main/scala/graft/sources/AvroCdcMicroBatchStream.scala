@@ -2,6 +2,7 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types.StructType
@@ -40,13 +41,13 @@ class AvroCdcMicroBatchStream(
     globs: Seq[String],
     required: StructType,
     tableFlat: graft.avro.AvroSchemaConverter.FlatSchema,
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     ignoreCorrupt: Boolean = false) extends MicroBatchStream {
 
   override def initialOffset(): Offset = AvroCdcOffset(Seq.empty)
 
   override def latestOffset(): Offset =
-    AvroCdcOffset(graft.avro.AvroCdcReader.listFiles(globs, conf.value))
+    AvroCdcOffset(graft.avro.AvroCdcReader.listFiles(globs, conf.value.value))
 
   override def deserializeOffset(json: String): Offset = AvroCdcOffset.fromJson(json)
 
@@ -54,7 +55,7 @@ class AvroCdcMicroBatchStream(
     val seen = start.asInstanceOf[AvroCdcOffset].files.toSet
     end.asInstanceOf[AvroCdcOffset].files
       .filterNot(seen.contains)
-      .map(f => AvroCdcInputPartition(f): InputPartition)
+      .map(f => AvroCdcBinPartition(Seq(AvroCdcInputPartition(f))): InputPartition)
       .toArray
   }
 

@@ -626,17 +626,18 @@ class AvroToParquetJobSpec extends AnyFunSuite {
     "same rows, reference layout preserved") {
     val in = tmpDir("graft-in9")
     val out = tmpDir("graft-out9")
-    // 6 input avro files → 6 output parquet files (the reference's
-    // one-file-per-file shape)
+    // 6 ledgered polls of one new avro file each → 6 output parquet
+    // files (the reference's one-file-per-file shape)
     (0 until 6).foreach { i =>
       AvroFixtures.writeAvro(s"$in/avro/users/f$i.avro",
         AvroFixtures.BasicEnvelope, Seq(
           Map("uuid" -> s"u$i", "read_timestamp" -> 0L,
             "source_metadata" -> AvroFixtures.sm("users", txId = i.toLong),
             "payload" -> Map("id" -> i.toLong, "name" -> s"n$i"))))
+      AvroToParquetJob.runOnce(spark, s"$in/avro/*/*.avro", out,
+        ConvertMode.Standard, ledgerDir = Some(s"$in/_ledger"),
+        ingestionDate = Some("2024-06-01"))
     }
-    AvroToParquetJob.runOnce(spark, s"$in/avro/*/*.avro", out,
-      ConvertMode.Standard, ingestionDate = Some("2024-06-01"))
     val dir = new java.io.File(s"$out/users/ingestion_date=2024-06-01")
     def parquets() = dir.listFiles.count(_.getName.endsWith(".parquet"))
     assert(parquets() >= 6)

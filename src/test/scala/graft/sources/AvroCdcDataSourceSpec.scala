@@ -10,6 +10,17 @@ import graft.avro.AvroFixtures
 class AvroCdcDataSourceSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
+  /** Runs `f` with `file:` paths on a fresh [[CountingLocalFs]] per use. */
+  private def withCountingFs[T](f: => T): T = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl" -> classOf[CountingLocalFs].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    val saved = keys.map { case (k, _) => k -> Option(conf.get(k)) }
+    keys.foreach { case (k, v) => conf.set(k, v) }
+    try f
+    finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+  }
+
   private def writeFixture(): String = {
     val in = Files.createTempDirectory("graft-dsv2").toFile.getAbsolutePath
     AvroFixtures.writeAvro(s"$in/avro/users/a.avro", AvroFixtures.BasicEnvelope, Seq(
@@ -26,11 +37,15 @@ class AvroCdcDataSourceSpec extends AnyFunSuite {
     in
   }
 
-  test("cdc-avro DSv2: flattened typed read over a glob, one partition per file") {
+  test("cdc-avro DSv2: flattened typed read over a glob, two tiny files " +
+    "packed into one partition") {
     val in = writeFixture()
     val df = spark.read.format("cdc-avro").load(s"$in/avro/*/*.avro")
     assert(df.columns.contains("source_metadata") && df.columns.contains("id"))
-    assert(df.rdd.getNumPartitions == 2)
+    assert(df.rdd.getNumPartitions == 1)
+    val paths = df.select("id", "_input_path").collect()
+      .map(r => r.getLong(0) -> r.getString(1).split('/').last).toSeq
+    assert(paths.sorted == Seq(1L -> "a.avro", 2L -> "a.avro", 3L -> "b.avro"))
     val rows = df.orderBy("id").collect()
     assert(rows.map(_.getAs[Long]("id")).toSeq == Seq(1L, 2L, 3L))
     val sm = rows(0).getStruct(rows(0).fieldIndex("source_metadata"))
@@ -57,17 +72,24 @@ class AvroCdcDataSourceSpec extends AnyFunSuite {
     "header once, with mergeSchema") {
     val in = writeFixture()
     val globs = Seq(s"$in/avro/users/a.avro", s"$in/avro/users/b*.avro")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val keys = Seq("fs.file.impl" -> classOf[CountingLocalFs].getName,
-      "fs.file.impl.disable.cache" -> "true")
-    val saved = keys.map { case (k, _) => k -> Option(conf.get(k)) }
     CountingLocalFs.reset()
-    keys.foreach { case (k, v) => conf.set(k, v) }
-    val df = try spark.read.format("cdc-avro").option("mergeSchema", "true").load(globs: _*)
-    finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+    val df = withCountingFs(
+      spark.read.format("cdc-avro").option("mergeSchema", "true").load(globs: _*))
     assert(CountingLocalFs.counts("glob") == globs.map(_ -> 1).toMap)
     assert(CountingLocalFs.counts("open") == Map("a.avro" -> 1, "b.avro" -> 1))
     assert(df.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
+  test("cdc-avro DSv2: one scan reads each file's length once, for both its " +
+    "partitions and its size estimate") {
+    val in = writeFixture()
+    withCountingFs {
+      val df = spark.read.format("cdc-avro").load(s"$in/avro/*/*.avro")
+      CountingLocalFs.reset()
+      assert(df.queryExecution.executedPlan.execute().getNumPartitions == 1)
+      assert(df.queryExecution.optimizedPlan.stats.sizeInBytes > 0)
+    }
+    assert(CountingLocalFs.counts("status") == Map("a.avro" -> 1, "b.avro" -> 1))
   }
 
   test("cdc-avro DSv2: column pruning reaches the scan") {
@@ -276,6 +298,9 @@ class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
   }
   override def open(p: Path, bufferSize: Int): FSDataInputStream = {
     CountingLocalFs.count("open", p.getName); super.open(p, bufferSize)
+  }
+  override def getFileStatus(p: Path): FileStatus = {
+    CountingLocalFs.count("status", p.getName); super.getFileStatus(p)
   }
 }
 
