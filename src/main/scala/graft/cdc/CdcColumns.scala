@@ -307,7 +307,7 @@ object CdcColumns {
     // NOT narrowed to 8 shuffle partitions like the stateful streaming
     // queries: the per-batch MERGE is a real 10^5-row key shuffle, not a
     // state-store commit — narrowing it measured 0.7 s SLOWER
-    val q = spark.readStream
+    val writer = spark.readStream
         .schema(events.schema)
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "*.parquet")
@@ -322,11 +322,11 @@ object CdcColumns {
           }
           latestPerKey(input, Seq("id"),
             Seq(col("tx_id"), col("qty"), col("amount")))
-            .write.mode("overwrite").parquet(s"$tmp/state$id")
+            .write.options(graft.io.LocalFs.options(spark)).mode("overwrite").parquet(s"$tmp/state$id")
           statePath = Some(s"$tmp/state$id")
           ()
         }
-        .start()
+    val q = graft.io.LocalFs.aroundStart(spark)(writer.start())
     try q.awaitTermination()
     finally q.stop()
     spark.read.parquet(statePath.get)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.avro._
+import graft.io.LocalFs
 
 /** The engine's CDC conversion job: continuously (or once) convert CDC Avro
   * container files to flattened, typed, partitioned Snappy Parquet.
@@ -378,12 +379,17 @@ object AvroToParquetJob {
     false
   }
 
+  /** Through [[LocalFs]], so the job's task files, `.crc` sidecars,
+    * `_temporary` dirs and `_SUCCESS` are made without a `chmod` process
+    * each.
+    */
   private def write(
       df: DataFrame, outputPrefix: String, folder: String,
       ingestionDate: String): Unit = {
     df.withColumn("ingestion_date", lit(ingestionDate))
       .drop(AvroCdcReader.InputPathCol)
       .write
+      .options(LocalFs.options(df.sparkSession))
       .mode("append")
       .partitionBy("ingestion_date")
       .option("compression", "snappy")
@@ -485,7 +491,7 @@ object AvroToParquetJob {
     val pathCol = graft.sources.AvroCdcDataSource.InputPathCol
     val folder = regexp_extract(col(pathCol), FolderPattern, 1)
     val folderCol = when(folder === "", UnknownFolder).otherwise(folder)
-    spark.readStream.format("cdc-avro").options(readerOptions).load(inputPattern)
+    val writer = spark.readStream.format("cdc-avro").options(readerOptions).load(inputPattern)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -504,7 +510,7 @@ object AvroToParquetJob {
           } finally { tagged.unpersist(); () }
         }
       }
-      .start()
+    LocalFs.aroundStart(spark)(writer.start())
   }
 
   /** `30m` / `1h` / `2d` → seconds (reference main.py:242-246). */

@@ -54,7 +54,8 @@ object Compaction {
     val tmp = new Path(dir.getParent, s".${dir.getName}._compact_tmp")
     fs.delete(tmp, true)
     df.coalesce(targetFiles)
-      .write.option("compression", "snappy").parquet(tmp.toString)
+      .write.options(graft.io.LocalFs.options(spark))
+      .option("compression", "snappy").parquet(tmp.toString)
 
     val written = spark.read.parquet(tmp.toString)
     require(written.count() == expected,

@@ -50,7 +50,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 final class FileLedger(dir: String, conf: Configuration, shards: Int = 1) {
   require(shards >= 1, s"shards must be >= 1, got $shards")
   private val dirPath = new Path(dir)
-  private val fs: FileSystem = dirPath.getFileSystem(conf)
+  // batch files and markers are created without a `chmod` process each
+  private val fs: FileSystem = dirPath.getFileSystem(graft.io.LocalFs.configured(conf))
 
   // ---- layout migration (lazy, once per instance) ----
   // Changing `shards` against an existing ledger must MOVE history, not

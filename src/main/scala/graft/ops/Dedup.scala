@@ -315,19 +315,18 @@ object Dedup {
     // defaults (checksum sidecars off unless pinned in the SparkConf —
     // graft.streaming.CheckpointTuning)
     graft.streaming.CheckpointTuning.applyStreamingDefaults(spark)
-    val q = spark.readStream.schema(schema).parquet(inputDir)
+    val writer = spark.readStream.schema(schema).parquet(inputDir)
       .writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val newSh = shingleFrame(batch)
         matchAgainstIndex(spark, newSh, indexDir)
-          .write.mode("overwrite").parquet(s"$pairsDir/batch_id=$id")
+          .write.options(graft.io.LocalFs.options(spark)).mode("overwrite").parquet(s"$pairsDir/batch_id=$id")
         writeSignatures(newSh, s"$indexDir/batch=$id", "overwrite")
         ()
       }
-      .start()
-    q.awaitTermination()
+    graft.io.LocalFs.aroundStart(spark)(writer.start()).awaitTermination()
   }
 
   private def incrementalFrom(oldBanded: DataFrame, oldSh: DataFrame,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.GraftQuery
+import graft.io.LocalFs
 
 /** Structured Streaming executions of the event-table operators — the
   * `readStream` → stateful transform → memory-sink queries split out of
@@ -23,18 +24,6 @@ import graft.GraftQuery
   */
 object EventStreaming {
 
-  /** Start an AvailableNow stream with (a) the stateful shuffle sized to
-    * state volume (8 state stores beat 32 at suite volumes — a real
-    * deployment sizes this the same way) and (b) the no-data
-    * finalization micro-batch DISABLED. The callers either run
-    * complete-mode aggregations (every data batch re-emits full state)
-    * or an inner stream-stream join (matches emit in data batches), so
-    * the trailing empty batch exists only to advance the watermark for
-    * emission gating none of them uses — measured 0.45–0.8 s of pure
-    * fixed cost per query. NOT used by [[qStreamSession]]: its
-    * `flatMapGroupsWithState` timeouts FIRE in watermark-advancing
-    * batches, so that query keeps the default.
-    */
   /** Final presentation sort for a memory-sink result: the sink has
     * already materialized the (bounded) result on the driver, so a
     * single-partition `sortWithinPartitions` delivers the same total
@@ -47,6 +36,20 @@ object EventStreaming {
   private[ops] def sinkSorted(df: DataFrame, cols: Column*): DataFrame =
     df.coalesce(1).sortWithinPartitions(cols: _*)
 
+  /** Start an AvailableNow stream with (a) the stateful shuffle sized to
+    * state volume (8 state stores beat 32 at suite volumes — a real
+    * deployment sizes this the same way) and (b) the no-data
+    * finalization micro-batch DISABLED. The callers either run
+    * complete-mode aggregations (every data batch re-emits full state)
+    * or an inner stream-stream join (matches emit in data batches), so
+    * the trailing empty batch exists only to advance the watermark for
+    * emission gating none of them uses — measured 0.45–0.8 s of pure
+    * fixed cost per query. NOT used by [[qStreamSession]]: its
+    * `flatMapGroupsWithState` timeouts FIRE in watermark-advancing
+    * batches, so that query keeps the default. The stream also starts
+    * under [[LocalFs.aroundStart]], so its checkpoint I/O spawns no
+    * process.
+    */
   private[ops] def startTrimmedStream[T](spark: SparkSession,
       parts: Option[String])(start: => T): T = {
     val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -55,7 +58,7 @@ object EventStreaming {
     try {
       parts.foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
       spark.conf.set(ndKey, "false")
-      start
+      LocalFs.aroundStart(spark)(start)
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       spark.conf.set(ndKey, prevNd)
@@ -465,16 +468,18 @@ object EventStreaming {
       // doubles the per-batch state-store commit I/O (4 stores per
       // side per partition; +3 s) — re-swept this round
       spark.conf.set("spark.sql.shuffle.partitions", "8")
-      joined
-        .select(col("v_user").as("user_id"), col("v_id"), col("c_id"),
-          unix_micros(col("v_ts")).as("v_tu"),
-          unix_micros(col("c_ts")).as("c_tu"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
+      LocalFs.aroundStart(spark) {
+        joined
+          .select(col("v_user").as("user_id"), col("v_id"), col("c_id"),
+            unix_micros(col("v_ts")).as("v_tu"),
+            unix_micros(col("c_ts")).as("c_tu"))
+          .writeStream
+          .outputMode("append")
+          .format("memory")
+          .queryName(name)
+          .trigger(Trigger.AvailableNow())
+          .start()
+      }
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     try q.awaitTermination()
     finally q.stop()
@@ -574,7 +579,7 @@ object EventStreaming {
     @volatile var wmUs = Long.MinValue // max event time of PRIOR batches
     @volatile var nLate = 0L
     @volatile var statePath: Option[String] = None
-    val q = spark.readStream
+    val writer = spark.readStream
         .schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "*.parquet")
@@ -601,12 +606,12 @@ object EventStreaming {
               .agg(sum(col("n")).as("n"), sum(col("cents")).as("cents"))
             case None => onTime
           }
-          merged.write.mode("overwrite").parquet(s"$tmp/state$id")
+          merged.write.options(LocalFs.options(spark)).mode("overwrite").parquet(s"$tmp/state$id")
           statePath = Some(s"$tmp/state$id")
           if (!st.isNullAt(1)) wmUs = math.max(wmUs, st.getLong(1))
           ()
         }
-        .start()
+    val q = LocalFs.aroundStart(spark)(writer.start())
     try q.awaitTermination()
     finally q.stop()
     val expected = java.nio.file.Files.readString(
@@ -767,13 +772,15 @@ object EventStreaming {
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     val q = try {
       spark.conf.set("spark.sql.shuffle.partitions", "8")
-      sessions.toDF().writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
+      LocalFs.aroundStart(spark) {
+        sessions.toDF().writeStream
+          .outputMode("append")
+          .format("memory")
+          .queryName(name)
+          .option("checkpointLocation", s"$tmp/ckpt")
+          .trigger(Trigger.AvailableNow())
+          .start()
+      }
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     try q.awaitTermination()
     finally q.stop()

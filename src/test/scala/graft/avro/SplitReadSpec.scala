@@ -44,30 +44,25 @@ class SplitReadSpec extends AnyFunSuite {
   test("DSv2 batch scan plans byte-range partitions: a single large " +
     "container occupies multiple tasks, rows exactly once") {
     val path = writeBig(5000)
-    val keys = Seq("spark.sql.files.maxPartitionBytes",
-      "spark.sql.files.openCostInBytes")
-    val keep = keys.map(k => k -> spark.conf.getOption(k))
+    val key = "spark.sql.files.maxPartitionBytes"
+    val keep = spark.conf.getOption(key)
     try {
-      keys.foreach(k => spark.conf.set(k, "16k"))
+      spark.conf.set(key, "16k")
       val df = spark.read.format("cdc-avro").load(path)
       assert(df.rdd.getNumPartitions > 1,
         "the batch scan must split the container")
       val ids = df.select("id").collect().map(_.getLong(0)).sorted
       assert(ids.toSeq == (1L to 5000L))
-    } finally keep.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
+    } finally keep.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("readGroup fans a single large container out over conf-sized splits " +
     "and converts every row exactly once") {
     val path = writeBig(5000)
-    val keys = Seq("spark.sql.files.maxPartitionBytes",
-      "spark.sql.files.openCostInBytes")
-    val keep = keys.map(k => k -> spark.conf.getOption(k))
+    val key = "spark.sql.files.maxPartitionBytes"
+    val keep = spark.conf.getOption(key)
     try {
-      keys.foreach(k => spark.conf.set(k, "16k"))
+      spark.conf.set(key, "16k")
       val (schemas, errs) =
         AvroCdcReader.schemaFingerprints(spark, Seq(path))
       assert(errs.isEmpty && schemas.size == 1)
@@ -82,9 +77,6 @@ class SplitReadSpec extends AnyFunSuite {
       assert(df.rdd.getNumPartitions > 1,
         "a large container must occupy more than one task")
       assert(acc.value.isEmpty)
-    } finally keep.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
+    } finally keep.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }

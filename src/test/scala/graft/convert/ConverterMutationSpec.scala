@@ -51,14 +51,10 @@ class ConverterMutationSpec extends AnyFunSuite {
   }
 
   private def withTinySplits[T](bytes: String)(f: => T): T = {
-    val keys = Seq("spark.sql.files.maxPartitionBytes",
-      "spark.sql.files.openCostInBytes")
-    val keep = keys.map(k => k -> spark.conf.getOption(k))
-    try { keys.foreach(spark.conf.set(_, bytes)); f }
-    finally keep.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
+    val key = "spark.sql.files.maxPartitionBytes"
+    val keep = spark.conf.getOption(key)
+    try { spark.conf.set(key, bytes); f }
+    finally keep.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   private def outIds(out: String): Seq[Long] = {
