@@ -2,8 +2,9 @@ package graft.convert
 
 import java.time.{LocalDate, ZoneOffset}
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.lit
 
 import graft.avro._
 import graft.io.LocalFs
@@ -47,19 +48,14 @@ object AvroToParquetJob {
         */
       columnFailures: Map[String, Seq[AvroCdcReader.ColumnFailure]] = Map.empty)
 
-  /** A source path's partition folder is group 1 of this pattern, else
-    * [[UnknownFolder]] (reference main.py:570-571); [[folderOf]] and
-    * [[runStreaming]] both apply it.
-    */
-  private val FolderPattern = "/avro/([^/]+)/"
-  private val FolderRegex = FolderPattern.r
-  private val UnknownFolder = "unknown"
+  private val FolderRegex = "/avro/([^/]+)/".r
 
-  /** The partition folder of `path`: per-FILE metadata, known before any
-    * task runs.
+  /** The partition folder of `path`: the segment after `/avro/`, else
+    * `unknown` (reference main.py:570-571). Per-FILE metadata, known
+    * before any task runs.
     */
   def folderOf(path: String): String =
-    FolderRegex.findFirstMatchIn(path).map(_.group(1)).getOrElse(UnknownFolder)
+    FolderRegex.findFirstMatchIn(path).map(_.group(1)).getOrElse("unknown")
 
   def discover(spark: SparkSession, inputPattern: String): Seq[String] =
     AvroCdcReader.listFiles(Seq(inputPattern), spark.sparkContext.hadoopConfiguration)
@@ -92,11 +88,18 @@ object AvroToParquetJob {
     val ledger = ledgerDir.map(d =>
       new FileLedger(d, spark.sparkContext.hadoopConfiguration, ledgerShards))
     val all = discover(spark, inputPattern)
-    // shard-filtered membership: only the shards this poll's discovery
-    // touches are read, one at a time — at millions of ledgered files the
-    // per-poll driver load is candidates + ONE shard's seen-set, not the
-    // full history Set (FileLedger.filterUnseen)
+    // one shard's seen-set in driver memory at a time (FileLedger.filterUnseen)
     val paths = ledger.map(_.filterUnseen(all)).getOrElse(all)
+    convertPaths(spark, paths, outputPrefix, mode, ledger, ingestionDate, audit)
+  }
+
+  /** [[runOnce]] after discovery, and each [[runStreaming]] batch: convert
+    * `paths`, which `ledger` has not seen, and ledger them as [[runOnce]]
+    * describes.
+    */
+  private[convert] def convertPaths(spark: SparkSession, paths: Seq[String],
+      outputPrefix: String, mode: ConvertMode, ledger: Option[FileLedger],
+      ingestionDate: Option[String], audit: Option[String => Unit]): ConvertReport = {
     if (paths.isEmpty) return ConvertReport(0, Nil, Nil, Nil)
 
     val date = ingestionDate.getOrElse(LocalDate.now(ZoneOffset.UTC).toString)
@@ -121,7 +124,7 @@ object AvroToParquetJob {
 
     // Phase 2: the units' write jobs, concurrently across folders; a unit
     // whose write did not commit has no result
-    val (done, failure) = perFolderConcurrently(spark, units)(_.folder)(
+    val (done, failure) = perFolderConcurrently(spark, units)(
       convertUnit(spark, _, mode, outputPrefix, date))
 
     // audit sink calls stay on the calling thread (a caller's sink need not
@@ -279,9 +282,9 @@ object AvroToParquetJob {
     * returned as an `InterruptedException` after the join, with the
     * thread's interrupt flag set again.
     */
-  private def perFolderConcurrently[U, R](spark: SparkSession, units: Seq[U])(
-      folder: U => String)(work: U => R): (IndexedSeq[Option[R]], Option[Throwable]) = {
-    val chains = units.indices.groupBy(i => folder(units(i))).values.toSeq.sortBy(_.head)
+  private def perFolderConcurrently[R](spark: SparkSession, units: Seq[WriteUnit])(
+      work: WriteUnit => R): (IndexedSeq[Option[R]], Option[Throwable]) = {
+    val chains = units.indices.groupBy(units(_).folder).values.toSeq.sortBy(_.head)
     val results = Array.fill[Option[R]](units.size)(None)
     val failures = new java.util.concurrent.ConcurrentSkipListMap[Int, Throwable]
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -402,15 +405,12 @@ object AvroToParquetJob {
     * run_dataflow.py:121-143): finish the in-flight batch, then return.
     *
     * Discovery at 100× file count: `globStatus` is one driver-side listing
-    * per poll — at millions of landing-zone files, split the deployment by
-    * prefix (one `runContinuous` per source-folder glob, each with its own
-    * ledger dir), which bounds BOTH the listing and the ledger per worker;
-    * `ledgerShards` additionally caps per-POLL driver memory: membership
-    * runs through [[FileLedger.filterUnseen]], which reads only the shards
-    * this poll's candidates touch, ONE at a time, so the full seen-history
-    * Set is never resident (and compaction rewrites 1/n of history). The
-    * [[runStreaming]] path scales further still (incremental checkpoint
-    * log, no full listing diff).
+    * per poll (as is [[runStreaming]]'s file source per trigger) — at
+    * millions of landing-zone files, split the deployment by prefix (one
+    * `runContinuous` per source-folder glob, each with its own ledger dir),
+    * which bounds BOTH the listing and the ledger per worker;
+    * `ledgerShards` additionally caps per-POLL driver memory to one shard's
+    * seen-set ([[FileLedger.filterUnseen]]).
     *
     * Driver heap at production duration: Spark's AppStatusStore retains
     * job/stage/task wrappers and SQL-execution plan graphs up to its
@@ -448,69 +448,61 @@ object AvroToParquetJob {
     reports
   }
 
-  /** Structured Streaming mode: the same conversion as [[runContinuous]]
-    * driven by Spark's own micro-batch engine instead of the poll loop —
-    * `readStream.format("cdc-avro")` discovers newly appeared files per
-    * batch with offsets in the CHECKPOINT (restart-safe exactly-once
-    * discovery, no [[FileLedger]] needed), and `foreachBatch` reproduces
-    * the reference's `<prefix>/<folder>/ingestion_date=…/` layout.
+  /** Structured Streaming mode: each micro-batch's new files go through
+    * [[runOnce]]'s conversion ([[convertPaths]], Standard mode), so schemas
+    * are derived per batch and a failed file is reported while the stream
+    * moves on. The source is Spark's file source over PATHS (`binaryFile`,
+    * only `path` read): `inputPattern`'s directory part is the load path,
+    * its file part the `pathGlobFilter`, so a batch lists what [[discover]]
+    * lists; a path not seen before is new whatever its mtime; an offset is
+    * one index into the checkpoint's source log.
     *
-    * Trade-off vs [[runOnce]]: the flattened schema is derived once at
-    * stream START; a mid-stream writer-schema evolution needs a stream
-    * restart, where the poll loop re-derives per batch. Caller stops the
-    * query (`processAllAvailable()`/`awaitTermination`).
-    *
-    * Schema-drift policy (pinned by StreamingSpec): a file whose payload
-    * grows a NEW column mid-stream still converts — its known columns
-    * land typed, the new column is silently ABSENT (the reader projects
-    * to the pinned schema; the typed sink's schema never changes
-    * mid-stream, so downstream readers cannot be corrupted). A RESTART
-    * with `readerOptions = Map("mergeSchema" -> "true")` re-derives the
-    * schema name-merged across all landing-zone generations: the new
-    * column appears, old-generation files read null for it. Type
-    * CONFLICTS across generations merge to string (the catalog rule,
-    * `AvroCdcDataSource.mergeFlatSchemas`).
-    *
-    * Driver heap at production duration: same AppStatusStore retention
-    * note as [[runContinuous]] — bound the `spark.ui.retained*` /
-    * `spark.sql.ui.retainedExecutions` confs on a long-running stream.
+    * Spark replays an uncommitted batch under the same id, so each batch
+    * ledgers its committed write units in a [[FileLedger]] at
+    * `<checkpointDir>/graft_batches/<batchId>` and a replay converts only
+    * the rest; each batch deletes its predecessor's ledger, which Spark
+    * has committed. Each batch logs its [[ConvertReport]] through the class
+    * logger (WARN when a file failed). The query runs on
+    * [[graft.streaming.CheckpointTuning.streamSession]], listed in that
+    * session's `streams`; the caller drives it through the returned handle.
+    * Bound the driver's UI retention as [[runContinuous]] describes.
     */
   def runStreaming(
       spark: SparkSession,
       inputPattern: String,
       outputPrefix: String,
       checkpointDir: String,
-      ingestionDate: Option[String] = None,
-      readerOptions: Map[String, String] = Map.empty)
+      ingestionDate: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    // checkpoint-I/O defaults for the production stream (checksum
-    // sidecars off unless the deployment pinned them in the SparkConf —
-    // see CheckpointTuning; the bench session sets the same conf, so the
-    // shipped path and the measured path now agree)
-    graft.streaming.CheckpointTuning.applyStreamingDefaults(spark)
-    val pathCol = graft.sources.AvroCdcDataSource.InputPathCol
-    val folder = regexp_extract(col(pathCol), FolderPattern, 1)
-    val folderCol = when(folder === "", UnknownFolder).otherwise(folder)
-    val writer = spark.readStream.format("cdc-avro").options(readerOptions).load(inputPattern)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val cut = inputPattern.lastIndexOf('/')
+    val batches = new Path(checkpointDir, "graft_batches")
+    val session = graft.streaming.CheckpointTuning.streamSession(spark)
+    // the source lists a batch's files again to plan its scan, in a Spark
+    // job of one task per file (past 32 files): one task per core instead
+    session.conf.set("spark.sql.sources.parallelPartitionDiscovery.parallelism",
+      spark.sparkContext.defaultParallelism.toString)
+    val writer = session.readStream.format("binaryFile")
+      .schema("path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
+      .option("pathGlobFilter", inputPattern.substring(cut + 1))
+      // no limit: by default the source skips a file 7 days older than
+      // the newest one seen, however late it lands
+      .option("maxFileAge", s"${Long.MaxValue}ms")
+      .load(inputPattern.substring(0, cut))
+      .select("path")
       .writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val tagged = batch.withColumn("__folder", folderCol).persist()
-          try {
-            val date = ingestionDate.getOrElse(
-              LocalDate.now(ZoneOffset.UTC).toString)
-            val folders = tagged.select(col("__folder")).distinct()
-              .collect().map(_.getString(0)).toSeq
-            // distinct folders are distinct output dirs: their writes overlap
-            perFolderConcurrently(spark, folders)(identity) { folder =>
-              write(tagged.filter(col("__folder") === folder)
-                .drop("__folder", pathCol), outputPrefix, folder, date)
-            }._2.foreach(e => throw e)
-          } finally { tagged.unpersist(); () }
-        }
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        batches.getFileSystem(LocalFs.configured(conf))
+          .delete(new Path(batches, (batchId - 1).toString), true)
+        val ledger = new FileLedger(new Path(batches, batchId.toString).toString, conf)
+        val paths = batch.collect().map(_.getString(0)).toSeq.sorted
+        val report = convertPaths(batch.sparkSession, ledger.filterUnseen(paths),
+          outputPrefix, ConvertMode.Standard, Some(ledger), ingestionDate, audit = None)
+        if (report.failed.isEmpty) log.info(s"runStreaming batch $batchId: $report")
+        else log.warn(s"runStreaming batch $batchId: $report")
       }
-    LocalFs.aroundStart(spark)(writer.start())
+    writer.start()
   }
 
   /** `30m` / `1h` / `2d` → seconds (reference main.py:242-246). */

@@ -26,10 +26,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * ~100 bytes/path, 10M processed files ≈ 1 GB of driver heap: fine for
   * the CDC landing-zone cadence this job targets (thousands of files/day
   * for years), and the ceiling is file COUNT, not data volume — 100 TB in
-  * large Avro containers is millions of paths, not billions. Past that,
-  * the [[AvroToParquetJob.runStreaming]] path already scales further (its
-  * checkpoint log is read incrementally), so the ledger deliberately stays
-  * simple rather than re-implementing a partitioned state store.
+  * large Avro containers is millions of paths, not billions, and
+  * [[AvroToParquetJob.runStreaming]]'s file source keeps its seen paths on
+  * the driver too, so the ledger deliberately stays simple rather than
+  * re-implementing a partitioned state store.
   *
   * 100×-file-count story — HASH-PREFIX SHARDS: `shards = N` routes each
   * path to `shard-NN/` by a stable hash (`String.hashCode` is specified by

@@ -9,6 +9,8 @@ import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsSer
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Hadoop's `RawLocalFileSystem` without a process per call. Without
   * libhadoop, the stock class forks `chmod` for every file create and
@@ -101,16 +103,20 @@ object LocalFs {
   }
 
   /** Run `start` (a `writeStream.start()`) with [[options]] set as SQL
-    * confs, then restore the session's previous values. The stream clones
-    * the session conf at start, so its offset log, commit log and state
-    * stores keep the entries while the caller's session ends unchanged.
+    * confs until the stream has created its sources (a file source makes
+    * its log on the stream thread, from the reading session's conf), then
+    * restore the session's previous values. The stream clones the session
+    * conf at start, so its logs and state stores keep the entries while the
+    * caller's session ends unchanged.
     */
-  def aroundStart[T](spark: SparkSession)(start: => T): T = {
+  def aroundStart(spark: SparkSession)(start: => StreamingQuery): StreamingQuery = {
     val set = options(spark)
     val saved = set.keys.map(k => k -> spark.conf.getOption(k))
     try {
       set.foreach { case (k, v) => spark.conf.set(k, v) }
-      start
+      val q = start
+      q.asInstanceOf[StreamingQueryWrapper].streamingQuery.awaitInitialization(Long.MaxValue)
+      q
     } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 

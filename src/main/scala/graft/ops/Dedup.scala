@@ -311,11 +311,9 @@ object Dedup {
   def runStreamingDedup(spark: SparkSession, inputDir: String,
       schema: org.apache.spark.sql.types.StructType, indexDir: String,
       pairsDir: String, checkpointDir: String): Unit = {
-    // production streaming entry point: apply the checkpoint-I/O
-    // defaults (checksum sidecars off unless pinned in the SparkConf —
-    // graft.streaming.CheckpointTuning)
-    graft.streaming.CheckpointTuning.applyStreamingDefaults(spark)
-    val writer = spark.readStream.schema(schema).parquet(inputDir)
+    // a production streaming entry point: see CheckpointTuning
+    val writer = graft.streaming.CheckpointTuning.streamSession(spark)
+      .readStream.schema(schema).parquet(inputDir)
       .writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
@@ -326,7 +324,7 @@ object Dedup {
         writeSignatures(newSh, s"$indexDir/batch=$id", "overwrite")
         ()
       }
-    graft.io.LocalFs.aroundStart(spark)(writer.start()).awaitTermination()
+    writer.start().awaitTermination()
   }
 
   private def incrementalFrom(oldBanded: DataFrame, oldSh: DataFrame,

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.GraftQuery
 import graft.io.LocalFs
@@ -50,8 +50,8 @@ object EventStreaming {
     * under [[LocalFs.aroundStart]], so its checkpoint I/O spawns no
     * process.
     */
-  private[ops] def startTrimmedStream[T](spark: SparkSession,
-      parts: Option[String])(start: => T): T = {
+  private[ops] def startTrimmedStream(spark: SparkSession,
+      parts: Option[String])(start: => StreamingQuery): StreamingQuery = {
     val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     val prevNd = spark.conf.get(ndKey, "true")

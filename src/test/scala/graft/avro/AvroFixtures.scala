@@ -25,6 +25,20 @@ object AvroFixtures {
     finally writer.close()
   }
 
+  /** [[writeAvro]] into a hidden sibling, renamed into place when whole, so
+    * a running stream that lists the directory never sees half a file.
+    * `mtime`, when set, is the file's modification time in epoch millis.
+    */
+  def landAvro(path: String, schemaJson: String, rows: Seq[Map[String, Any]],
+      mtime: Option[Long] = None): Unit = {
+    val target = new File(path)
+    val tmp = new File(target.getParentFile, s".${target.getName}.tmp")
+    writeAvro(tmp.getPath, schemaJson, rows)
+    mtime.foreach(t => require(tmp.setLastModified(t), s"cannot set mtime of $tmp"))
+    java.nio.file.Files.move(tmp.toPath, target.toPath,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
   /** Build a GenericRecord from a Scala map, resolving unions to the first
     * branch compatible with the value.
     */

@@ -669,18 +669,19 @@ class AvroToParquetJobSpec extends AnyFunSuite {
     AvroFixtures.writeAvro(s"$in/avro/orders/b.avro",
       AvroFixtures.BasicEnvelope, Seq(rec("orders", 10L)))
 
-    def idsUnder(folder: String): Set[Long] =
+    // sorted lists, not sets: a file converted twice shows as duplicates
+    def idsUnder(folder: String): Seq[Long] =
       spark.read
         .parquet(s"$out/$folder/ingestion_date=2024-06-01")
-        .collect().map(_.getAs[Long]("id")).toSet
+        .collect().map(_.getAs[Long]("id")).toSeq.sorted
 
     val q1 = AvroToParquetJob.runStreaming(spark, s"$in/avro/*/*.avro", out,
       ckpt, ingestionDate = Some("2024-06-01"))
     try {
       q1.processAllAvailable()
       // reference layout: plain <folder> segment + hive ingestion_date
-      assert(idsUnder("users") == Set(1L, 2L))
-      assert(idsUnder("orders") == Set(10L))
+      assert(idsUnder("users") == Seq(1L, 2L))
+      assert(idsUnder("orders") == Seq(10L))
     } finally q1.stop()
 
     // restart from the same checkpoint: old files are NOT reconverted,
@@ -691,9 +692,47 @@ class AvroToParquetJobSpec extends AnyFunSuite {
       ckpt, ingestionDate = Some("2024-06-01"))
     try {
       q2.processAllAvailable()
-      assert(idsUnder("users") == Set(1L, 2L, 3L)) // no duplicates of 1,2
-      assert(idsUnder("orders") == Set(10L))
+      assert(idsUnder("users") == Seq(1L, 2L, 3L)) // no duplicates of 1,2
+      assert(idsUnder("orders") == Seq(10L))
     } finally q2.stop()
+  }
+
+  test("runStreaming: a batch replayed after one folder's write failed " +
+    "converts only the uncommitted folder, so no row lands twice") {
+    val in = tmpDir("graft-in-replay")
+    val out = tmpDir("graft-out-replay")
+    val ckpt = tmpDir("graft-ck-replay")
+    def rec(folder: String, id: Long) = Map(
+      "uuid" -> s"u$id", "read_timestamp" -> 0L,
+      "source_metadata" -> AvroFixtures.sm(folder, txId = id),
+      "payload" -> Map("id" -> id, "name" -> s"n$id"))
+    val expected = Map("f1" -> (1L to 10L), "f2" -> (101L to 110L))
+    expected.foreach { case (folder, ids) =>
+      AvroFixtures.writeAvro(s"$in/avro/$folder/a.avro",
+        AvroFixtures.BasicEnvelope, ids.map(rec(folder, _)))
+    }
+    def idsIn(folder: String): Seq[Long] =
+      spark.read.parquet(s"$out/$folder").select("id")
+        .collect().map(_.getLong(0)).toSeq.sorted
+    def run(): Unit = {
+      val q = AvroToParquetJob.runStreaming(spark, s"$in/avro/*/*.avro", out,
+        ckpt, ingestionDate = Some("2024-06-01"))
+      try q.processAllAvailable() finally q.stop()
+    }
+    // a regular file where the f2 output folder should be: batch 0 fails
+    // after f1's write unit committed, so Spark replays it on restart
+    assert(new File(s"$out/f2").createNewFile())
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](run())
+    assert(idsIn("f1") == expected("f1"), "f1 committed before the failure")
+    assert(new File(s"$out/f2").delete())
+    run()
+    expected.foreach { case (folder, ids) => assert(idsIn(folder) == ids, folder) }
+    // the replayed batch committed: its ledger goes when the next batch runs
+    AvroFixtures.writeAvro(s"$in/avro/f1/b.avro", AvroFixtures.BasicEnvelope,
+      Seq(rec("f1", 11L)))
+    run()
+    assert(idsIn("f1") == (1L to 11L))
+    assert(new File(s"$ckpt/graft_batches").list().toSeq == Seq("1"))
   }
 
   test("ledger layout migration: flat history reopened sharded (and back) " +

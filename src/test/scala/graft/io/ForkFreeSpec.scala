@@ -11,7 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.{SparkEntry, SparkTestSession}
 import graft.avro.AvroFixtures
 import graft.convert.AvroToParquetJob
-import graft.streaming.CheckpointTuning
 
 /** The engine's local writes spawn no `chmod`, `readlink`, `ls` or `stat`
   * process (counted with JFR's `jdk.ProcessStart` events), and leave the
@@ -88,7 +87,7 @@ class ForkFreeSpec extends AnyFunSuite {
     val in = tmpDir("graft-forkfree-sin"); val out = tmpDir("graft-forkfree-sout")
     val (clean, hard) = landingZone(in)
     Files.delete(java.nio.file.Paths.get(hard))
-    val before = conf - CheckpointTuning.FileChecksumKey
+    val before = conf
     val (_, seen) = forks {
       val q = AvroToParquetJob.runStreaming(spark, s"$in/avro/*/*.avro", out,
         s"$out/_ckpt", ingestionDate = Some("2024-06-01"))
@@ -97,7 +96,7 @@ class ForkFreeSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$out/t").select("id").collect().map(_.getLong(0)).toSeq ==
       Seq(1L), clean)
     assert(seen.isEmpty, s"process starts: $seen")
-    assert(conf - CheckpointTuning.FileChecksumKey == before)
+    assert(conf == before)
   }
 
   test("q_stream_join at sf0.001 starts no chmod/readlink/ls/stat and " +
@@ -108,6 +107,23 @@ class ForkFreeSpec extends AnyFunSuite {
     val before = conf
     val (rows, seen) = forks(run(spark, dir).collect())
     assert(rows.nonEmpty)
+    assert(seen.isEmpty, s"process starts: $seen")
+    assert(conf == before)
+  }
+
+  test("a file-source stream started under LocalFs.aroundStart creates its " +
+    "source log fork-free and leaves the session conf unchanged") {
+    val in = tmpDir("graft-forkfree-fsrc")
+    spark.range(3).write.mode("overwrite").parquet(s"$in/data")
+    val before = conf
+    val (_, seen) = forks {
+      val q = LocalFs.aroundStart(spark) {
+        spark.readStream.schema("id LONG").parquet(s"$in/data").writeStream
+          .format("noop").option("checkpointLocation", s"$in/_ckpt").start()
+      }
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(new java.io.File(s"$in/_ckpt/sources/0").isDirectory)
     assert(seen.isEmpty, s"process starts: $seen")
     assert(conf == before)
   }

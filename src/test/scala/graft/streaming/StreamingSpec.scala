@@ -207,120 +207,85 @@ class StreamingSpec extends AnyFunSuite {
       "payload" -> (Map("id" -> id, "name" -> name) ++
         extra.map("extra" -> _)))
 
-  test("mid-stream schema drift: a NEW payload column arriving after " +
-    "stream start is projected away (typed sink never corrupted); a " +
-    "mergeSchema restart picks it up with nulls for old generations") {
-    import graft.avro.AvroFixtures
-    def envelope(withExtra: Boolean): String = driftEnvelope(withExtra)
-    def row(id: Long, name: String, extra: Option[String]): Map[String, Any] =
-      driftRow(id, name, extra)
+  /** (id, name, extra) of every row under `dir`, read name-merged across
+    * the generations' Parquet files, sorted by id.
+    */
+  private def driftRows(dir: String): Seq[(Long, String, Option[String])] =
+    spark.read.option("mergeSchema", "true").parquet(dir)
+      .select("id", "name", "extra").collect()
+      .map(r => (r.getLong(0), r.getString(1), Option(r.getString(2))))
+      .toSeq.sortBy(_._1)
 
+  test("mid-stream schema drift: a NEW payload column arriving after " +
+    "stream start lands typed in the same stream; old rows read null " +
+    "under mergeSchema") {
+    import graft.avro.AvroFixtures
     val root = java.nio.file.Files.createTempDirectory("graft-drift")
       .toFile.getAbsolutePath
     val glob = s"$root/landing/avro/*/*.avro"
     AvroFixtures.writeAvro(s"$root/landing/avro/t/a.avro",
-      envelope(withExtra = false), Seq(row(1L, "one", None)))
-
-    // phase 1: stream starts on generation A, generation B (new `extra`
-    // column) arrives MID-STREAM
-    val q1 = graft.convert.AvroToParquetJob.runStreaming(spark, glob,
-      s"$root/out1", s"$root/ckpt1", ingestionDate = Some("2024-01-01"))
-    try {
-      q1.processAllAvailable()
-      AvroFixtures.writeAvro(s"$root/landing/avro/t/b.avro",
-        envelope(withExtra = true), Seq(row(2L, "two", Some("X"))))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    val out1 = spark.read.parquet(s"$root/out1/t")
-    assert(!out1.columns.contains("extra"),
-      "pinned schema must project the drifted column away, not widen the sink")
-    assert(out1.select("id", "name").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSet ==
-      Set((1L, "one"), (2L, "two")),
-      "the drifted file's KNOWN columns must still convert")
-
-    // phase 2: restart with mergeSchema — the landing zone's generations
-    // name-merge, the new column appears, old files read null
-    val q2 = graft.convert.AvroToParquetJob.runStreaming(spark, glob,
-      s"$root/out2", s"$root/ckpt2", ingestionDate = Some("2024-01-01"),
-      readerOptions = Map("mergeSchema" -> "true"))
-    try q2.processAllAvailable()
-    finally q2.stop()
-    val out2 = spark.read.parquet(s"$root/out2/t")
-    assert(out2.columns.contains("extra"))
-    assert(out2.select("id", "extra").collect()
-      .map(r => (r.getLong(0), Option(r.getString(1)))).toSet ==
-      Set((1L, None), (2L, Some("X"))))
-  }
-
-  test("generation boundary, pinned → merged: a SAME-CHECKPOINT restart " +
-    "with mergeSchema picks up the new generation's column, processes " +
-    "only the new file (exactly-once across the restart)") {
-    import graft.avro.AvroFixtures
-    val root = java.nio.file.Files.createTempDirectory("graft-gen-pm")
-      .toFile.getAbsolutePath
-    val glob = s"$root/landing/avro/*/*.avro"
-    AvroFixtures.writeAvro(s"$root/landing/avro/t/a.avro",
       driftEnvelope(withExtra = false), Seq(driftRow(1L, "one", None)))
 
-    val q1 = graft.convert.AvroToParquetJob.runStreaming(spark, glob,
+    // the stream starts on generation A; generation B (new `extra`
+    // column) arrives MID-STREAM and gets its own schema in its batch
+    val q = graft.convert.AvroToParquetJob.runStreaming(spark, glob,
       s"$root/out", s"$root/ckpt", ingestionDate = Some("2024-01-01"))
-    try q1.processAllAvailable() finally q1.stop()
-
-    // generation B lands while the stream is DOWN; restart reuses the
-    // checkpoint but resolves the merged schema
-    AvroFixtures.writeAvro(s"$root/landing/avro/t/b.avro",
-      driftEnvelope(withExtra = true), Seq(driftRow(2L, "two", Some("X"))))
-    val q2 = graft.convert.AvroToParquetJob.runStreaming(spark, glob,
-      s"$root/out", s"$root/ckpt", ingestionDate = Some("2024-01-01"),
-      readerOptions = Map("mergeSchema" -> "true"))
-    try q2.processAllAvailable() finally q2.stop()
-
-    val out = spark.read.option("mergeSchema", "true")
-      .parquet(s"$root/out/t")
-    val rows = out.select("id", "name", "extra").collect()
-      .map(r => (r.getLong(0), r.getString(1), Option(r.getString(2))))
-    assert(rows.sortBy(_._1).toSeq ==
-      Seq((1L, "one", None), (2L, "two", Some("X"))),
-      s"checkpoint must skip a.avro and the restart must widen: ${rows.toSeq}")
+    try {
+      q.processAllAvailable()
+      AvroFixtures.landAvro(s"$root/landing/avro/t/b.avro",
+        driftEnvelope(withExtra = true), Seq(driftRow(2L, "two", Some("X"))))
+      q.processAllAvailable()
+    } finally q.stop()
+    val merged = spark.read.option("mergeSchema", "true").parquet(s"$root/out/t")
+    assert(merged.schema("extra").dataType == org.apache.spark.sql.types.StringType)
+    assert(driftRows(s"$root/out/t") ==
+      Seq((1L, "one", None), (2L, "two", Some("X"))))
   }
 
-  test("generation boundary, merged → pinned: a SAME-CHECKPOINT restart " +
-    "without mergeSchema pins to the first generation and still converts " +
-    "a late old-generation file exactly once") {
+  /** One `runStreaming` start on `root`'s landing zone and checkpoint,
+    * run until it has converted what is there, then stopped.
+    */
+  private def runGeneration(root: String): Unit = {
+    val q = graft.convert.AvroToParquetJob.runStreaming(spark,
+      s"$root/landing/avro/*/*.avro", s"$root/out", s"$root/ckpt",
+      ingestionDate = Some("2024-01-01"))
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  test("generation boundary, A → B: a same-checkpoint restart after a new " +
+    "generation lands converts only the new file, typed with its new column") {
     import graft.avro.AvroFixtures
-    val root = java.nio.file.Files.createTempDirectory("graft-gen-mp")
+    val root = java.nio.file.Files.createTempDirectory("graft-gen-ab")
       .toFile.getAbsolutePath
-    val glob = s"$root/landing/avro/*/*.avro"
+    AvroFixtures.writeAvro(s"$root/landing/avro/t/a.avro",
+      driftEnvelope(withExtra = false), Seq(driftRow(1L, "one", None)))
+    runGeneration(root)
+    // generation B lands while the stream is down
+    AvroFixtures.writeAvro(s"$root/landing/avro/t/b.avro",
+      driftEnvelope(withExtra = true), Seq(driftRow(2L, "two", Some("X"))))
+    runGeneration(root)
+    assert(driftRows(s"$root/out/t") ==
+      Seq((1L, "one", None), (2L, "two", Some("X"))))
+  }
+
+  test("generation boundary, A + B → late A: a same-checkpoint restart " +
+    "converts a late old-generation file exactly once, its new column null") {
+    import graft.avro.AvroFixtures
+    val root = java.nio.file.Files.createTempDirectory("graft-gen-aba")
+      .toFile.getAbsolutePath
+    // the first batch holds both generations
     AvroFixtures.writeAvro(s"$root/landing/avro/t/a.avro",
       driftEnvelope(withExtra = false), Seq(driftRow(1L, "one", None)))
     AvroFixtures.writeAvro(s"$root/landing/avro/t/b.avro",
       driftEnvelope(withExtra = true), Seq(driftRow(2L, "two", Some("X"))))
-
-    val q1 = graft.convert.AvroToParquetJob.runStreaming(spark, glob,
-      s"$root/out", s"$root/ckpt", ingestionDate = Some("2024-01-01"),
-      readerOptions = Map("mergeSchema" -> "true"))
-    try q1.processAllAvailable() finally q1.stop()
-
+    runGeneration(root)
     // an OLD-generation writer is still alive and lands c.avro while the
-    // stream is down; the restart drops mergeSchema (pins to the first
-    // file's generation) — the late file's known columns must convert,
-    // previously-seen files must not reprocess
+    // stream is down
     AvroFixtures.writeAvro(s"$root/landing/avro/t/c.avro",
       driftEnvelope(withExtra = false), Seq(driftRow(3L, "three", None)))
-    val q2 = graft.convert.AvroToParquetJob.runStreaming(spark, glob,
-      s"$root/out", s"$root/ckpt", ingestionDate = Some("2024-01-01"))
-    try q2.processAllAvailable() finally q2.stop()
-
-    val out = spark.read.option("mergeSchema", "true")
-      .parquet(s"$root/out/t")
-    val ids = out.select("id").collect().map(_.getLong(0)).sorted
-    assert(ids.toSeq == Seq(1L, 2L, 3L),
-      s"each file exactly once across both restarts: ${ids.toSeq}")
-    val extras = out.select("id", "extra").collect()
-      .map(r => (r.getLong(0), Option(r.getString(1)))).toMap
-    assert(extras(2L) == Some("X") && extras(1L).isEmpty && extras(3L).isEmpty,
-      s"merged-era rows keep extra, pinned-era rows read null: $extras")
+    runGeneration(root)
+    assert(driftRows(s"$root/out/t") ==
+      Seq((1L, "one", None), (2L, "two", Some("X")), (3L, "three", None)))
   }
 
   test("flatMapGroupsWithState sessionization equals batch session_window " +
@@ -337,48 +302,68 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  /** The checkpoint checksum sidecars a stateful stream leaves in its
+    * checkpoint after its second batch, when it is built and started on
+    * `session(spark)` while `spark` sets the checksum key to `true`.
+    */
+  private def checksumSidecars(name: String)(
+      session: org.apache.spark.sql.SparkSession => org.apache.spark.sql.SparkSession)
+      : Seq[String] = {
+    val key = CheckpointTuning.FileChecksumKey
+    val dir = java.nio.file.Files.createTempDirectory("graft-cksum").toFile
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "true") // runtime set (not a SparkConf pin)
+    val streamSession = try session(spark)
+      finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    implicit val sqlCtx = streamSession.sqlContext
+    import streamSession.implicits._
+    val input = MemoryStream[Int]
+    val q = input.toDF().groupBy("value").count().writeStream
+      .outputMode(OutputMode.Complete()).format("memory").queryName(name)
+      .option("checkpointLocation", dir.getPath)
+      .start()
+    try {
+      input.addData(1, 2)
+      q.processAllAvailable()
+      input.addData(2, 3)
+      q.processAllAvailable()
+    } finally q.stop()
+    def files(f: java.io.File): Seq[String] =
+      if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(files)
+      else Seq(f.getName)
+    // Spark's sidecar is `<file>.crc` beside its file; Hadoop's local
+    // checksums are hidden `.<file>.crc` files
+    files(dir).filter(n => n.endsWith(".crc") && !n.startsWith("."))
+  }
+
   test("CheckpointTuning: checksum sidecars off by default on production " +
     "entry points, SparkConf pin respected") {
-    val key = CheckpointTuning.FileChecksumKey
     // a deployment that pinned the conf in the SparkConf is never overridden
-    val pinned = new org.apache.spark.SparkConf().set(key, "true")
+    val pinned = new org.apache.spark.SparkConf().set(CheckpointTuning.FileChecksumKey, "true")
     assert(CheckpointTuning.pinnedInSubmitConf(pinned))
     assert(!CheckpointTuning.pinnedInSubmitConf(new org.apache.spark.SparkConf()))
-    // the shared test session carries no SparkConf pin → the entry-point
-    // helper applies the engine default (off); restore afterwards
-    val prev = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "true") // runtime set (not a SparkConf pin)
-      CheckpointTuning.applyStreamingDefaults(spark)
-      assert(spark.conf.get(key) == "false",
-        "entry points apply the checksum-off default when the deployment " +
-          "expressed no SparkConf preference")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    // the shared test session carries no SparkConf pin: a stream on the
+    // session the entry points build theirs on writes no sidecars, although
+    // the caller's session asks for them; on the caller's session, it does
+    assert(checksumSidecars("ck_plain")(identity).nonEmpty)
+    val sidecars = checksumSidecars("ck_tuned")(CheckpointTuning.streamSession(_))
+    assert(sidecars.isEmpty, s"$sidecars")
   }
 
   test("CheckpointTuning: a replaced runtime checksum setting is reported") {
     val key = CheckpointTuning.FileChecksumKey
+    val (_, warned) = graft.LogCapture.messages(CheckpointTuning) {
+      checksumSidecars("ck_warn")(CheckpointTuning.streamSession(_))
+    }
+    // the operator's runtime value was replaced for the stream: reported
+    assert(warned.size == 1 && warned.head.contains(s"$key=true"), s"$warned")
+    // already off: nothing is overridden, nothing reported
     val prev = spark.conf.getOption(key)
     try {
-      spark.conf.set(key, "true") // runtime set (not a SparkConf pin)
-      val warned = scala.collection.mutable.ArrayBuffer[String]()
-      CheckpointTuning.applyStreamingDefaults(spark, warned += _)
-      assert(spark.conf.get(key) == "false")
-      // the operator's runtime value was replaced: that is reported
-      assert(warned.size == 1 && warned.head.contains(s"$key=true"), s"$warned")
-      // already off: nothing is overridden, nothing reported
-      CheckpointTuning.applyStreamingDefaults(spark, warned += _)
-      assert(warned.size == 1, s"$warned")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+      spark.conf.set(key, "false")
+      val quiet = scala.collection.mutable.ArrayBuffer[String]()
+      CheckpointTuning.streamSession(spark, quiet += _)
+      assert(quiet.isEmpty, s"$quiet")
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }
